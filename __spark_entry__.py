@@ -171,6 +171,24 @@ _TOUCHED: dict[str, int] = {
     "analytic_weighted_median_selection": 14,
     "analytic_group_weighted_median": 14,
     "analytic_group_weighted_tail": 14,
+    # r14 paths missing from this dict at the round-14 close (VERDICT r14
+    # #2): the logreg label count folded into the first gradient job,
+    # and the winnowing / BPE / MMR operators' eager materializations
+    # made lazy:
+    "classifier_quality_logreg": 14,
+    "dedup_winnowing_pairs": 14,
+    "text_bpe_encode": 14,
+    "text_bpe_merges": 14,
+    "similarity_mmr_topk": 14,
+    # r15: the four exact-selection kernels folded into one engine (one
+    # refinement loop, one driver walk, one frac→rank rule; NaN group
+    # keys kept as one group on every path):
+    "analytic_median_selection": 15,
+    "analytic_group_median_selection": 15,
+    "analytic_robust_scale": 15,
+    "analytic_weighted_median_selection": 15,
+    "analytic_group_weighted_median": 15,
+    "analytic_group_weighted_tail": 15,
 }
 
 

@@ -1068,7 +1068,7 @@ def tfidf_cosine_pairs(
         # dense_max_cells rows).
         probe_cap = min(
             dense_max_cells,
-            int(os.environ.get("INDICATORS_TFIDF_PROBE_CELLS", 2_000_000)),
+            int(os.environ.get("SPARK_GRAFT_TFIDF_PROBE_CELLS", 2_000_000)),
         )
         pdf = wn.limit(probe_cap + 1).toPandas()
         if len(pdf) > probe_cap and probe_cap < dense_max_cells:

@@ -35,9 +35,14 @@ tests/test_scale.py.
 from __future__ import annotations
 
 import os
+from collections import defaultdict
 from collections.abc import Sequence
+from dataclasses import dataclass
+from fractions import Fraction
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -1170,42 +1175,33 @@ def weighted_quantiles(
     return resolved.groupBy(F.col("_g").alias(group)).agg(*aggs)
 
 
-#: Selection-kernel residue fast path: when the resolved interval is
-#: KNOWN (from the kernel's exact row bookkeeping) to hold at most this
-#: many rows, the per-value counts are collected and the exact
-#: cumulative walk runs on the driver — ONE job instead of the
-#: agg → global-window → limit chain (three sequential AQE stages whose
-#: scheduling latency dominates the residue at any scale, since by
-#: construction the residue data is small).  Driver state is bounded by
-#: this many (value, weight) pairs (≈1 MB at the default); larger
-#: residues keep the in-Spark prefix sum.  Env-overridable for hosts
-#: with tighter driver memory.
-RESIDUE_DRIVER_MAX_ROWS = int(
-    os.environ.get("SPARK_GRAFT_RESIDUE_DRIVER_ROWS", str(1 << 16))
-)
-
-#: Complete-value-table fast path (VERDICT r13 #7): when a selection
-#: kernel KNOWS (from its exact stats pass: distinct values ≤ rows = n)
-#: or SPECULATES (plan-size gate below) that the input's per-value
-#: weight table fits on the driver, ONE Arrow collect of that table
-#: answers every requested rank with the same exact cumulative walk the
-#: residue already uses — replacing every histogram round and residue
-#: pass.  Rows here are distinct (group, value) pairs; 1M pairs ≈ 24 MB
-#: through Arrow.  Env-overridable for tight-driver hosts (0 disables).
+#: Complete-value-table bound of the exact-selection engine: when the
+#: live intervals are KNOWN (exact row bookkeeping: distinct values ≤
+#: rows) or SPECULATED (plan-size gate below) to hold at most this many
+#: (group, value) pairs, ONE Arrow collect of their per-value weight
+#: table answers every rank with the driver walk — replacing every
+#: further histogram round and the in-Spark residue (whose agg →
+#: global-window chain runs three sequential AQE stages).  1M pairs
+#: ≈ 24 MB through Arrow.  Env-overridable for tight-driver hosts
+#: (0 disables).
 DRIVER_TABLE_MAX_ROWS = int(
     os.environ.get("SPARK_GRAFT_DRIVER_TABLE_ROWS", str(1 << 20))
 )
 
 #: Speculative pre-stats gate: optimizer size estimate below which the
-#: kernels try the value-table collect BEFORE their stats pass, saving
+#: engine tries the value-table collect BEFORE its stats pass, saving
 #: that job too (2 jobs → 1 for small inputs).  A miss — the capped
 #: collect saturates — wastes one bounded job, so the gate is
 #: deliberately small; at 100 TB the estimate is TB-sized and the
-#: kernels never speculate (the classic stats-then-refine flow is
-#: untouched there).
+#: engine never speculates (the stats-then-refine flow is untouched
+#: there).  The gate changes cost only: every path feeds the same
+#: stats and the same driver walk.
 SPECULATIVE_TABLE_MAX_BYTES = int(
     os.environ.get("SPARK_GRAFT_SPECULATIVE_BYTES", str(64 << 20))
 )
+
+_NAN = float("nan")
+_NO_ROWS = (np.empty(0), np.empty(0, dtype="int64"), 0, None)
 
 
 def _plan_size_bytes(df: DataFrame) -> int:
@@ -1219,15 +1215,59 @@ def _plan_size_bytes(df: DataFrame) -> int:
         return 1 << 62
 
 
-def _collect_value_table(vals: DataFrame, grouped: bool, cap: int | None):
+def _gkey(g):
+    """Group key as a plain Python scalar, with every NaN mapped to ONE
+    object: Spark's groupBy and join keep NaN as one group, but two
+    fresh NaN floats never meet in a dict lookup."""
+    if isinstance(g, np.generic):
+        g = g.item()
+    return _NAN if g != g else g
+
+
+def _frac_rank(frac: float, total: int) -> int:
+    """THE frac→rank rule of every selection kernel:
+    ``max(1, ceil(frac·total))`` in exact INTEGER arithmetic.  A float
+    multiply drifts at boundaries (0.9·30 = 27.000000000000004 → ceil
+    28, while the oracle's (9n+9)//10 says 27); ``limit_denominator``
+    recovers the intended short decimal (0.9 → 9/10) exactly."""
+    fr = Fraction(frac).limit_denominator(1_000_000)
+    return max(1, -((-fr.numerator * int(total)) // fr.denominator))
+
+
+@dataclass(eq=False)
+class _Segment:
+    """One group's live interval ``[lo, hi]``: ``below`` is the exact
+    weight of the group's rows left of ``lo``, ``n`` the exact row count
+    inside (``None`` once a defensive route loses it), ``targets`` the
+    ``(key, weight rank)`` pairs that resolved into the interval,
+    ascending by rank."""
+
+    g: object
+    lo: float
+    hi: float
+    below: int
+    n: int | None
+    targets: list
+    done: bool = False
+
+
+def _rows(segs) -> float:
+    """Exact row count of the segments (inf when one is unknown)."""
+    if any(s.n is None for s in segs):
+        return float("inf")
+    return sum(s.n for s in segs)
+
+
+def _collect_value_table(vals: DataFrame, cap: int | None):
     """The per-(group,) value weight table as ONE Arrow collect:
-    ``groupBy(value).agg(sum(w), count, min(w))`` — the complete,
-    order-free-exact input to the driver's cumulative walk.  With
+    ``groupBy(value).agg(sum(w), count, min(w))``, split on the driver
+    into ``{group: (ascending values, weight sums, rows, min weight)}``
+    — the complete, order-free-exact input to the driver walk.  With
     ``cap`` set the collect is bounded (``limit(cap+1)``) and returns
-    ``None`` when it saturates (speculation miss); without it the
-    caller has already proven the row bound from exact stats."""
-    keys = (["_g"] if grouped else []) + ["_v"]
-    agg = vals.groupBy(*keys).agg(
+    ``None`` when it saturates; without it the caller has already proven
+    the row bound from exact bookkeeping."""
+    grouped = "_g" in vals.columns
+    agg = vals.groupBy(*(["_g"] if grouped else []), "_v").agg(
         F.sum("_w").alias("_tw"),
         F.count(F.lit(1)).alias("_c"),
         F.min("_w").alias("_mw"),
@@ -1237,40 +1277,338 @@ def _collect_value_table(vals: DataFrame, grouped: bool, cap: int | None):
     pdf = (agg.limit(cap + 1) if cap is not None else agg).toPandas()
     if cap is not None and len(pdf) > cap:
         return None
-    return pdf
+    if grouped:
+        parts = pdf.groupby("_g", sort=False, dropna=False)
+    else:
+        parts = [(None, pdf)] if len(pdf) else []
+    table = {}
+    for g, sub in parts:
+        sub = sub.sort_values("_v", kind="mergesort")
+        table[_gkey(g)] = (
+            sub["_v"].to_numpy(dtype="float64"),
+            sub["_tw"].to_numpy(dtype="int64"),
+            int(sub["_c"].sum()),
+            int(sub["_mw"].min()),
+        )
+    return table
 
 
-def _table_walk(pdf, kk: int, err: str) -> float:
-    """Driver walk over a complete (already group-sliced) value table:
-    smallest value whose cumulative weight reaches ``kk`` — the numpy
-    twin of :func:`_residue_walk` (same total order: NaN-free doubles,
-    -0.0 normalized by the groupBy; same "first cum ≥ k" rule via
-    ``searchsorted(..., side='left')``; integral weights make the
-    cumulative sums exact and order-free)."""
-    import numpy as np
+def _in_segments(vals: DataFrame, segs: list, buckets: int) -> DataFrame:
+    """The rows of ``vals`` inside the segments' intervals, each tagged
+    with its segment's id ``_s``, interval ``_lo``/``_hi``, bucket width
+    ``_bw`` and in-segment rank targets ``_ts``: ONE scan filtered by the
+    pushable range envelope, joined to a broadcast segment table.  Live
+    intervals are pairwise disjoint within a group, so each row matches
+    at most one segment; grouped input also matches the group key
+    (Spark's join equates NaN keys, as its groupBy does).  ``_hi`` is
+    carried explicitly: filtering on ``lo + bw·buckets`` could
+    float-drift below the true hi and drop boundary rows."""
+    grouped = "_g" in vals.columns
+    schema = T.StructType(
+        [T.StructField("_s", T.IntegerType())]
+        + ([T.StructField("_sg", vals.schema["_g"].dataType)] if grouped else [])
+        + [T.StructField(c, T.DoubleType()) for c in ("_lo", "_hi", "_bw")]
+        + [T.StructField("_ts", T.ArrayType(T.LongType()))]
+    )
+    rows = [
+        (i, *([s.g] if grouped else []), float(s.lo), float(s.hi),
+         (s.hi - s.lo) / buckets, [t - s.below for _, t in s.targets])
+        for i, s in enumerate(segs)
+    ]
+    # built from Arrow: a local relation whose broadcast takes
+    # milliseconds (a list-built relation pays a ~0.2 s Python scan job
+    # per round), and unlike pandas input Arrow keeps a NaN group key
+    # NaN instead of nulling it
+    table = vals.sparkSession.createDataFrame(
+        pa.table(dict(zip(schema.names, map(list, zip(*rows))))), schema
+    )
+    v = F.col("_v")
+    on = (v >= F.col("_lo")) & (v <= F.col("_hi"))
+    if grouped:
+        on = (F.col("_g") == F.col("_sg")) & on
+    envelope = (v >= min(s.lo for s in segs)) & (v <= max(s.hi for s in segs))
+    return vals.filter(envelope).join(F.broadcast(table), on)
 
-    v = pdf["_v"].to_numpy(dtype="float64")
-    order = np.argsort(v, kind="mergesort")
-    cum = np.cumsum(pdf["_tw"].to_numpy(dtype="int64")[order])
-    i = int(np.searchsorted(cum, kk, side="left"))
-    if i >= len(cum):
-        raise RuntimeError(err)
-    return float(v[order][i])
+
+def _refine(vals: DataFrame, live: list, buckets: int) -> list:
+    """One histogram round for EVERY live segment: a (segment, bucket)
+    weight/row/min/max aggregate over ``buckets`` arithmetic sub-ranges
+    per segment, then each segment splits into one new segment per
+    bucket where some of its targets cross.
+
+    Each new interval is snapped to its bucket's ACTUAL ``[min, max]``
+    rather than the arithmetic boundaries ``lo + b·width``:
+    ``floor((v-lo)/width)`` is monotone non-decreasing in v (IEEE
+    subtraction/division are correctly rounded, hence monotone), so a
+    bucket's rows occupy one contiguous value range and the next round's
+    closed range filter selects EXACTLY the rows counted here —
+    ``below``/``n`` stay exact inductively, and no boundary row is
+    double-counted (arithmetic boundaries can float-drift across the
+    floor expression).  Snapping also collapses an interval far wider
+    than its data at no extra scan.  A bucket matching its segment
+    exactly is the no-progress case (the width underflowed ulp, or
+    ±inf made it degenerate): the segment is done, its count still
+    exact."""
+    idx = F.least(
+        F.floor((F.col("_v") - F.col("_lo")) / F.col("_bw")).cast("int"),
+        F.lit(buckets - 1),
+    )
+    hist = defaultdict(dict)
+    for r in (
+        _in_segments(vals, live, buckets)
+        .groupBy("_s", idx.alias("_b"))
+        .agg(
+            F.sum("_w").alias("_cw"),
+            F.count(F.lit(1)).alias("_n"),
+            F.min("_v").alias("_mn"),
+            F.max("_v").alias("_mx"),
+        )
+        .collect()
+    ):
+        hist[r["_s"]][r["_b"]] = (r["_cw"], r["_n"], r["_mn"], r["_mx"])
+    out = []
+    for i, s in enumerate(live):
+        cum, pending = s.below, list(s.targets)
+        for b in sorted(hist[i]):
+            cw, n, mn, mx = hist[i][b]
+            picked = []
+            while pending and cum + cw >= pending[0][1]:
+                picked.append(pending.pop(0))
+            if picked:
+                done = (mn, mx, n) == (s.lo, s.hi, s.n)
+                out.append(_Segment(s.g, mn, mx, cum, n, picked, done))
+            cum += cw
+        if pending:
+            # unreachable with exact bookkeeping (bucket weights total
+            # the in-range weight and below < target ≤ below + in-range
+            # weight holds inductively); the whole interval goes to the
+            # in-Spark residue, which answers exactly or raises
+            out.append(_Segment(s.g, s.lo, s.hi, s.below, None, pending, True))
+    return out
 
 
-def _residue_walk(pairs, kk: int, err: str) -> float:
-    """Driver twin of the residue's ordered prefix sum: smallest value
-    whose cumulative weight reaches ``kk`` over sorted (value, weight)
-    pairs.  Bit-identical to the in-Spark form — weights are integral
-    (exact, order-free sums) and values are NaN-free doubles, so
-    Python's ascending sort is the same total order as ``ORDER BY _v``
-    (groupBy normalizes -0.0 to 0.0 before either path sees it)."""
-    cum = 0
-    for v_, c_ in pairs:
-        cum += c_
-        if cum >= kk:
-            return float(v_)
-    raise RuntimeError(err)
+def _walk(seg: _Segment, v, cum, out: dict, label: str) -> None:
+    """THE driver walk: over one segment's values (ascending) and their
+    cumulative in-segment weights, each target resolves to the smallest
+    value whose cumulative weight reaches ``target − below``.  Exact and
+    order-free: weights are integral and values NaN-free doubles (the
+    groupBy normalizes -0.0), so this is the same total order as an
+    in-Spark ``ORDER BY _v`` prefix sum."""
+    for key, t in seg.targets:
+        i = int(np.searchsorted(cum, t - seg.below, side="left"))
+        if i >= len(cum):
+            raise RuntimeError(
+                f"{label}: interval [{seg.lo}, {seg.hi}] of group "
+                f"{seg.g!r} holds less than {t - seg.below} weight — "
+                "interval bookkeeping violated"
+            )
+        out[(seg.g, key)] = (t, float(v[i]))
+
+
+def _select(
+    vals: DataFrame,
+    ranks: dict | None,
+    fracs: list | None,
+    buckets: int,
+    final_rows: int,
+    max_iters: int,
+    label: str,
+    prior_stats: dict | None = None,
+) -> tuple:
+    """The one exact-selection engine behind every ``kth_*`` kernel.
+
+    ``vals`` holds ``_v`` (non-NaN double), ``_w`` (integral long
+    weight; unit weights for the unweighted kernels) and, for the
+    grouped kernels only, ``_g`` — the global kernels are the single
+    group ``None`` and plan no grouping key.  Weight ranks per group are
+    ``ranks[g]`` (each rank its own key) or, for every group, each
+    ``fracs`` entry through :func:`_frac_rank`.  Returns ``(stats,
+    {(group, key): (rank, value)})`` with ``stats[g] = (lo, hi,
+    total_weight, rows, min_weight)``.
+
+    Flow: stats (a speculative complete value table, the caller's
+    ``prior_stats``, or one aggregate) → one segment per group → while
+    the segments' exact row count exceeds DRIVER_TABLE_MAX_ROWS and some
+    segment holds more than ``final_rows`` rows, one histogram round for
+    all live segments at once (:func:`_refine`) → the residue, which is
+    just the value table of the surviving intervals: collected and
+    walked on the driver when its row count is known to fit, else
+    walked in Spark as a per-segment ordered prefix sum (an unknown
+    count or rows beyond the bound).  Rank bookkeeping (below, targets)
+    runs in the WEIGHT domain; the residue gates and the no-progress
+    check run in the ROW domain (residue cost is rows, whatever the
+    weights).  Driver state: a few scalars per segment; segments ≤
+    groups × ranks."""
+    if fracs is not None:
+        bad = [f for f in fracs if not 0.0 < f <= 1.0]
+        if bad:
+            raise ValueError(f"{label}: fracs outside (0, 1]: {bad!r}")
+    grouped = "_g" in vals.columns
+    table = None
+    if _plan_size_bytes(vals) <= SPECULATIVE_TABLE_MAX_BYTES:
+        table = _collect_value_table(vals, DRIVER_TABLE_MAX_ROWS)
+    if prior_stats is not None:
+        # caller-supplied bounds (see kth_element_by_group): loose lo/hi
+        # are fine, total weight and rows must be exact
+        stats = {_gkey(g): tuple(s) for g, s in prior_stats.items()}
+    elif table is not None:
+        stats = {
+            g: (float(v[0]), float(v[-1]), int(w.sum()), n, mw)
+            for g, (v, w, n, mw) in table.items()
+        }
+    else:
+        stats = {
+            (_gkey(r["_g"]) if grouped else None): (
+                r["lo"], r["hi"], r["tw"], r["n"], r["mw"]
+            )
+            for r in vals.groupBy(*(["_g"] if grouped else []))
+            .agg(
+                F.min("_v").alias("lo"),
+                F.max("_v").alias("hi"),
+                F.sum("_w").alias("tw"),
+                F.count(F.lit(1)).alias("n"),
+                F.min("_w").alias("mw"),
+            )
+            .collect()
+            if r["n"]
+        }
+
+    def where(gs):
+        return f" for groups {gs!r}" if grouped else ""
+
+    neg = [g for g, s in stats.items() if s[4] is not None and s[4] < 0]
+    if neg:
+        raise ValueError(
+            f"{label}: negative weight breaks the cumulative-weight "
+            f"monotonicity the selection relies on{where(neg)}"
+        )
+    missing = [g for g in ranks or {} if g not in stats]
+    if missing or not (grouped or stats):
+        raise ValueError(f"{label}: no non-null rows{where(missing)}")
+    segs = []
+    for g, (lo, hi, tw, n, _mw) in stats.items():
+        if ranks is None:
+            pairs = [(f, _frac_rank(f, tw)) for f in fracs]
+        elif g in ranks:
+            pairs = [(k, k) for k in ranks[g]]
+        else:
+            continue
+        bad = sorted({t for _, t in pairs if not 1 <= t <= tw})
+        if bad:
+            raise ValueError(
+                f"{label}: ranks {bad!r} outside [1, {tw}]{where([g])}"
+            )
+        segs.append(_Segment(g, lo, hi, 0, n, sorted(pairs, key=lambda p: p[1])))
+    if not segs:
+        return stats, {}
+
+    if table is None and _rows(segs) <= DRIVER_TABLE_MAX_ROWS:
+        # exact stats bound the complete table (distinct ≤ rows); capped
+        # anyway because prior_stats may omit groups that vals holds
+        table = _collect_value_table(vals, DRIVER_TABLE_MAX_ROWS)
+    for rnd in range(max_iters + 1):
+        live = [
+            s
+            for s in segs
+            if not s.done and s.n > final_rows and (s.hi - s.lo) / buckets > 0.0
+        ]
+        if table is not None or not live or _rows(segs) <= DRIVER_TABLE_MAX_ROWS:
+            break
+        if rnd == max_iters:
+            raise RuntimeError(f"{label}: no convergence in {max_iters} passes")
+        segs = [s for s in segs if s not in live] + _refine(vals, live, buckets)
+
+    out: dict = {}
+    if table is None and _rows(segs) <= DRIVER_TABLE_MAX_ROWS:
+        table = _collect_value_table(_in_segments(vals, segs, buckets), None)
+    if table is not None:
+        for s in segs:
+            v, w, _, _ = table.get(s.g, _NO_ROWS)
+            a = np.searchsorted(v, s.lo, side="left")
+            b = np.searchsorted(v, s.hi, side="right")
+            _walk(s, v[a:b], np.cumsum(w[a:b]), out, label)
+        return stats, out
+    # in-Spark residue: per-segment ordered prefix sum over per-VALUE
+    # weights (never raw rows); only the rows where some target crosses
+    # come back, and the first of them reaching a target answers it
+    cells = defaultdict(list)
+    for r in (
+        _in_segments(vals, segs, buckets)
+        .groupBy("_s", "_ts", "_v")
+        .agg(F.sum("_w").alias("_c"))
+        .withColumn(
+            "_cum",
+            F.sum("_c").over(
+                Window.partitionBy("_s")
+                .orderBy("_v")
+                .rowsBetween(Window.unboundedPreceding, 0)
+            ),
+        )
+        .filter(
+            F.exists(
+                "_ts",
+                lambda t: (F.col("_cum") - F.col("_c") < t)
+                & (t <= F.col("_cum")),
+            )
+        )
+        .select("_s", "_v", "_cum")
+        .collect()
+    ):
+        cells[r["_s"]].append((r["_v"], r["_cum"]))
+    for i, s in enumerate(segs):
+        vc = sorted(cells[i])
+        _walk(
+            s,
+            [v for v, _ in vc],
+            np.array([c for _, c in vc], dtype="int64"),
+            out,
+            label,
+        )
+    return stats, out
+
+
+def _selection_input(
+    df: DataFrame,
+    value_col: str,
+    weight_col: str | None,
+    group_col: str | None,
+    label: str,
+) -> DataFrame:
+    """``(_g, _v, _w)`` rows the engine selects from: NULL value, weight
+    or group and NaN values are excluded; no weight column means unit
+    weights; no group column means no ``_g``."""
+    v = F.col(value_col).cast("double")
+    keep = v.isNotNull() & ~F.isnan(v)
+    cols = [v.alias("_v")]
+    if group_col is not None:
+        keep = keep & F.col(group_col).isNotNull()
+        cols.insert(0, F.col(group_col).alias("_g"))
+    if weight_col is None:
+        w = F.lit(1).cast("long")
+    else:
+        keep = keep & F.col(weight_col).isNotNull()
+        w = _integral_weight_expr(df, weight_col, label)
+    return df.filter(keep).select(*cols, w.alias("_w"))
+
+
+def _kth_global(
+    df, value_col, weight_col, ks, fracs, buckets, final_rows, max_iters, label
+) -> tuple:
+    """``(total weight, {key: value})`` of the ungrouped engine."""
+    if (ks is None) == (fracs is None):
+        raise ValueError(f"{label}: pass exactly one of ks/fracs")
+    if not (fracs if ks is None else ks):
+        raise ValueError(f"{label}: no ranks requested")
+    stats, res = _select(
+        _selection_input(df, value_col, weight_col, None, label),
+        None if ks is None else {None: [int(k) for k in ks]},
+        fracs,
+        buckets,
+        final_rows,
+        max_iters,
+        label,
+    )
+    return int(stats[None][2]), {key: v for (_, key), (_, v) in res.items()}
 
 
 def kth_element(
@@ -1293,10 +1631,11 @@ def kth_element(
     ≤ buckets-row aggregate), find the bucket containing global rank k,
     recurse into it.  Each pass shrinks the candidate interval ×buckets,
     so real-world value ranges resolve in 2–4 scans; when the surviving
-    range holds ≤ ``final_rows`` rows the answer comes from one exact
-    per-value count aggregate over that residue (a tiny shuffle).  The
-    scans are filtered by a pushable range predicate — with sorted /
-    z-ordered storage they touch a shrinking fraction of the data.
+    range holds ≤ ``final_rows`` rows (or fits the driver value table,
+    ``DRIVER_TABLE_MAX_ROWS``) the answer comes from one exact per-value
+    count aggregate over that residue.  The scans are filtered by a
+    pushable range predicate — with sorted / z-ordered storage they
+    touch a shrinking fraction of the data.
 
     Driver state per pass: two floats + two longs (the interval and the
     rank already accounted below it) — the standing "K driver scalars
@@ -1330,129 +1669,10 @@ def kth_element(
     """
     if k < 1:
         raise ValueError(f"kth_element: k must be >= 1, got {k}")
-    v = F.col(value_col).cast("double")
-    vals = df.filter(v.isNotNull() & ~F.isnan(v)).select(
-        v.alias("_v"), F.lit(1).cast("long").alias("_w")
-    )
-    tbl = None
-    if _plan_size_bytes(vals) <= SPECULATIVE_TABLE_MAX_BYTES:
-        # speculative value-table-first: skips the stats pass outright
-        # when the complete table fits (1 job total); a saturated
-        # collect falls through to the classic flow
-        tbl = _collect_value_table(vals, False, DRIVER_TABLE_MAX_ROWS)
-    if tbl is not None:
-        total = int(tbl["_tw"].sum())
-        if len(tbl) == 0 or k > total:
-            raise ValueError(
-                f"kth_element: k={k} outside [1, {total}] non-null rows"
-            )
-        return _table_walk(
-            tbl, k, "kth_element: value table walk exhausted — "
-            "bookkeeping violated"
-        )
-    lo_hi = vals.agg(
-        F.min("_v"), F.max("_v"), F.count(F.lit(1))
-    ).first()
-    lo, hi, total = lo_hi[0], lo_hi[1], lo_hi[2]
-    if lo is None or k > total:
-        raise ValueError(
-            f"kth_element: k={k} outside [1, {total}] non-null rows"
-        )
-    if total <= DRIVER_TABLE_MAX_ROWS:
-        # exact stats prove the complete table fits (distinct ≤ rows):
-        # one unbounded collect replaces every refinement round
-        tbl = _collect_value_table(vals, False, None)
-        return _table_walk(
-            tbl, k, "kth_element: value table walk exhausted — "
-            "bookkeeping violated"
-        )
-    below = 0  # rows strictly left of the current interval
-    in_range = total
-
-    def _exact_residue(lo: float, hi: float, kk: int, n_rows: int) -> float:
-        # per-VALUE counts (never raw rows): the residue's distinct
-        # values are ≤ its row count, the aggregate is one tiny shuffle,
-        # and the ordered prefix-sum runs over that value table
-        err = (
-            f"kth_element: residue [{lo}, {hi}] holds fewer than "
-            f"{kk} rows — interval bookkeeping violated"
-        )
-        agg = (
-            vals.filter((F.col("_v") >= lo) & (F.col("_v") <= hi))
-            .groupBy("_v")
-            .agg(F.count(F.lit(1)).alias("_c"))
-        )
-        if n_rows <= RESIDUE_DRIVER_MAX_ROWS:
-            # the exact bookkeeping proves the residue tiny: collect the
-            # value table and walk it on the driver (one job)
-            return _residue_walk(
-                sorted((r["_v"], r["_c"]) for r in agg.collect()), kk, err
-            )
-        cells = (
-            agg.withColumn(
-                "_cum",
-                F.sum("_c").over(
-                    Window.orderBy("_v").rowsBetween(
-                        Window.unboundedPreceding, 0
-                    )
-                ),
-            )
-            .filter(F.col("_cum") >= kk)
-            .orderBy("_v")
-            .limit(1)
-            .collect()
-        )
-        if not cells:
-            raise RuntimeError(err)
-        return float(cells[0]["_v"])
-
-    for _ in range(max_iters):
-        if lo == hi or in_range <= final_rows:
-            return _exact_residue(lo, hi, k - below, in_range)
-        width = (hi - lo) / buckets
-        if width <= 0.0:  # span underflowed: few representable doubles left
-            return _exact_residue(lo, hi, k - below, in_range)
-        idx = F.least(
-            F.floor((F.col("_v") - F.lit(lo)) / F.lit(width)).cast("int"),
-            F.lit(buckets - 1),
-        )
-        hist = {
-            r["_b"]: (r["_c"], r["_mn"], r["_mx"])
-            for r in vals.filter(
-                (F.col("_v") >= lo) & (F.col("_v") <= hi)
-            )
-            .groupBy(idx.alias("_b"))
-            .agg(
-                F.count(F.lit(1)).alias("_c"),
-                F.min("_v").alias("_mn"),
-                F.max("_v").alias("_mx"),
-            )
-            .collect()
-        }
-        cum = below
-        for b in range(buckets):
-            c, mn, mx = hist.get(b, (0, None, None))
-            if c and cum + c >= k:
-                # snap to the bucket's actual [min, max]: by the floor
-                # expression's monotonicity this closed range contains
-                # EXACTLY the c rows counted here, so the next pass's
-                # filter and this pass's below/in_range agree.  Snapping
-                # every pass also handles the shed-nothing case (data
-                # far narrower than the interval) for free — the
-                # interval collapses to the data, no extra scan.
-                if (mn, mx, c) == (lo, hi, in_range):  # no progress left
-                    return _exact_residue(lo, hi, k - below, in_range)
-                lo, hi, below, in_range = mn, mx, cum, c
-                break
-            cum += c
-        else:
-            # unreachable with exact bookkeeping (histogram counts sum
-            # to in_range and below < k <= below + in_range holds
-            # inductively); kept as a correct fallback, not a truncation
-            return _exact_residue(lo, hi, k - below, in_range)
-    raise RuntimeError(
-        f"kth_element: no convergence in {max_iters} passes (k={k})"
-    )
+    return _kth_global(
+        df, value_col, None, [k], None, buckets, final_rows, max_iters,
+        "kth_element",
+    )[1][k]
 
 
 def _integral_weight_expr(df: DataFrame, weight_col: str, label: str):
@@ -1520,9 +1740,9 @@ def kth_element_weighted(
 
     **Weights must be non-negative integers** (validated eagerly, one
     extra column in the same bounds aggregate): integer weight sums are
-    exact and accumulation-order-free on every engine, so the result —
-    and its DuckDB-oracle replay — is bit-deterministic.  Float weights
-    on a fixed-point grid are the caller's one-multiply preprocessing.
+    exact and accumulation-order-free, so the result — and its
+    DuckDB-oracle replay — is bit-deterministic.  Float weights on a
+    fixed-point grid are the caller's one-multiply preprocessing.
     Zero-weight rows are legal and can never be the answer unless they
     tie a weight-bearing value (the "smallest v with cum >= wk" form
     handles them without a special case).  NULL value or NULL weight
@@ -1530,133 +1750,10 @@ def kth_element_weighted(
     """
     if wk < 1:
         raise ValueError(f"kth_element_weighted: wk must be >= 1, got {wk}")
-    v = F.col(value_col).cast("double")
-    w = _integral_weight_expr(df, weight_col, "kth_element_weighted")
-    vals = df.filter(
-        v.isNotNull() & ~F.isnan(v) & F.col(weight_col).isNotNull()
-    ).select(v.alias("_v"), w.alias("_w"))
-
-    def _walk_table(tbl) -> float:
-        min_w = int(tbl["_mw"].min()) if len(tbl) else None
-        if min_w is not None and min_w < 0:
-            raise ValueError(
-                f"kth_element_weighted: negative weight {min_w} breaks "
-                "the cumulative-weight monotonicity the selection "
-                "relies on"
-            )
-        total_w = int(tbl["_tw"].sum()) if len(tbl) else None
-        if total_w is None or wk > total_w:
-            raise ValueError(
-                f"kth_element_weighted: wk={wk} outside [1, {total_w}] "
-                "total weight over non-null rows"
-            )
-        return _table_walk(
-            tbl, wk, "kth_element_weighted: value table walk exhausted "
-            "— bookkeeping violated"
-        )
-
-    if _plan_size_bytes(vals) <= SPECULATIVE_TABLE_MAX_BYTES:
-        tbl = _collect_value_table(vals, False, DRIVER_TABLE_MAX_ROWS)
-        if tbl is not None:
-            return _walk_table(tbl)
-    lo_hi = vals.agg(
-        F.min("_v"), F.max("_v"), F.sum("_w"), F.count(F.lit(1)), F.min("_w")
-    ).first()
-    lo, hi, total_w, total_n, min_w = lo_hi
-    if min_w is not None and min_w < 0:
-        raise ValueError(
-            f"kth_element_weighted: negative weight {min_w} breaks the "
-            "cumulative-weight monotonicity the selection relies on"
-        )
-    if lo is None or total_w is None or wk > total_w:
-        raise ValueError(
-            f"kth_element_weighted: wk={wk} outside [1, {total_w}] total "
-            "weight over non-null rows"
-        )
-    if total_n <= DRIVER_TABLE_MAX_ROWS:
-        return _walk_table(_collect_value_table(vals, False, None))
-    below_w = 0  # weight strictly left of the current interval
-    in_range_n = total_n
-
-    def _exact_residue(lo: float, hi: float, wkk: int, n_rows: int) -> float:
-        err = (
-            f"kth_element_weighted: residue [{lo}, {hi}] holds less "
-            f"than {wkk} weight — interval bookkeeping violated"
-        )
-        agg = (
-            vals.filter((F.col("_v") >= lo) & (F.col("_v") <= hi))
-            .groupBy("_v")
-            .agg(F.sum("_w").alias("_c"))
-        )
-        if n_rows <= RESIDUE_DRIVER_MAX_ROWS:
-            return _residue_walk(
-                sorted((r["_v"], r["_c"]) for r in agg.collect()), wkk, err
-            )
-        cells = (
-            agg.withColumn(
-                "_cum",
-                F.sum("_c").over(
-                    Window.orderBy("_v").rowsBetween(
-                        Window.unboundedPreceding, 0
-                    )
-                ),
-            )
-            .filter(F.col("_cum") >= wkk)
-            .orderBy("_v")
-            .limit(1)
-            .collect()
-        )
-        if not cells:
-            raise RuntimeError(err)
-        return float(cells[0]["_v"])
-
-    for _ in range(max_iters):
-        if lo == hi or in_range_n <= final_rows:
-            return _exact_residue(lo, hi, wk - below_w, in_range_n)
-        width = (hi - lo) / buckets
-        if width <= 0.0:  # span underflowed: few representable doubles left
-            return _exact_residue(lo, hi, wk - below_w, in_range_n)
-        idx = F.least(
-            F.floor((F.col("_v") - F.lit(lo)) / F.lit(width)).cast("int"),
-            F.lit(buckets - 1),
-        )
-        hist = {
-            r["_b"]: (r["_wsum"], r["_n"], r["_mn"], r["_mx"])
-            for r in vals.filter(
-                (F.col("_v") >= lo) & (F.col("_v") <= hi)
-            )
-            .groupBy(idx.alias("_b"))
-            .agg(
-                F.sum("_w").alias("_wsum"),
-                F.count(F.lit(1)).alias("_n"),
-                F.min("_v").alias("_mn"),
-                F.max("_v").alias("_mx"),
-            )
-            .collect()
-        }
-        cum = below_w
-        for b in range(buckets):
-            ws, n, mn, mx = hist.get(b, (0, 0, None, None))
-            if n and cum + ws >= wk:
-                # data-snapped interval: same monotonicity argument as
-                # kth_element — the floor expression never depends on
-                # the weights
-                if (mn, mx, n) == (lo, hi, in_range_n):  # no progress
-                    return _exact_residue(lo, hi, wk - below_w, in_range_n)
-                lo, hi, below_w, in_range_n = mn, mx, cum, n
-                break
-            cum += ws
-        else:
-            # unreachable with exact bookkeeping (bucket weight sums
-            # total the in-range weight and below_w < wk <= below_w +
-            # in-range weight holds inductively; the crossing bucket
-            # always has ws > 0, hence n > 0); kept as a correct
-            # fallback, not a truncation
-            return _exact_residue(lo, hi, wk - below_w, in_range_n)
-    raise RuntimeError(
-        f"kth_element_weighted: no convergence in {max_iters} passes "
-        f"(wk={wk})"
-    )
+    return _kth_global(
+        df, value_col, weight_col, [wk], None, buckets, final_rows,
+        max_iters, "kth_element_weighted",
+    )[1][wk]
 
 
 def weighted_median(
@@ -1664,22 +1761,12 @@ def weighted_median(
 ) -> float:
     """Lower weighted median: :func:`kth_element_weighted` at
     ``wk = (W + 1) // 2`` (W = total integral weight) — reduces to the
-    unweighted lower median at all-ones weights."""
-    w = F.col(weight_col).cast("long")
-    total = (
-        df.filter(
-            F.col(value_col).isNotNull()
-            & ~F.isnan(F.col(value_col).cast("double"))
-            & F.col(weight_col).isNotNull()
-        )
-        .agg(F.sum(w))
-        .first()[0]
-    )
-    if not total:
-        raise ValueError("weighted_median: zero total weight")
-    return kth_element_weighted(
-        df, value_col, weight_col, (int(total) + 1) // 2, **kw
-    )
+    unweighted lower median at all-ones weights.  The rank comes from
+    the kernel's own bounds pass (``ceil(W/2) == (W+1)//2``), so there
+    is no eager total-weight job."""
+    return kth_elements_weighted(
+        df, value_col, weight_col, fracs=[0.5], **kw
+    )[1][0.5]
 
 
 def kth_elements(
@@ -1697,8 +1784,8 @@ def kth_elements(
     triple of quantiles of the same column; running the single-rank
     kernel per rank re-scans the data once per rank per pass.  This
     kernel refines every requested rank simultaneously, the way
-    :func:`_kth_by_group_impl` shares passes across groups: per pass ONE
-    range-filtered scan + a ≤ ranks×buckets-row histogram aggregate
+    :func:`kth_element_by_group` shares passes across groups: per pass
+    ONE range-filtered scan + a ≤ ranks×buckets-row histogram aggregate
     serves ALL unresolved ranks.
 
     The key invariant making the sharing exact: all ranks start on the
@@ -1707,9 +1794,9 @@ def kth_elements(
     intervals are pairwise IDENTICAL or DISJOINT (a laminar family
     refined in lockstep).  Ranks sharing an interval share one segment
     (and one ``below`` count, since their interval's left edge is the
-    same); disjoint segments histogram side by side in one scan via a
-    chained-when cell id.  Resolved segments answer several ranks in
-    ONE residue aggregate (``min(v | cum >= target)`` per rank — exact
+    same); disjoint segments histogram side by side in one scan joined
+    to a broadcast segment table.  Resolved segments answer several
+    ranks in ONE residue (``min(v | cum >= target)`` per rank — exact
     because the cumulative count is monotone in v).
 
     ``fracs`` (each in (0, 1]) folds the rank computation into the
@@ -1720,7 +1807,7 @@ def kth_elements(
     Bit-identical to per-rank :func:`kth_element` calls (same snap
     logic, same residue semantics), pinned in tests.
     """
-    return _kth_multi_impl(
+    return _kth_global(
         df, value_col, None, ks, fracs, buckets, final_rows, max_iters,
         "kth_elements",
     )
@@ -1747,261 +1834,10 @@ def kth_elements_weighted(
     and per-resolved-segment residues, instead of an eager weight agg
     plus two full single-rank runs.  Returns ``(total_weight,
     {key: value})``."""
-    return _kth_multi_impl(
+    return _kth_global(
         df, value_col, weight_col, wks, fracs, buckets, final_rows,
         max_iters, "kth_elements_weighted",
     )
-
-
-def _kth_multi_impl(
-    df: DataFrame,
-    value_col: str,
-    weight_col: str | None,
-    ks: list | None,
-    fracs: list | None,
-    buckets: int,
-    final_rows: int,
-    max_iters: int,
-    label: str,
-) -> tuple:
-    """Shared engine for multi-rank exact selection, weighted or not
-    (``weight_col=None`` → unit weights, rank domain = row domain).
-
-    Driver state: O(#ranks) interval tuples per pass (each 2 floats +
-    2 longs); per pass one pushable range-filtered scan feeding a
-    ≤ segments×buckets-row aggregate; residues are per-VALUE count
-    aggregates bounded by ``final_rows`` rows each, answering every
-    rank that resolved into that segment in one job."""
-    if (ks is None) == (fracs is None):
-        raise ValueError(f"{label}: pass exactly one of ks/fracs")
-    v = F.col(value_col).cast("double")
-    keep = v.isNotNull() & ~F.isnan(v)
-    if weight_col is None:
-        w = F.lit(1).cast("long")
-    else:
-        keep = keep & F.col(weight_col).isNotNull()
-        w = _integral_weight_expr(df, weight_col, label)
-    vals = df.filter(keep).select(v.alias("_v"), w.alias("_w"))
-    tbl = None
-    if _plan_size_bytes(vals) <= SPECULATIVE_TABLE_MAX_BYTES:
-        # speculative value-table-first (see DRIVER_TABLE_MAX_ROWS):
-        # the complete table IS the stats pass (min/max/sums derive
-        # from it exactly) and answers every rank without refinement
-        tbl = _collect_value_table(vals, False, DRIVER_TABLE_MAX_ROWS)
-    if tbl is not None and len(tbl):
-        lo = float(tbl["_v"].min())
-        hi = float(tbl["_v"].max())
-        total = int(tbl["_tw"].sum())
-        n = int(tbl["_c"].sum())
-        min_w = int(tbl["_mw"].min())
-    else:
-        lo, hi, total, n, min_w = vals.agg(
-            F.min("_v"),
-            F.max("_v"),
-            F.sum("_w"),
-            F.count(F.lit(1)),
-            F.min("_w"),
-        ).first()
-    if min_w is not None and min_w < 0:
-        raise ValueError(
-            f"{label}: negative weight {min_w} breaks the cumulative "
-            "monotonicity the selection relies on"
-        )
-    if lo is None or total is None or total < 1:
-        raise ValueError(f"{label}: no weight-bearing non-null rows")
-    total = int(total)
-    if fracs is not None:
-        from fractions import Fraction
-
-        bad = [f for f in fracs if not (0.0 < f <= 1.0)]
-        if bad:
-            raise ValueError(f"{label}: fracs outside (0, 1]: {bad!r}")
-        # exact ceil(frac·total) in INTEGER arithmetic: float multiply
-        # drifts at boundaries (0.9·30 = 27.000000000000004 → ceil 28,
-        # while the oracle's (9n+9)//10 says 27); limit_denominator
-        # recovers the intended short decimal (0.9 → 9/10) exactly
-        targets = {}
-        for f in fracs:
-            fr = Fraction(f).limit_denominator(1_000_000)
-            targets[f] = max(
-                1, -((-fr.numerator * total) // fr.denominator)
-            )
-    else:
-        targets = {int(k): int(k) for k in ks}
-        bad = [k for k, t in targets.items() if t < 1 or t > total]
-        if bad:
-            raise ValueError(f"{label}: ranks outside [1, {total}]: {bad!r}")
-    if not targets:
-        raise ValueError(f"{label}: no ranks requested")
-
-    if tbl is None and n <= DRIVER_TABLE_MAX_ROWS:
-        # exact stats prove the complete table fits (distinct ≤ rows)
-        tbl = _collect_value_table(vals, False, None)
-    if tbl is not None and len(tbl):
-        results = {
-            key: _table_walk(
-                tbl,
-                targets[key],
-                f"{label}: value table walk exhausted for target "
-                f"{targets[key]} — bookkeeping violated",
-            )
-            for key in targets
-        }
-        return total, results
-
-    # segment state: (lo, hi, below_weight, n_rows); seg_of: key -> index
-    segments = [(lo, hi, 0, n)]
-    done = [False]
-    seg_of = {key: 0 for key in targets}
-
-    for _ in range(max_iters):
-        still = []
-        for i, (slo, shi, _, sn) in enumerate(segments):
-            if done[i]:
-                continue
-            if slo == shi or sn <= final_rows or (shi - slo) / buckets <= 0:
-                done[i] = True  # residue-ready (incl. width underflow)
-            else:
-                still.append(i)
-        if not still:
-            break
-        glo = min(segments[i][0] for i in still)
-        ghi = max(segments[i][1] for i in still)
-        cell_expr = None
-        for pos, i in enumerate(still):
-            slo, shi, _, _ = segments[i]
-            width = (shi - slo) / buckets
-            b = F.least(
-                F.floor((F.col("_v") - F.lit(slo)) / F.lit(width)).cast(
-                    "int"
-                ),
-                F.lit(buckets - 1),
-            )
-            cond = (F.col("_v") >= slo) & (F.col("_v") <= shi)
-            branch = F.lit(pos * buckets) + b
-            cell_expr = (
-                F.when(cond, branch)
-                if cell_expr is None
-                else cell_expr.when(cond, branch)
-            )
-        hist = {
-            r["_cell"]: (r["_c"], r["_wc"], r["_mn"], r["_mx"])
-            for r in vals.filter(
-                (F.col("_v") >= glo) & (F.col("_v") <= ghi)
-            )
-            .withColumn("_cell", cell_expr)
-            .filter(F.col("_cell").isNotNull())
-            .groupBy("_cell")
-            .agg(
-                F.count(F.lit(1)).alias("_c"),
-                F.sum("_w").alias("_wc"),
-                F.min("_v").alias("_mn"),
-                F.max("_v").alias("_mx"),
-            )
-            .collect()
-        }
-        # rebuild segments: untouched ones keep their state; each
-        # refined segment splits into one new segment per chosen bucket
-        nsegs, ndone, nseg_of = [], [], {}
-        still_set = set(still)
-        for i, s in enumerate(segments):
-            if i in still_set:
-                continue
-            keys_i = [k for k, si in seg_of.items() if si == i]
-            if keys_i:
-                for k in keys_i:
-                    nseg_of[k] = len(nsegs)
-                nsegs.append(s)
-                ndone.append(done[i])
-        for pos, i in enumerate(still):
-            slo, shi, sbelow, sn = segments[i]
-            keys_here = sorted(
-                (k for k, si in seg_of.items() if si == i),
-                key=lambda k: targets[k],
-            )
-            cum = sbelow
-            ki = 0
-            for b in range(buckets):
-                c, wc, mn, mx = hist.get(pos * buckets + b, (0, 0, None, None))
-                if not c:
-                    continue
-                picked = []
-                while (
-                    ki < len(keys_here)
-                    and cum + wc >= targets[keys_here[ki]]
-                ):
-                    picked.append(keys_here[ki])
-                    ki += 1
-                if picked:
-                    # snap to the bucket's actual [min, max] — exactly
-                    # the single-rank kernel's boundary-exactness rule
-                    no_prog = (mn, mx, c) == (slo, shi, sn)
-                    for k in picked:
-                        nseg_of[k] = len(nsegs)
-                    nsegs.append((mn, mx, cum, c))
-                    ndone.append(no_prog)
-                cum += wc
-                if ki >= len(keys_here):
-                    break
-            if ki < len(keys_here):
-                raise RuntimeError(
-                    f"{label}: segment [{slo}, {shi}] holds less than "
-                    f"target weight — interval bookkeeping violated"
-                )
-        segments, done, seg_of = nsegs, ndone, nseg_of
-    else:
-        raise RuntimeError(f"{label}: no convergence in {max_iters} passes")
-
-    results = {}
-    for i, (slo, shi, sbelow, sn) in enumerate(segments):
-        keys_i = [k for k, si in seg_of.items() if si == i]
-        if not keys_i:
-            continue
-        agg = (
-            vals.filter((F.col("_v") >= slo) & (F.col("_v") <= shi))
-            .groupBy("_v")
-            .agg(F.sum("_w").alias("_c"))
-        )
-        if sn <= RESIDUE_DRIVER_MAX_ROWS:
-            # segment row count is exact bookkeeping: collect the value
-            # table once and answer every rank that resolved into this
-            # segment with driver walks (one job per segment)
-            pairs = sorted((r["_v"], r["_c"]) for r in agg.collect())
-            for k in keys_i:
-                results[k] = _residue_walk(
-                    pairs,
-                    targets[k] - sbelow,
-                    f"{label}: residue [{slo}, {shi}] holds less than "
-                    f"{targets[k] - sbelow} weight — bookkeeping violated",
-                )
-            continue
-        cells = agg.withColumn(
-            "_cum",
-            F.sum("_c").over(
-                Window.orderBy("_v").rowsBetween(
-                    Window.unboundedPreceding, 0
-                )
-            ),
-        )
-        row = cells.agg(
-            *[
-                F.min(
-                    F.when(
-                        F.col("_cum") >= F.lit(targets[k] - sbelow),
-                        F.col("_v"),
-                    )
-                ).alias(f"_r{j}")
-                for j, k in enumerate(keys_i)
-            ]
-        ).first()
-        for j, k in enumerate(keys_i):
-            if row[j] is None:
-                raise RuntimeError(
-                    f"{label}: residue [{slo}, {shi}] holds less than "
-                    f"{targets[k] - sbelow} weight — bookkeeping violated"
-                )
-            results[k] = float(row[j])
-    return total, results
 
 
 def kth_element_by_group(
@@ -2025,7 +1861,8 @@ def kth_element_by_group(
     ``frac=0.5`` is the lower median, the "exact median per source"
     question.  Returns a DataFrame ``(group_col, n, k, value)`` built
     from the driver's per-group scalars (groups × 4 values — the
-    standing K-driver-literals budget).
+    standing K-driver-literals budget).  A NaN group key is one group,
+    as in Spark's ``groupBy``.
 
     Each round: one scan computes a (group, bucket) histogram for every
     UNRESOLVED group against its own interval (a broadcast ≤groups-row
@@ -2037,9 +1874,9 @@ def kth_element_by_group(
     NOT the sum — a thousand sources cost the same number of scans as
     one.
 
-    Shares :func:`_kth_by_group_impl` with the weighted form (an
-    all-ones weight column makes them identical — counts ARE unit
-    weight sums, exactly).
+    Shares the selection engine with the weighted form (an all-ones
+    weight column makes them identical — counts ARE unit weight sums,
+    exactly).
 
     ``prior_stats`` (``{group: (lo, hi, total_w, n, min_w)}``) skips the
     kernel's own bounds pass when the caller already knows the numbers —
@@ -2049,21 +1886,12 @@ def kth_element_by_group(
     residue walks stay exact under loose bounds — they only require
     lo ≤ v ≤ hi for every group row); ``total_w``/``n`` must be EXACT
     (they drive the rank target, the residue gate and the no-progress
-    detection).
+    detection).  Its group set is authoritative, and a named group
+    with no rows raises on every path.
     """
-    return _kth_by_group_impl(
-        df,
-        value_col,
-        group_col,
-        weight_col=None,
-        ks=ks,
-        frac=frac,
-        buckets=buckets,
-        final_rows=final_rows,
-        max_iters=max_iters,
-        label="kth_element_by_group",
-        out_fields=("n", "k"),
-        prior_stats=prior_stats,
+    return _kth_by_group(
+        df, value_col, group_col, None, ks, frac, buckets, final_rows,
+        max_iters, "kth_element_by_group", ("n", "k"), prior_stats,
     )
 
 
@@ -2096,315 +1924,53 @@ def kth_element_by_group_weighted(
     sources cost the same passes as one.  Returns
     ``(group_col, total_w, wk, value)``.
     """
-    return _kth_by_group_impl(
-        df,
-        value_col,
-        group_col,
-        weight_col=weight_col,
-        ks=wks,
-        frac=frac,
-        buckets=buckets,
-        final_rows=final_rows,
-        max_iters=max_iters,
-        label="kth_element_by_group_weighted",
-        out_fields=("total_w", "wk"),
+    return _kth_by_group(
+        df, value_col, group_col, weight_col, wks, frac, buckets,
+        final_rows, max_iters, "kth_element_by_group_weighted",
+        ("total_w", "wk"),
     )
 
 
-def _kth_by_group_impl(
-    df: DataFrame,
-    value_col: str,
-    group_col: str,
-    weight_col: str | None,
-    ks: dict | None,
-    frac: float | None,
-    buckets: int,
-    final_rows: int,
-    max_iters: int,
-    label: str,
-    out_fields: tuple,
-    prior_stats: dict | None = None,
+def _kth_by_group(
+    df,
+    value_col,
+    group_col,
+    weight_col,
+    ks,
+    frac,
+    buckets,
+    final_rows,
+    max_iters,
+    label,
+    out_fields,
+    prior_stats=None,
 ) -> DataFrame:
-    """Shared engine for grouped exact selection, weighted or not.
-
-    Rank bookkeeping (below / the k target) runs in the WEIGHT domain;
-    the ``final_rows`` residue gate and the no-progress check run in
-    the ROW domain (residue cost is rows, whatever the weights) — with
-    ``weight_col=None`` both domains coincide (unit weights) and this
-    is exactly the historical unweighted kernel."""
+    """``(group_col, total weight, rank, value)`` rows of the grouped
+    engine, one per ranked group, ascending by group."""
     if (ks is None) == (frac is None):
         raise ValueError(f"{label}: pass exactly one of ks/frac")
-    v = F.col(value_col).cast("double")
-    keep = v.isNotNull() & ~F.isnan(v) & F.col(group_col).isNotNull()
-    if weight_col is None:
-        w = F.lit(1).cast("long")
-    else:
-        keep = keep & F.col(weight_col).isNotNull()
-        w = _integral_weight_expr(df, weight_col, label)
-    vals = df.filter(keep).select(
-        F.col(group_col).alias("_g"), v.alias("_v"), w.alias("_w")
+    stats, res = _select(
+        _selection_input(df, value_col, weight_col, group_col, label),
+        None if ks is None else {_gkey(g): [int(k)] for g, k in ks.items()},
+        None if frac is None else [frac],
+        buckets,
+        final_rows,
+        max_iters,
+        label,
+        prior_stats,
     )
-    tbl = None
-    if _plan_size_bytes(vals) <= SPECULATIVE_TABLE_MAX_BYTES:
-        # speculative value-table-first (see DRIVER_TABLE_MAX_ROWS):
-        # the complete (group, value) table IS the stats pass — exact
-        # per-group bounds/weights derive from it — and answers every
-        # group without refinement rounds or a residue pass
-        tbl = _collect_value_table(vals, True, DRIVER_TABLE_MAX_ROWS)
-    if tbl is not None and len(tbl):
-        derived = {
-            g: (
-                float(sub["_v"].min()),
-                float(sub["_v"].max()),
-                int(sub["_tw"].sum()),
-                int(sub["_c"].sum()),
-                int(sub["_mw"].min()),
-            )
-            for g, sub in tbl.groupby("_g", sort=False)
-        }
-        if prior_stats is not None:
-            # the prior's group set stays authoritative (groups it
-            # omits stay omitted, exactly as on the classic path); the
-            # table's exact numbers replace the prior's
-            stats = {g: derived[g] for g in prior_stats if g in derived}
-        else:
-            stats = derived
-    elif prior_stats is not None:
-        # caller-supplied bounds (see kth_element_by_group): loose
-        # lo/hi are fine, total_w/n must be exact
-        tbl = None
-        stats = {g: tuple(s) for g, s in prior_stats.items()}
-    else:
-        tbl = None
-        stats = {
-            r["_g"]: (r["lo"], r["hi"], r["tw"], r["n"], r["mw"])
-            for r in vals.groupBy("_g")
-            .agg(
-                F.min("_v").alias("lo"),
-                F.max("_v").alias("hi"),
-                F.sum("_w").alias("tw"),
-                F.count(F.lit(1)).alias("n"),
-                F.min("_w").alias("mw"),
-            )
-            .collect()
-        }
-    neg = {g: s[4] for g, s in stats.items() if s[4] is not None and s[4] < 0}
-    if neg:
-        raise ValueError(
-            f"{label}: negative weight breaks cumulative-weight "
-            f"monotonicity (groups {sorted(neg)!r})"
-        )
-    import math
-
-    if ks is not None:
-        unknown = sorted(set(ks) - set(stats))
-        if unknown:
-            raise ValueError(
-                f"{label}: ks names groups with no non-null "
-                f"rows: {unknown!r}"
-            )
-    want: dict = {}
-    for g, (lo, hi, tw, n, _mw) in stats.items():
-        if ks is not None:
-            if g not in ks:
-                continue
-            k = int(ks[g])
-        else:
-            k = max(1, math.ceil(frac * tw - 1e-9))
-        if not 1 <= k <= tw:
-            raise ValueError(
-                f"{label}: k={k} outside [1, {tw}] for group {g!r}"
-            )
-        want[g] = k
-    # state per group: lo, hi, below (weight), in_range (ROWS)
-    state = {g: [stats[g][0], stats[g][1], 0, stats[g][3]] for g in want}
-    resolved: dict = {}
-    spark = df.sparkSession
-    if (
-        tbl is None
-        and want
-        and sum(stats[g][3] for g in want) <= DRIVER_TABLE_MAX_ROWS
-    ):
-        # exact stats (agg or prior contract) prove the wanted groups'
-        # complete table fits: one collect replaces every round
-        need_filter = prior_stats is not None or len(want) < len(stats)
-        if not need_filter:
-            tbl = _collect_value_table(vals, True, None)
-        elif len(want) <= 64:
-            tbl = _collect_value_table(
-                vals.filter(F.col("_g").isin(list(want))), True, None
-            )
-    if tbl is not None and want:
-        by_g = {g: sub for g, sub in tbl.groupby("_g", sort=False)}
-        for g in want:
-            sub = by_g.get(g)
-            if sub is None or not len(sub):
-                raise RuntimeError(
-                    f"{label}: value table holds no rows for group "
-                    f"{g!r} — interval bookkeeping violated"
-                )
-            resolved[g] = _table_walk(
-                sub,
-                want[g],
-                f"{label}: value table walk exhausted for group {g!r} "
-                "— bookkeeping violated",
-            )
-
-    def _interval_df(groups):
-        # carry hi explicitly: filtering on lo + w*buckets could float-
-        # drift below the true hi and silently drop boundary rows
-        rows = [
-            (
-                g,
-                state[g][0],
-                state[g][1],
-                (state[g][1] - state[g][0]) / buckets,
-            )
-            for g in groups
-        ]
-        return spark.createDataFrame(rows, ["_g", "_lo", "_hi", "_w2"])
-
-    for _ in range(max_iters):
-        active = [
-            g
-            for g in state
-            if g not in resolved
-            and not (
-                state[g][0] == state[g][1]
-                or state[g][3] <= final_rows
-                or (state[g][1] - state[g][0]) / buckets <= 0.0
-            )
-        ]
-        if not active:
-            break
-        iv = _interval_df(active)
-        idx = F.least(
-            F.floor((F.col("_v") - F.col("_lo")) / F.col("_w2")).cast("int"),
-            F.lit(buckets - 1),
-        )
-        hist: dict = {}
-        for r in (
-            vals.join(F.broadcast(iv), "_g")
-            .filter(
-                (F.col("_v") >= F.col("_lo")) & (F.col("_v") <= F.col("_hi"))
-            )
-            .groupBy("_g", idx.alias("_b"))
-            .agg(
-                F.sum("_w").alias("_cw"),
-                F.count(F.lit(1)).alias("_n"),
-                F.min("_v").alias("_mn"),
-                F.max("_v").alias("_mx"),
-            )
-            .collect()
-        ):
-            hist.setdefault(r["_g"], {})[r["_b"]] = (
-                r["_cw"],
-                r["_n"],
-                r["_mn"],
-                r["_mx"],
-            )
-        for g in active:
-            lo, hi, below, in_range = state[g]
-            k = want[g]
-            cum = below
-            hg = hist.get(g, {})
-            chosen = None
-            for b in range(buckets):
-                cw, n, mn, mx = hg.get(b, (0, 0, None, None))
-                if n and cum + cw >= k:
-                    chosen = (cw, n, mn, mx, cum)
-                    break
-                cum += cw
-            if chosen is None:
-                # unreachable with exact bookkeeping (weight sums total
-                # the in-range weight, below < k <= below + in-range
-                # weight inductively, and the crossing bucket has
-                # cw > 0 hence n > 0); defensively route to the exact
-                # residue over the full current interval — always
-                # correct
-                state[g][3] = 0
-                continue
-            cw, n, mn, mx, cum = chosen
-            # snap to the bucket's actual [min, max] — the same
-            # monotone-floor argument as kth_element (the floor
-            # expression never depends on the weights): this closed
-            # range holds exactly the n counted rows / cw counted
-            # weight, so per-group below / in_range stay exact and no
-            # boundary row is double-counted
-            if (mn, mx, n) == (lo, hi, in_range):  # no progress left
-                state[g][3] = 0  # force the exact residue next round
-                continue
-            state[g] = [mn, mx, cum, n]
-    else:
-        raise RuntimeError(
-            f"{label}: no convergence in {max_iters} rounds"
-        )
-    # ONE shared residue pass for everything still unresolved
-    pending = [g for g in state if g not in resolved]
-    if pending:
-        iv3 = spark.createDataFrame(
-            [(g, state[g][0], state[g][1], want[g] - state[g][2]) for g in pending],
-            ["_g", "_lo", "_hi", "_kk"],
-        )
-        base = vals.join(F.broadcast(iv3), "_g").filter(
-            (F.col("_v") >= F.col("_lo")) & (F.col("_v") <= F.col("_hi"))
-        )
-        # state[g][3] is the exact in-range row count EXCEPT on the
-        # defensive routes, which zero it as a force-residue sentinel —
-        # a zero therefore means "row count unknown", not "empty"
-        known = all(state[g][3] > 0 for g in pending)
-        if known and sum(state[g][3] for g in pending) <= RESIDUE_DRIVER_MAX_ROWS:
-            by_g: dict = {}
-            for r in (
-                base.groupBy("_g", "_v").agg(F.sum("_w").alias("_c")).collect()
-            ):
-                by_g.setdefault(r["_g"], []).append((r["_v"], r["_c"]))
-            for g in pending:
-                resolved[g] = _residue_walk(
-                    sorted(by_g.get(g, [])),
-                    want[g] - state[g][2],
-                    f"{label}: residue pass produced no value for "
-                    f"group {g!r} — interval bookkeeping violated",
-                )
-        else:
-            cells = (
-                base.groupBy("_g", "_v", "_kk")
-                .agg(F.sum("_w").alias("_c"))
-                .withColumn(
-                    "_cum",
-                    F.sum("_c").over(
-                        Window.partitionBy("_g")
-                        .orderBy("_v")
-                        .rowsBetween(Window.unboundedPreceding, 0)
-                    ),
-                )
-                .filter(F.col("_cum") >= F.col("_kk"))
-                .groupBy("_g")
-                .agg(F.min("_v").alias("_ans"))
-                .collect()
-            )
-            for r in cells:
-                resolved[r["_g"]] = float(r["_ans"])
-    unresolved = [g for g in want if g not in resolved]
-    if unresolved:
-        raise RuntimeError(
-            f"{label}: residue pass produced no value for "
-            f"groups {unresolved!r} (intervals "
-            f"{ {g: state[g][:3] for g in unresolved} !r}) — interval "
-            "bookkeeping violated"
-        )
-    rows = [
-        (g, int(stats[g][2]), int(want[g]), resolved[g]) for g in sorted(want)
-    ]
+    rows = sorted(
+        ((g, int(stats[g][2]), t, v) for (g, _), (t, v) in res.items()),
+        key=lambda r: (r[0] != r[0], r[0]),  # a NaN group sorts last
+    )
     # group dtype inherited from the input (a hardcoded string type would
     # mangle integer group keys)
-    gtype = df.schema[group_col].dataType
     schema = T.StructType(
         [
-            T.StructField(group_col, gtype),
+            T.StructField(group_col, df.schema[group_col].dataType),
             T.StructField(out_fields[0], T.LongType()),
             T.StructField(out_fields[1], T.LongType()),
             T.StructField("value", T.DoubleType()),
         ]
     )
-    return spark.createDataFrame(rows, schema)
+    return df.sparkSession.createDataFrame(rows, schema)

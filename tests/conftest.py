@@ -52,6 +52,23 @@ def spark():
         pass
 
 
+@pytest.fixture
+def selection_paths(monkeypatch):
+    """Iterate it to run a selection test's body on both engine paths:
+    first as configured (inputs this small take the driver value table),
+    then through the refinement loop and the in-Spark residue, with the
+    speculative and driver tables switched off."""
+    import indicators_spark.scale as scale
+
+    def paths():
+        yield "value_table"
+        monkeypatch.setattr(scale, "SPECULATIVE_TABLE_MAX_BYTES", -1)
+        monkeypatch.setattr(scale, "DRIVER_TABLE_MAX_ROWS", 0)
+        yield "refinement"
+
+    return paths()
+
+
 def _ts(i: int) -> dt.datetime:
     return dt.datetime(2024, 1, 1) + dt.timedelta(minutes=i)
 

@@ -1138,7 +1138,7 @@ def test_tfidf_saturated_probe_falls_back_to_agg_dispatch(
         (r["ia"], r["ib"]): r["cos"]
         for r in tfidf_cosine_pairs(docs, threshold=0.3).collect()
     }
-    monkeypatch.setenv("INDICATORS_TFIDF_PROBE_CELLS", "10")
+    monkeypatch.setenv("SPARK_GRAFT_TFIDF_PROBE_CELLS", "10")
     # probe saturates at 11 rows -> agg dispatch; corpus is dense-eligible
     # -> re-fold + GEMM, same pairs
     dense = {

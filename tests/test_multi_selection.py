@@ -32,28 +32,30 @@ _PAIRS = [
 ]
 
 
-def test_multi_equals_single_unweighted(spark):
+def test_multi_equals_single_unweighted(spark, selection_paths):
     df = _pairs_df(spark, _PAIRS)
     n = len(_PAIRS)
     ks = [1, 3, n // 2, n - 1, n]
-    total, res = kth_elements(df, "x", ks=ks, buckets=4, final_rows=2)
-    assert total == n
-    for k in ks:
-        assert res[k] == kth_element(df, "x", k, buckets=4, final_rows=2)
+    for _path in selection_paths:
+        total, res = kth_elements(df, "x", ks=ks, buckets=4, final_rows=2)
+        assert total == n
+        for k in ks:
+            assert res[k] == kth_element(df, "x", k, buckets=4, final_rows=2)
 
 
-def test_multi_equals_single_weighted(spark):
+def test_multi_equals_single_weighted(spark, selection_paths):
     df = _pairs_df(spark, _PAIRS)
     total_w = sum(w for _, w in _PAIRS)
     wks = [1, total_w // 3, (total_w + 1) // 2, total_w]
-    total, res = kth_elements_weighted(
-        df, "x", "w", wks=wks, buckets=4, final_rows=2
-    )
-    assert total == total_w
-    for wk in wks:
-        assert res[wk] == kth_element_weighted(
-            df, "x", "w", wk, buckets=4, final_rows=2
+    for _path in selection_paths:
+        total, res = kth_elements_weighted(
+            df, "x", "w", wks=wks, buckets=4, final_rows=2
         )
+        assert total == total_w
+        for wk in wks:
+            assert res[wk] == kth_element_weighted(
+                df, "x", "w", wk, buckets=4, final_rows=2
+            )
 
 
 def test_frac_targets_are_exact_integer_ranks(spark):
@@ -116,16 +118,17 @@ def _brute(pairs, wk):
     raise AssertionError
 
 
-def test_close_ranks_share_one_segment(spark):
+def test_close_ranks_share_one_segment(spark, selection_paths):
     """Adjacent fracs landing in the same bucket must still both
     resolve (one shared segment, one residue job answers both)."""
     rows = [(float(i),) for i in range(1, 1001)]
     df = spark.createDataFrame(rows, "x double")
-    _, res = kth_elements(
-        df, "x", fracs=[0.501, 0.502, 0.9], buckets=4, final_rows=10
-    )
-    assert res[0.501] == 501.0 and res[0.502] == 502.0
-    assert res[0.9] == 900.0
+    for _path in selection_paths:
+        _, res = kth_elements(
+            df, "x", fracs=[0.501, 0.502, 0.9], buckets=4, final_rows=10
+        )
+        assert res[0.501] == 501.0 and res[0.502] == 502.0, _path
+        assert res[0.9] == 900.0, _path
 
 
 def test_multi_guards(spark):
@@ -150,17 +153,22 @@ def test_multi_guards(spark):
 
 
 def test_value_table_fast_path_equals_classic_refinement(spark, monkeypatch):
-    """The r14 complete-value-table fast path (speculative one-job
-    collect + driver walk) must be bit-identical to the classic
-    stats→histogram→residue flow on every kernel, across ties, zero
-    weights, negatives, and multiple groups."""
+    """The complete-value-table paths (speculative one-job collect, and
+    the post-stats collect, + driver walk) must be bit-identical to the
+    classic stats→histogram→residue flow on every kernel, across ties,
+    zero weights, negatives, and multiple groups — a NaN group key
+    included, which every path keeps as one group (Spark groupBy
+    semantics)."""
     import indicators_spark.scale as scale
 
+    nan = float("nan")
+    nan_rows = [(float(i % 7) - 2.5, i % 4) for i in range(30)]
     df = _pairs_df(spark, _PAIRS)
     gdf = spark.createDataFrame(
-        [("a", x, w) for x, w in _PAIRS]
-        + [("b", float(i % 5), (i % 3) + 1) for i in range(40)],
-        "g string, x double, w long",
+        [(1.0, x, w) for x, w in _PAIRS]
+        + [(2.0, float(i % 5), (i % 3) + 1) for i in range(40)]
+        + [(nan, x, w) for x, w in nan_rows],
+        "g double, x double, w long",
     )
 
     def run_all():
@@ -175,14 +183,15 @@ def test_value_table_fast_path_equals_classic_refinement(spark, monkeypatch):
         out["multi_w"] = scale.kth_elements_weighted(
             df, "x", "w", wks=[3, 11, 20], buckets=8, final_rows=4
         )
+        # repr: two NaN keys never compare equal
         out["grp"] = sorted(
-            (r["g"], r["n"], r["k"], r["value"])
+            (repr(r["g"]), r["n"], r["k"], r["value"])
             for r in scale.kth_element_by_group(
                 gdf, "x", "g", frac=0.5, buckets=8, final_rows=4
             ).collect()
         )
         out["grp_w"] = sorted(
-            (r["g"], r["total_w"], r["wk"], r["value"])
+            (repr(r["g"]), r["total_w"], r["wk"], r["value"])
             for r in scale.kth_element_by_group_weighted(
                 gdf, "x", "w", "g", frac=0.5, buckets=8, final_rows=4
             ).collect()
@@ -190,11 +199,19 @@ def test_value_table_fast_path_equals_classic_refinement(spark, monkeypatch):
         return out
 
     fast = run_all()
+    # force the speculative collect (local relations report an unknown
+    # size, so the default gate sends them to the post-stats table)
+    monkeypatch.setattr(scale, "SPECULATIVE_TABLE_MAX_BYTES", 1 << 63)
+    speculative = run_all()
     # force the classic path: no speculation, no post-stats table
     monkeypatch.setattr(scale, "SPECULATIVE_TABLE_MAX_BYTES", -1)
     monkeypatch.setattr(scale, "DRIVER_TABLE_MAX_ROWS", 0)
     classic = run_all()
-    assert fast == classic
+    assert fast == speculative == classic
+    xs = sorted(x for x, _ in nan_rows)
+    assert ("nan", 30, 15, xs[14]) in fast["grp"]
+    W = sum(w for _, w in nan_rows)
+    assert ("nan", W, (W + 1) // 2, _brute(nan_rows, (W + 1) // 2)) in fast["grp_w"]
     # sanity: the speculative gate opens for parquet-backed frames this
     # size (local relations report unknown size and skip speculation —
     # they still take the post-stats table path via the row bound)

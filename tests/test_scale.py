@@ -472,7 +472,7 @@ def test_grouped_row_number_partition_invariant(spark, prices):
     assert a == b
 
 
-def test_kth_element_matches_sorted_bruteforce(spark):
+def test_kth_element_matches_sorted_bruteforce(spark, selection_paths):
     """Exact selection across refinement passes: random data + heavy
     ties + extreme outliers, k at both ends and around the middle; a
     tiny final_rows forces real histogram recursion."""
@@ -488,8 +488,10 @@ def test_kth_element_matches_sorted_bruteforce(spark):
     )
     df = spark.createDataFrame([(v,) for v in vals], "x double")
     sv = sorted(vals)
-    for k in (1, 2, len(vals) // 2, len(vals) - 1, len(vals)):
-        assert kth_element(df, "x", k, buckets=16, final_rows=64) == sv[k - 1]
+    for _path in selection_paths:
+        for k in (1, 2, len(vals) // 2, len(vals) - 1, len(vals)):
+            got = kth_element(df, "x", k, buckets=16, final_rows=64)
+            assert got == sv[k - 1], (_path, k)
 
 
 def test_kth_element_edge_cases(spark):
@@ -507,7 +509,7 @@ def test_kth_element_edge_cases(spark):
         kth_element(dfn, "x", 0)
 
 
-def test_kth_by_group_validation_and_dtypes(spark):
+def test_kth_by_group_validation_and_dtypes(spark, selection_paths):
     from indicators_spark.scale import kth_element_by_group
 
     df = spark.createDataFrame(
@@ -523,6 +525,13 @@ def test_kth_by_group_validation_and_dtypes(spark):
         kth_element_by_group(df, "x", "lab")
     with pytest.raises(ValueError, match="outside"):
         kth_element_by_group(df, "x", "lab", ks={2: 5})
+    # prior_stats naming a group without rows raises on every path
+    prior = {1: (5.0, 6.0, 2, 2, 1), 99: (0.0, 1.0, 1, 1, 1)}
+    for _path in selection_paths:
+        with pytest.raises(RuntimeError, match="bookkeeping violated"):
+            kth_element_by_group(
+                df, "x", "lab", frac=0.5, prior_stats=prior, final_rows=0
+            )
 
 
 def test_grouped_row_number_null_group_rows_survive(spark):

@@ -39,16 +39,17 @@ def _df(spark, pairs):
     return spark.createDataFrame(pairs, "x double, w long")
 
 
-def test_weighted_matches_bruteforce_with_ties_and_zeros(spark):
+def test_weighted_matches_bruteforce_with_ties_and_zeros(spark, selection_paths):
     pairs = [
         (1.5, 3), (1.5, 0), (2.0, 1), (2.5, 0), (3.0, 4), (3.0, 2),
         (7.25, 1), (7.25, 5), (10.0, 0), (11.5, 2),
     ]
     df = _df(spark, pairs)
     total = sum(w for _, w in pairs)
-    for wk in (1, 2, 3, 4, 8, 9, 10, 15, 16, 17, total):
-        got = kth_element_weighted(df, "x", "w", wk, buckets=4, final_rows=2)
-        assert got == _brute(pairs, wk), wk
+    for _path in selection_paths:
+        for wk in (1, 2, 3, 4, 8, 9, 10, 15, 16, 17, total):
+            got = kth_element_weighted(df, "x", "w", wk, buckets=4, final_rows=2)
+            assert got == _brute(pairs, wk), (_path, wk)
 
 
 def test_all_ones_weights_reduce_to_kth_element(spark):
@@ -144,7 +145,7 @@ def test_weighted_selection_hypothesis(spark, data, frac):
     assert got == _brute(data, wk)
 
 
-def test_grouped_weighted_matches_bruteforce(spark):
+def test_grouped_weighted_matches_bruteforce(spark, selection_paths):
     from indicators_spark.scale import kth_element_by_group_weighted
 
     pairs = [
@@ -153,24 +154,27 @@ def test_grouped_weighted_matches_bruteforce(spark):
         ("c", 4.0, 2),
     ]
     df = spark.createDataFrame(pairs, "g string, x double, w long")
-    out = kth_element_by_group_weighted(
-        df, "x", "w", "g", frac=0.5, buckets=4, final_rows=2
-    )
-    got = {r["g"]: (r["total_w"], r["wk"], r["value"]) for r in out.collect()}
-    for g in ("a", "b", "c"):
-        gp = [(v, w) for gg, v, w in pairs if gg == g]
-        W = sum(w for _, w in gp)
-        wk = (W + 1) // 2
-        assert got[g] == (W, wk, _brute(gp, wk)), g
-    # explicit wks dict, including a boundary rank
-    out2 = kth_element_by_group_weighted(
-        df, "x", "w", "g", wks={"a": 8, "b": 1}, buckets=4, final_rows=2
-    )
-    got2 = {r["g"]: r["value"] for r in out2.collect()}
-    assert got2 == {
-        "a": _brute([(v, w) for gg, v, w in pairs if gg == "a"], 8),
-        "b": _brute([(v, w) for gg, v, w in pairs if gg == "b"], 1),
-    }
+    for _path in selection_paths:
+        out = kth_element_by_group_weighted(
+            df, "x", "w", "g", frac=0.5, buckets=4, final_rows=2
+        )
+        got = {
+            r["g"]: (r["total_w"], r["wk"], r["value"]) for r in out.collect()
+        }
+        for g in ("a", "b", "c"):
+            gp = [(v, w) for gg, v, w in pairs if gg == g]
+            W = sum(w for _, w in gp)
+            wk = (W + 1) // 2
+            assert got[g] == (W, wk, _brute(gp, wk)), (_path, g)
+        # explicit wks dict, including a boundary rank
+        out2 = kth_element_by_group_weighted(
+            df, "x", "w", "g", wks={"a": 8, "b": 1}, buckets=4, final_rows=2
+        )
+        got2 = {r["g"]: r["value"] for r in out2.collect()}
+        assert got2 == {
+            "a": _brute([(v, w) for gg, v, w in pairs if gg == "a"], 8),
+            "b": _brute([(v, w) for gg, v, w in pairs if gg == "b"], 1),
+        }, _path
 
 
 def test_grouped_weighted_all_ones_reduces_to_unweighted(spark):
