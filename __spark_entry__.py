@@ -275,4 +275,4 @@ def oracle_sql() -> dict[str, str]:
     :func:`queries` key (sql=None operators are excluded from both)."""
     from indicators_spark.queries import QUERIES
 
-    return {n: QUERIES[n].sql_text for n in _ordered_names()}
+    return {n: QUERIES[n].sql for n in _ordered_names()}

@@ -1,5 +1,6 @@
-"""Extension queries: text analysis, dedup, similarity search, event-time
-windows, sessionization, multimodal plumbing, and relational (TPC-H-ish)
+"""Extension family: text analysis, dedup, similarity search, event-time
+windows, sessionization, multimodal plumbing, lineitem indicator series
+(plain, halo and footer-hinted halo), and relational (TPC-H-ish)
 coverage — each with a DuckDB oracle where SQL can express it.
 
 These are the LLM-data-pipeline operators (BASELINE.json north star); the
@@ -13,19 +14,30 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .functions import dedup, multimodal, sampling, similarity, text
-from .queries import Query, _r, _register, _sql, _wcum, round4, slog
-from .sources.prices import load_table
-
-EMB_DIM = 64
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "documents")
-
-
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "embeddings")
+from ..functions import dedup, multimodal, sampling, similarity, text
+from ..sources.prices import (
+    LINEITEM_ORDER,
+    PRICES_SQL_LINEITEM,
+    load_table,
+    prices_from_lineitem,
+)
+from ._base import (
+    EMB_DIM,
+    Query,
+    _docs,
+    _dot_sql,
+    _emb,
+    _gated,
+    _norm_sql,
+    _r,
+    _register,
+    _sql,
+    _wcum,
+    _word,
+    _ws,
+    round4,
+    slog,
+)
 
 
 # --------------------------------------------------------------------- #
@@ -159,6 +171,7 @@ SELECT doc_id, md5(lt) AS fp_md5, fp_roll FROM r""",
     ),
 )
 
+
 # --------------------------------------------------------------------- #
 # Deduplication
 # --------------------------------------------------------------------- #
@@ -248,7 +261,7 @@ sig AS (
 def _minhash_ctes() -> str:
     """Signature chain + uncapped band-join ``cand`` CTE, shared by the
     pair query's oracle and the connected-components oracle
-    (queries_corpus.py)."""
+    (corpus family)."""
     bands = []
     for bi in range(4):
         c1, c2 = f"h{bi * 2 + 1}", f"h{bi * 2 + 2}"
@@ -277,6 +290,7 @@ _register(
         sql=_minhash_sql(),
     ),
 )
+
 
 #: Per-band-bucket cap exercised by the capped LSH queries (small enough
 #: to bind on the sf0.01 corpus, which has exact-duplicate groups).
@@ -386,29 +400,6 @@ _register(
 )
 
 
-# --------------------------------------------------------------------- #
-# Similarity search
-# --------------------------------------------------------------------- #
-
-
-def _dot_sql(a: str, b: str) -> str:
-    return " + ".join(
-        f"CAST({a}[{i}] AS DOUBLE) * CAST({b}[{i}] AS DOUBLE)"
-        for i in range(1, EMB_DIM + 1)
-    )
-
-
-def _norm_sql(a: str) -> str:
-    return (
-        "sqrt("
-        + " + ".join(
-            f"CAST({a}[{i}] AS DOUBLE) * CAST({a}[{i}] AS DOUBLE)"
-            for i in range(1, EMB_DIM + 1)
-        )
-        + ")"
-    )
-
-
 _register(
     "similarity_knn",
     Query(
@@ -456,13 +447,14 @@ SELECT ia, ib, {_r('cos', 'cos')} FROM p WHERE cos >= 0.4""",
     ),
 )
 
+
 def _lsh_bucket_sql(vec: str) -> str:
     """Replicate knn_lsh's hyperplane signature relationally: the SAME
     md5-derived ±1 planes (``_plane_signs``), the same left-associated
     projection sum, the same >0 sign test per bit — so even the
     approximation (which buckets collide) is bit-reproducible and the
     'approximate' path gets a full value-hash oracle."""
-    from .functions.similarity import _plane_signs
+    from ..functions.similarity import _plane_signs
 
     bits = []
     for m, row in enumerate(_plane_signs(8, EMB_DIM)):
@@ -505,19 +497,10 @@ SELECT qid, nid, rank, {_r('cos', 'cos')} FROM ranked WHERE rank <= 5""",
     ),
 )
 
+
 # IVF ANN: deterministic coarse centroids → the approximation itself is
 # reproducible, so this scale path gets a FULL value-hash oracle.
-_register(
-    "similarity_knn_ivf",
-    Query(
-        spark=lambda s, d: similarity.knn_ivf(
-            _emb(s, d),
-            _emb(s, d).filter(F.col("vec_id") < 10),
-            k=5,
-            n_centroids=16,
-            nprobe=4,
-        ).select("qid", "nid", "rank", round4(F.col("cos")).alias("cos")),
-        sql=f"""
+_KNN_IVF_SQL = f"""
 WITH n AS (
   SELECT vec_id, embedding, {_norm_sql('embedding')} AS nn FROM embeddings
 ),
@@ -554,9 +537,22 @@ ranked AS (
     row_number() OVER (PARTITION BY qid ORDER BY cos DESC, nid) AS rank
   FROM scored
 )
-SELECT qid, nid, rank, {_r('cos', 'cos')} FROM ranked WHERE rank <= 5""",
+SELECT qid, nid, rank, {_r('cos', 'cos')} FROM ranked WHERE rank <= 5"""
+
+_register(
+    "similarity_knn_ivf",
+    Query(
+        spark=lambda s, d: similarity.knn_ivf(
+            _emb(s, d),
+            _emb(s, d).filter(F.col("vec_id") < 10),
+            k=5,
+            n_centroids=16,
+            nprobe=4,
+        ).select("qid", "nid", "rank", round4(F.col("cos")).alias("cos")),
+        sql=_KNN_IVF_SQL,
     ),
 )
+
 
 # Product quantization: deterministic codebooks (lowest-id vectors, the
 # same stand-in knn_ivf uses for centroids) make both the encoding AND
@@ -763,6 +759,7 @@ _register(
     ),
 )
 
+
 # --------------------------------------------------------------------- #
 # Event-time windows / sessionization
 # --------------------------------------------------------------------- #
@@ -866,6 +863,7 @@ SELECT user_id,
 FROM s GROUP BY user_id, sid""",
     ),
 )
+
 
 # --------------------------------------------------------------------- #
 # Relational coverage (joins / aggregates / top-k / rollup)
@@ -1044,6 +1042,7 @@ FROM ranked WHERE rank <= 3""",
     ),
 )
 
+
 # --------------------------------------------------------------------- #
 # Multimodal plumbing (stubbed decode, real Arrow pipeline)
 # --------------------------------------------------------------------- #
@@ -1132,13 +1131,6 @@ GROUP BY fr.doc_id, fr.f""".format(
 # date-granular, heavily-tied order key (seq breaks ties on both sides).
 # --------------------------------------------------------------------- #
 
-from .queries import _gated, _sql, _wcum, _word, _ws  # noqa: E402
-from .sources.prices import (  # noqa: E402
-    LINEITEM_ORDER,
-    PRICES_SQL_LINEITEM,
-    prices_from_lineitem,
-)
-
 
 def _li_sql(body: str) -> str:
     return f"WITH {PRICES_SQL_LINEITEM.strip()}, {body}"
@@ -1146,7 +1138,7 @@ def _li_sql(body: str) -> str:
 
 def _li_query(op, outs):
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from .core import Indicators
+        from ..core import Indicators
 
         # order key extended with (close, volume): seq can tie (see
         # prices_from_lineitem)
@@ -1217,8 +1209,8 @@ def _li_rsi_halo(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the plain window form — the row count rides the bounds min/max scan
     for free, so bench-scale inputs pay no halo tax while ≥threshold inputs
     plan no single-task stage (pinned in tests/test_plans.py)."""
-    from . import kernels as K
-    from .scale import lag_auto, rolling_multi_auto
+    from .. import kernels as K
+    from ..scale import lag_auto, rolling_multi_auto
 
     order = ("timestamp", "seq", "close", "volume")
     # Minimal base projection — RSI reads only the close series, so skip
@@ -1236,7 +1228,7 @@ def _li_rsi_halo(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bounds + row count from parquet footer metadata (scale.py design
     # note): zero Spark jobs, shared by both halo passes and the size
     # dispatch — the faithful twin pays no pre-scan, so neither does this
-    from .scale import parquet_footer_stats
+    from ..scale import parquet_footer_stats
 
     n_rows, lo, hi = parquet_footer_stats(
         f"{sf_dir}/lineitem.parquet", "l_shipdate"
@@ -1272,7 +1264,7 @@ def _li_rsi_halo(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 4.9 s; 7.8M: 8.4 s vs 10.0 s warm) — consistent with the r12
     # fluent-session crossover of ≈16M rows/symbol.  l_returnflag has 3
     # values, so the total-row floor is 3× the per-key constant.
-    from .scale import PER_KEY_HALO_MIN_ROWS
+    from ..scale import PER_KEY_HALO_MIN_ROWS
 
     a = rolling_multi_auto(
         g,
@@ -1296,6 +1288,98 @@ _register(
     "lineitem_rsi_halo",
     Query(spark=_li_rsi_halo, sql=_LI_RSI_SQL),
 )
+
+
+# --------------------------------------------------------------------- #
+# Fluent halo session with catalog-metadata hints.  The existing halo
+# twins drive the EXPLICIT scale kernels (lag_auto /
+# rolling_multi_auto); this one drives the fluent ``Indicators(...,
+# n_rows=, order_bounds=)`` zero-pre-job engagement path end-to-end: row
+# count and order-key bounds come from parquet FOOTER statistics
+# (scale.parquet_footer_stats — the stand-in for Delta/Iceberg column
+# stats at 100 TB), so the session engages with no Spark job before the
+# first window stage (job-count pinned in
+# tests/test_plans_r12.py).  Symbol-less close series from lineitem (the
+# fluent session's primary shape): Cutler RSI-14, same expression family
+# as the green `lineitem_rsi`, windows global instead of
+# per-symbol.  Ties on (timestamp, seq, close, volume) are bit-identical
+# rows, so the lag among them is order-free on both engines.
+# --------------------------------------------------------------------- #
+
+HINTED_HALO_DEPTH = 256
+HINTED_HALO_BUCKETS = 32
+
+
+def _li_rsi_halo_hinted_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pyspark.sql import functions as F
+
+    from ..core import Indicators
+    from ..scale import parquet_footer_stats
+    from ..sources.prices import load_table
+
+    li = load_table(spark, sf_dir, "lineitem")
+    p = li.select(
+        F.col("l_shipdate").alias("timestamp"),
+        (F.col("l_orderkey") * 10 + F.col("l_linenumber")).alias("seq"),
+        F.col("l_extendedprice").alias("close"),
+        F.col("l_quantity").cast("double").alias("volume"),
+    )
+    n_rows, lo, hi = parquet_footer_stats(
+        f"{sf_dir}/lineitem.parquet", "l_shipdate"
+    )
+    hints = (
+        {"n_rows": n_rows, "order_bounds": (float(lo), float(hi))}
+        if lo is not None
+        else {}  # footer stats missing → the session probes (still exact)
+    )
+    ind = Indicators(
+        p,
+        order_by=("timestamp", "seq", "close", "volume"),
+        halo=True,
+        halo_buckets=HINTED_HALO_BUCKETS,
+        halo_depth=HINTED_HALO_DEPTH,
+        **hints,
+    )
+    ind.rsi(["close"], 14)
+    df = ind.collect()
+    return df.select("seq", round4(df["close_rsi_14"]).alias("close_rsi_14"))
+
+
+def _li_rsi_halo_hinted_sql() -> str:
+    from ..sources.prices import LINEITEM_ORDER
+
+    return f"""
+WITH prices AS (
+  SELECT l_shipdate AS "timestamp",
+    l_orderkey * 10 + l_linenumber AS seq,
+    CAST(l_extendedprice AS DOUBLE) AS close,
+    CAST(l_quantity AS DOUBLE) AS volume
+  FROM lineitem
+),
+d AS (
+  SELECT *, close - lag(close) OVER (ORDER BY {LINEITEM_ORDER}) AS delta
+  FROM prices
+),
+g AS (
+  SELECT "timestamp", seq, close, volume,
+    CASE WHEN delta IS NULL THEN NULL WHEN delta > 0 THEN delta ELSE 0 END AS gain,
+    CASE WHEN delta IS NULL THEN NULL WHEN delta < 0 THEN abs(delta) ELSE 0 END AS loss
+  FROM d
+),
+a AS (
+  SELECT seq,
+    {_gated('avg(gain)', 'gain', 14, _ws(14, False, order=LINEITEM_ORDER))} AS ag,
+    {_gated('avg(loss)', 'loss', 14, _ws(14, False, order=LINEITEM_ORDER))} AS al
+  FROM g
+)
+SELECT seq, {_r('100 - 100/(1 + ag/NULLIF(al, 0))', 'close_rsi_14')} FROM a"""
+
+
+_register(
+    "lineitem_rsi_halo_hinted",
+    Query(spark=_li_rsi_halo_hinted_spark, sql=_li_rsi_halo_hinted_sql()),
+)
+
 
 _register(
     "lineitem_donchian",
@@ -1322,13 +1406,14 @@ FROM t"""
 
 
 # --------------------------------------------------------------------- #
-# fill_null strategy coverage (backward + mean; forward is in queries.py)
+# fill_null strategy coverage (backward + mean; forward is in the
+# indicators family)
 # --------------------------------------------------------------------- #
 
 
 def _fill_null_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .core import Indicators
-    from .sources.prices import prices_from_events
+    from ..core import Indicators
+    from ..sources.prices import prices_from_events
 
     p = prices_from_events(spark, sf_dir).withColumns(
         {
@@ -1350,14 +1435,11 @@ def _fill_null_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
         round4(df["zero_filled"]).alias("zero_filled"),
     )
 
-
-from .queries import _sql as _sql_ev  # noqa: E402
-
 _register(
     "fill_null_strategies",
     Query(
         spark=_fill_null_multi,
-        sql=_sql_ev(
+        sql=_sql(
             f"""g AS (
   SELECT symbol, seq, "timestamp",
     CASE WHEN seq % 5 != 0 THEN close END AS gappy
@@ -1549,8 +1631,8 @@ def _range_join_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     range_join): every 500th row opens a 100-seq interval; points aggregate
     per containing interval.  The oracle is the PLAIN non-equi join — the
     binning is a pure physical rewrite."""
-    from .functions.joins import range_join
-    from .sources.prices import prices_from_events
+    from ..functions.joins import range_join
+    from ..sources.prices import prices_from_events
 
     p = prices_from_events(spark, sf_dir)
     points = p.select("symbol", "seq", "close")
@@ -1577,7 +1659,7 @@ _register(
     "range_join_intervals",
     Query(
         spark=_range_join_query,
-        sql=_sql_ev(
+        sql=_sql(
             f"""i AS (
   SELECT DISTINCT symbol, seq AS i_start, seq + 99 AS i_end
   FROM prices WHERE seq % 500 = 0
@@ -1602,8 +1684,8 @@ FROM j GROUP BY symbol, i_start"""
 
 def _per_symbol_query(op, outs):
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from .core import Indicators
-        from .sources.prices import prices_from_events
+        from ..core import Indicators
+        from ..sources.prices import prices_from_events
 
         ind = Indicators(
             prices_from_events(spark, sf_dir),
@@ -1617,25 +1699,19 @@ def _per_symbol_query(op, outs):
 
     return fn
 
-
-from .queries import _gated as _g  # noqa: E402
-from .queries import _sql as _s  # noqa: E402
-from .queries import _word as _wo  # noqa: E402
-from .queries import _ws as _w  # noqa: E402
-
 _register(
     "atr_per_symbol",
     Query(
         spark=_per_symbol_query(lambda i: i.atr(14), ["atr"]),
-        sql=_s(
+        sql=_sql(
             f"""t AS (
   SELECT symbol, seq, "timestamp",
     greatest(high - low,
-             abs(high - lag(close) OVER {_wo(True)}),
-             abs(low  - lag(close) OVER {_wo(True)})) AS tr
+             abs(high - lag(close) OVER {_word(True)}),
+             abs(low  - lag(close) OVER {_word(True)})) AS tr
   FROM prices
 )
-SELECT symbol, seq, {_r(_g('avg(tr)', 'tr', 14, _w(14, True)), 'atr')} FROM t"""
+SELECT symbol, seq, {_r(_gated('avg(tr)', 'tr', 14, _ws(14, True)), 'atr')} FROM t"""
         ),
     ),
 )
@@ -1644,7 +1720,7 @@ _register(
     "vwap_per_symbol",
     Query(
         spark=_per_symbol_query(lambda i: i.vwap(), ["vwap"]),
-        sql=_s(
+        sql=_sql(
             f"""t AS (
   SELECT symbol, seq,
     sum((high + low + close)/3 * volume)
@@ -1674,7 +1750,7 @@ _register(
         ),
         # exact recursive replay: sc is pure window SQL, the variable-alpha
         # recurrence y' = y + sc*(x - y) anchors at rn = er_period + 1
-        sql=_s(
+        sql=_sql(
             f"""{{base}},
 d AS (
   SELECT symbol, seq, "timestamp", close, rn,
@@ -1684,7 +1760,7 @@ d AS (
 s1 AS (
   SELECT symbol, seq, rn, close,
     abs(close - lag(close, 10) OVER (PARTITION BY symbol ORDER BY rn))
-      / NULLIF({_g('sum(ad)', 'ad', 10, '(PARTITION BY symbol ORDER BY rn ROWS BETWEEN 9 PRECEDING AND CURRENT ROW)')}, 0)
+      / NULLIF({_gated('sum(ad)', 'ad', 10, '(PARTITION BY symbol ORDER BY rn ROWS BETWEEN 9 PRECEDING AND CURRENT ROW)')}, 0)
       AS er
   FROM d
 ),
@@ -1717,9 +1793,10 @@ SELECT symbol, seq, {_r('y', 'close_kama_10')} FROM out""".format(
     ),
 )
 
+
 def _psar_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .core import Indicators
-    from .sources.prices import prices_from_events
+    from ..core import Indicators
+    from ..sources.prices import prices_from_events
 
     # seq<2500 subset: the oracle replays the trend-flip machine row-by-row
     # in a recursive CTE, so its cost ∝ recursion depth (same discipline as
@@ -1733,8 +1810,6 @@ def _psar_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _psar_sql() -> str:
-    from .queries import _sql
-
     order = '"timestamp", seq'
     # s2 = the accelerated-and-clamped SAR candidate, before flip checks —
     # exactly the Python scan's `sar = min/max(sar + af*(ep-sar), ...)`
@@ -1802,8 +1877,8 @@ _register(
 
 
 def _asof_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .functions.joins import asof_join
-    from .sources.prices import prices_from_events
+    from ..functions.joins import asof_join
+    from ..sources.prices import prices_from_events
 
     p = prices_from_events(spark, sf_dir)
     left = p.select("symbol", "timestamp", "seq", "close")
@@ -1821,7 +1896,7 @@ _register(
     "asof_join",
     Query(
         spark=_asof_query,
-        sql=_s(
+        sql=_sql(
             f"""l AS (
   SELECT symbol, "timestamp" AS ts, seq, close FROM prices
 ),
@@ -1839,7 +1914,7 @@ SELECT symbol, seq, {_r('snap', 'snap_right')} FROM j"""
 
 
 def _salted_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .functions.joins import salted_join
+    from ..functions.joins import salted_join
 
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_quantity", "l_extendedprice"
@@ -1945,7 +2020,7 @@ FROM lineitem GROUP BY l_returnflag""",
 
 
 def _resample_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .sources.prices import prices_from_events
+    from ..sources.prices import prices_from_events
 
     p = prices_from_events(spark, sf_dir)
     w = F.window(F.col("timestamp"), "1 hour").alias("w")
@@ -1973,7 +2048,7 @@ _register(
     "resample_ohlcv_1h",
     Query(
         spark=_resample_query,
-        sql=_s(
+        sql=_sql(
             f"""b AS (
   SELECT CAST(epoch(time_bucket(INTERVAL '1 hour', "timestamp")) AS BIGINT) AS bar_start,
     symbol,
@@ -1995,8 +2070,8 @@ FROM b"""
 
 
 def _rolling_corr_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from . import kernels as K
-    from .sources.prices import prices_from_events
+    from .. import kernels as K
+    from ..sources.prices import prices_from_events
 
     p = prices_from_events(spark, sf_dir)
     w = K.w_rows(20, ("symbol",), ("timestamp", "seq"))
@@ -2015,10 +2090,10 @@ _register(
     "rolling_corr",
     Query(
         spark=_rolling_corr_query,
-        sql=_s(
+        sql=_sql(
             f"""c AS (
   SELECT symbol, seq,
-    {_g('corr(close, volume)', 'close', 20, _w(20, True))} AS v
+    {_gated('corr(close, volume)', 'close', 20, _ws(20, True))} AS v
   FROM prices
 )
 SELECT symbol, seq, {_r('v', 'corr_close_vol_20')} FROM c"""
@@ -2028,8 +2103,8 @@ SELECT symbol, seq, {_r('v', 'corr_close_vol_20')} FROM c"""
 
 
 def _zscore_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from . import kernels as K
-    from .sources.prices import prices_from_events
+    from .. import kernels as K
+    from ..sources.prices import prices_from_events
 
     p = prices_from_events(spark, sf_dir)
     w = K.w_rows(20, ("symbol",), ("timestamp", "seq"))
@@ -2044,11 +2119,11 @@ _register(
     "zscore",
     Query(
         spark=_zscore_query,
-        sql=_s(
+        sql=_sql(
             f"""c AS (
   SELECT symbol, seq,
-    (close - {_g('avg(close)', 'close', 20, _w(20, True))})
-      / NULLIF({_g('stddev_samp(close)', 'close', 20, _w(20, True))}, 0) AS v
+    (close - {_gated('avg(close)', 'close', 20, _ws(20, True))})
+      / NULLIF({_gated('stddev_samp(close)', 'close', 20, _ws(20, True))}, 0) AS v
   FROM prices
 )
 SELECT symbol, seq, {_r('v', 'zscore_20')} FROM c"""
@@ -2063,7 +2138,7 @@ SELECT symbol, seq, {_r('v', 'zscore_20')} FROM c"""
 
 
 def _merge_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .functions.merge import merge_upsert
+    from ..functions.merge import merge_upsert
 
     cust = load_table(spark, sf_dir, "customer").withColumn(
         "updated_at", F.lit(0)
@@ -2104,7 +2179,7 @@ SELECT c_custkey, {_r('c_acctbal', 'c_acctbal')}, updated_at FROM merged""",
 
 
 def _scd2_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .functions.merge import scd2
+    from ..functions.merge import scd2
 
     # change log: each customer's orders as balance-history events
     orders = load_table(spark, sf_dir, "orders")
@@ -2315,7 +2390,7 @@ def _li_donchian_halo(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``lineitem_rsi_halo``; scale.py).  Size-dispatched like
     ``lineitem_rsi_halo``: below HALO_MIN_ROWS the plain window form wins
     and the kernel falls back to it."""
-    from .scale import rolling_multi_auto
+    from ..scale import rolling_multi_auto
 
     order = ("timestamp", "seq", "close", "volume")
     li = load_table(spark, sf_dir, "lineitem")
@@ -2343,7 +2418,7 @@ def _li_donchian_halo(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # row count + bucket bounds from parquet footers — no pre-scan job at
     # all (falls back to the kernel's own min/max scan if stats missing)
-    from .scale import parquet_footer_stats
+    from ..scale import parquet_footer_stats
 
     n_rows, lo, hi = parquet_footer_stats(
         f"{sf_dir}/lineitem.parquet", "l_shipdate"
@@ -2400,10 +2475,9 @@ def _vwap_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale path (no single-task unbounded window).  Compared in signed-log
     domain because bucketed summation legitimately reassociates doubles
     (≈1e-12 relative); a unit test pins the equivalence tolerance."""
-    from .kernels import safe_div
-    from .queries import slog
-    from .scale import global_cum_sum
-    from .sources.prices import prices_from_events
+    from ..kernels import safe_div
+    from ..scale import global_cum_sum
+    from ..sources.prices import prices_from_events
 
     p = prices_from_events(spark, sf_dir).withColumns(
         {
@@ -2644,9 +2718,9 @@ def _obv_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared bounds scan feeds both kernels.  The increments are
     integer-valued doubles (±volume), so bucketed summation is EXACT
     (< 2⁵³) and the compare needs no signed-log domain."""
-    from .kernels import when_nullsafe
-    from .scale import global_cum_sum, halo_lag
-    from .sources.prices import prices_from_events
+    from ..kernels import when_nullsafe
+    from ..scale import global_cum_sum, halo_lag
+    from ..sources.prices import prices_from_events
 
     p = prices_from_events(spark, sf_dir).withColumn(
         "_bkey", F.unix_timestamp("timestamp")

@@ -1,164 +1,45 @@
-"""Driver-facing query catalog: one named query per implemented operator
-(SURVEY.md §2), each paired with an ANSI-SQL oracle DuckDB can run on the
-same parquet tables.
+"""Indicator family: the fluent ``Indicators`` operators on the
+``prices`` derivation, each checked against a windowed DuckDB oracle.
 
-Conventions shared by BOTH sides (the correctness contract):
+EWM-family queries use *exact* recursive-CTE oracles.  EWMs are
+first-order linear recurrences, so DuckDB can replay them exactly:
 
-* Input is the deterministic ``prices`` derivation from ``events``
-  (sources/prices.py) — bit-identical doubles on both engines.
-* Output rows are keyed by ``(symbol, seq)`` — exact string/int64 values —
-  never by timestamps (events.ts is nanosecond-precision; Spark timestamps
-  are µs, so timestamps never appear in hashed output).
-* Every float output is ``ROUND(x, 4)`` on both sides.  Identical input
-  doubles + identical IEEE expression order ⇒ identical doubles; rounding
-  only guards the handful of places where aggregation order may differ
-  (windowed sums/avgs computed by different runtimes).
-* ÷0 → NULL on both sides (Spark ``nullif`` / SQL ``NULLIF``), null
-  condition in CASE → NULL (explicit ``delta IS NULL`` arms).
+* adjust=False (the ``ema()`` flavor):  ``e' = (1-a)·e + a·x``
+* adjust=True  (Polars-default span):   ``e = num/den``,
+  ``num' = x + (1-a)·num``, ``den' = 1 + (1-a)·den``
 
-EWM-family oracles use exact recursive CTEs (the recurrences
-``y=(1-a)y₁+ax`` and ``num/den`` for adjust=True) — see ``_SQL_EMA`` etc.
+Verified against pandas to ≤2e-15 relative; the shared quantizer's 1e-9
+bias absorbs the residual ulps.  Chained smoothings (macd signal, trix's
+triple EMA, tsi's double smoothing) carry several accumulators through ONE
+recursion — same shape as the engine's single-shuffle EWM programs.
+
+Cost control: a recursive CTE steps once per row rank, so the reference's
+*global* (un-partitioned) EWM ops — mass_index / keltner / tsi / stc —
+are checked on a deterministic ``seq < 2500`` subset (mirrored on both
+sides); per-symbol ops recurse in parallel across symbols and use the full
+table.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
-from dataclasses import dataclass
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .core import Indicators
-from .sources.prices import PRICES_SQL_EVENTS, prices_from_events
-
-ROUND = 4
-ORDER = '"timestamp", seq'
-
-
-@dataclass(frozen=True)
-class Query:
-    spark: Callable[[SparkSession, str], DataFrame]
-    # str, or a zero-arg callable resolved at access time (for
-    # registrations whose SQL generator lives in another queries_r*
-    # module — calling it at registration time would re-enter a
-    # partially-initialized module when THAT module is the import entry
-    # point); None → driver records a rows-only check
-    sql: str | Callable[[], str] | None
-
-    @property
-    def sql_text(self) -> str | None:
-        return self.sql() if callable(self.sql) else self.sql
-
-
-# --------------------------------------------------------------------- #
-# Spark-side scaffolding
-# --------------------------------------------------------------------- #
-
-
-def _ind_query(
-    op: Callable[[Indicators], object],
-    outs: list[str],
-    log_outs: tuple[str, ...] = (),
-    pre: Callable[[DataFrame], DataFrame] | None = None,
-):
-    """Build a (spark, sf_dir) → DataFrame callable: prices → op → select
-    (symbol, seq, rounded outputs).  Columns in ``log_outs`` are compared in
-    the signed-log domain (see :func:`slog`); ``pre`` filters/transforms the
-    prices input (mirrored in the oracle's prices CTE)."""
-
-    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        p = prices_from_events(spark, sf_dir)
-        if pre is not None:
-            p = pre(p)
-        ind = Indicators(p, order_by=("timestamp", "seq"))
-        op(ind)
-        df = ind.collect()
-        sel = [df["symbol"], df["seq"]] + [
-            round4(slog(df[c]) if c in log_outs else df[c]).alias(c) for c in outs
-        ]
-        return df.select(*sel)
-
-    return fn
-
-
-def round4(c):
-    """Quantize a double identically to the oracle's ``_r`` helper.
-
-    Plain ROUND differs between engines at exact .xxxx5 boundaries (Spark
-    rounds the shortest decimal repr HALF_UP; DuckDB rounds the binary
-    value), and the test data's 2-decimal inputs hit those boundaries
-    constantly.  ``floor(x*10⁴ + 0.5)/10⁴`` is the same IEEE op sequence on
-    both engines ⇒ bit-identical results.  The extra 1e-9 bias breaks exact
-    half-boundary ties consistently when the engines' window aggregates
-    differ by an ulp (different summation order).  NaN → NULL (both sides
-    emit no NaNs by the ÷0→NULL policy, this is a belt-and-braces guard)."""
-    c = F.when(~F.isnan(c), c)
-    return F.floor(c * 10000 + F.lit(0.500000001)).cast("double") / 10000
-
-
-def slog(c):
-    """Signed-log compression for large-magnitude cumulative outputs:
-    ``sign(x) * ln(1+|x|)``.  Cumulative sums of non-integer doubles pick up
-    summation-order differences between engines that grow with magnitude;
-    comparing in the log domain makes the check scale-relative (~1e-15)
-    instead of absolute.  The oracle applies the same transform."""
-    return F.signum(c) * F.log1p(F.abs(c))
-
-
-# --------------------------------------------------------------------- #
-# SQL-side scaffolding (DuckDB dialect, shared ANSI core)
-# --------------------------------------------------------------------- #
-
-
-def _ws(n: int, part: bool = True, order: str | None = None) -> str:
-    """Rolling window frame text (trailing n rows)."""
-    p = "PARTITION BY symbol " if part else ""
-    return (
-        f"({p}ORDER BY {order or ORDER} "
-        f"ROWS BETWEEN {n - 1} PRECEDING AND CURRENT ROW)"
-    )
-
-
-def _word(part: bool = True, order: str | None = None) -> str:
-    p = "PARTITION BY symbol " if part else ""
-    return f"({p}ORDER BY {order or ORDER})"
-
-
-def _wcum(part: bool = True, order: str | None = None) -> str:
-    p = "PARTITION BY symbol " if part else ""
-    return (
-        f"({p}ORDER BY {order or ORDER} "
-        f"ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
-    )
-
-
-def _gated(agg: str, gate_col: str, n: int, w: str) -> str:
-    """Min-samples gate: NULL until the frame holds n non-null values."""
-    return f"CASE WHEN count({gate_col}) OVER {w} >= {n} THEN {agg} OVER {w} END"
-
-
-def _sql(body: str, recursive: bool = False) -> str:
-    kw = "WITH RECURSIVE" if recursive else "WITH"
-    return f"{kw} {PRICES_SQL_EVENTS.strip()}, {body}"
-
-
-def _r(expr: str, alias: str) -> str:
-    """Quantizer matching the Spark side's :func:`round4` bit-for-bit."""
-    return (
-        f'CAST(floor(({expr}) * 10000 + 0.500000001) AS DOUBLE) / 10000 AS "{alias}"'
-    )
-
-
-# --------------------------------------------------------------------- #
-# Query catalog
-# --------------------------------------------------------------------- #
-
-QUERIES: dict[str, Query] = {}
-
-
-def _register(name: str, q: Query) -> None:
-    assert name not in QUERIES, name
-    QUERIES[name] = q
+from ..core import Indicators
+from ..sources.prices import prices_from_events
+from ._base import (
+    ORDER,
+    Query,
+    _gated,
+    _ind_query,
+    _r,
+    _register,
+    _sql,
+    _wcum,
+    _word,
+    _ws,
+    round4,
+)
 
 
 # ---- sma ------------------------------------------------------------- #
@@ -175,6 +56,7 @@ SELECT symbol, seq, {_r('v', 'close_sma_20')} FROM out"""
         ),
     ),
 )
+
 
 # ---- rsi (global delta, per-symbol means — faithful mix) -------------- #
 _register(
@@ -202,6 +84,7 @@ SELECT symbol, seq, {_r('100 - 100/(1 + ag/NULLIF(al, 0))', 'close_rsi_14')} FRO
     ),
 )
 
+
 # ---- roc (global) ------------------------------------------------------ #
 _register(
     "roc",
@@ -218,6 +101,7 @@ SELECT symbol, seq, {_r('v', 'close_roc_10')} FROM d"""
         ),
     ),
 )
+
 
 # ---- daily_return / daily_log_return (per symbol) ---------------------- #
 _register(
@@ -252,6 +136,7 @@ SELECT symbol, seq,
     ),
 )
 
+
 # ---- bollinger bands (per symbol; name typo preserved) ----------------- #
 _register(
     "bollinger_bands",
@@ -275,6 +160,7 @@ FROM b"""
     ),
 )
 
+
 # ---- atr (global) ------------------------------------------------------ #
 _SQL_TR_ATR = f"""t AS (
   SELECT symbol, seq, "timestamp",
@@ -294,6 +180,7 @@ SELECT symbol, seq, {_r(_gated('avg(tr)', 'tr', 14, _ws(14, False)), 'atr')} FRO
         ),
     ),
 )
+
 
 # ---- stochastic oscillator (global, as-written numerator) -------------- #
 _register(
@@ -319,6 +206,7 @@ SELECT symbol, seq,
     ),
 )
 
+
 # ---- williams %R (global; verbatim name) -------------------------------- #
 _register(
     "williams_ri",
@@ -336,6 +224,7 @@ SELECT symbol, seq,
         ),
     ),
 )
+
 
 # ---- donchian channel (global) ------------------------------------------ #
 _register(
@@ -361,6 +250,7 @@ FROM t"""
     ),
 )
 
+
 # ---- awesome oscillator (per symbol) ------------------------------------- #
 _register(
     "awesome_oscillator",
@@ -380,6 +270,7 @@ SELECT symbol, seq, {_r('s5 - s34', 'ao_5_34')} FROM t"""
         ),
     ),
 )
+
 
 # ---- vwap / vpt / obv (global cumulative) --------------------------------- #
 _register(
@@ -439,6 +330,7 @@ SELECT symbol, seq, {_r(f'sum(chg) OVER {_wcum(False)}', 'obv')} FROM o"""
     ),
 )
 
+
 # ---- force index / ease of movement / nvi (global lags) ------------------- #
 _register(
     "force_index",
@@ -494,6 +386,7 @@ FROM c"""
     ),
 )
 
+
 # ---- chaikin money flow (global) ------------------------------------------ #
 _register(
     "chaikin_money_flow",
@@ -515,6 +408,7 @@ SELECT symbol, seq, {_r('num / NULLIF(den, 0)', 'cmf_14')} FROM t"""
         ),
     ),
 )
+
 
 # ---- cci (global; two-stage mean deviation) -------------------------------- #
 _register(
@@ -543,6 +437,7 @@ SELECT symbol, seq, {_r('(tp - sma_tp) / NULLIF(0.015 * md, 0)', 'CCI')} FROM s3
     ),
 )
 
+
 # ---- dpo (global) ----------------------------------------------------------- #
 _register(
     "dpo",
@@ -561,6 +456,7 @@ SELECT symbol, seq, {_r('v', 'close_dpo_20')} FROM t"""
         ),
     ),
 )
+
 
 # ---- adx (global; as-written TR) --------------------------------------------- #
 _register(
@@ -606,6 +502,7 @@ SELECT symbol, seq, {_r(_gated('avg(dx)', 'dx', 14, _ws(14, False)), 'adx')} FRO
     ),
 )
 
+
 # ---- vortex (global; verbatim +VI/-VI names) ----------------------------------- #
 _register(
     "vortex",
@@ -635,6 +532,7 @@ FROM s"""
         ),
     ),
 )
+
 
 # ---- ultimate oscillator (global; as-written TR; null-as-0 sum) ----------------- #
 _register(
@@ -668,6 +566,7 @@ FROM s"""
         ),
     ),
 )
+
 
 # ---- ichimoku (global; literal-26 + look-ahead quirks) --------------------------- #
 _register(
@@ -705,6 +604,7 @@ FROM t"""
         ),
     ),
 )
+
 
 # ---- mfi / adi (global; dead-code specs) ------------------------------------------ #
 _register(
@@ -756,6 +656,7 @@ SELECT symbol, seq, {_r('sign(v) * ln(1 + abs(v))', 'ADI')} FROM c"""
     ),
 )
 
+
 # ---- ulcer index (global; fixed-vs-reference) -------------------------------------- #
 _register(
     "unlcer_index",
@@ -781,6 +682,7 @@ FROM d"""
     ),
 )
 
+
 # ---- wma (per symbol; dead-code spec weights 1..n) ---------------------------------- #
 _register(
     "wma",
@@ -797,6 +699,7 @@ SELECT symbol, seq, {_r('v', 'close_wma_10')} FROM t"""
         ),
     ),
 )
+
 
 # ---- aroon (global; dead-code spec, first-occurrence argmax) ------------------------- #
 _register(
@@ -824,6 +727,7 @@ FROM t"""
         ),
     ),
 )
+
 
 # ---- kst (global; dead-code spec) ----------------------------------------------------- #
 _KST_TERMS = []
@@ -853,6 +757,7 @@ SELECT symbol, seq, {_r('v', 'KST')} FROM s"""
     ),
 )
 
+
 # ---- stochastic_rsi (faithful: max-max denominator ⇒ all-NULL output) ------------------ #
 _register(
     "stochastic_rsi",
@@ -869,6 +774,7 @@ SELECT * FROM out"""
         ),
     ),
 )
+
 
 # ---- stochastic_rsi_fixed (extension; full pipeline oracle) ----------------------------- #
 _register(
@@ -907,6 +813,7 @@ SELECT symbol, seq,
     ),
 )
 
+
 # ---- fill_null (forward fill on a column with synthesized nulls) ------------------------- #
 
 
@@ -938,20 +845,423 @@ FROM g"""
 )
 
 
-# EWM-family queries (recursive-CTE oracles) register themselves on import.
-from . import queries_ewm  # noqa: E402,F401  (registration side-effect)
-from . import queries_ext  # noqa: E402,F401  (registration side-effect)
-from . import queries_rel  # noqa: E402,F401  (registration side-effect)
-from . import queries_rel2  # noqa: E402,F401  (registration side-effect)
-from . import queries_analytic  # noqa: E402,F401  (registration side-effect)
-from . import queries_pipeline  # noqa: E402,F401  (registration side-effect)
-from . import queries_corpus  # noqa: E402,F401  (registration side-effect)
-from . import queries_ml  # noqa: E402,F401  (registration side-effect)
-from . import queries_r5  # noqa: E402,F401  (registration side-effect)
-from . import queries_r7  # noqa: E402,F401  (registration side-effect)
-from . import queries_r8  # noqa: E402,F401  (registration side-effect)
-from . import queries_r9  # noqa: E402,F401  (registration side-effect)
-from . import queries_r10  # noqa: E402,F401  (registration side-effect)
-from . import queries_r11  # noqa: E402,F401  (registration side-effect)
-from . import queries_r12  # noqa: E402,F401  (registration side-effect)
-from . import queries_r13  # noqa: E402,F401  (registration side-effect)
+# --------------------------------------------------------------------- #
+# EWM family: exact recursive-CTE oracles (see the module docstring)
+# --------------------------------------------------------------------- #
+
+# MATERIALIZED: DuckDB re-evaluates plain CTEs on every recursive-CTE
+# iteration, so each EWM replay level re-ran the window-over-scan
+# (~22-27s per oracle); materializing turns the per-level join into a
+# lookup (~3s). Results are identical — purely an oracle-cost fix.
+_BASE_SYM = f"""base AS MATERIALIZED (
+  SELECT symbol, seq, "timestamp", close, volume, high, low,
+         row_number() OVER (PARTITION BY symbol ORDER BY {ORDER}) AS rn
+  FROM prices
+)"""
+
+
+#: Global-op subset (recursion cost ∝ max row rank).
+_CUT = 2500
+_BASE_GLOB = f"""sub AS MATERIALIZED (
+  SELECT * FROM prices WHERE seq < {_CUT}
+),
+base AS MATERIALIZED (
+  SELECT symbol, seq, "timestamp", close, volume, high, low,
+         row_number() OVER (ORDER BY {ORDER}) AS rn
+  FROM sub
+)"""
+
+
+def _a(span: int) -> str:
+    """SQL literal for alpha=2/(span+1) — same IEEE divide as Python/pandas."""
+    return f"(2.0/{span + 1})"
+
+
+def _glob_pre(df):
+    return df.filter(F.col("seq") < _CUT)
+
+
+# ---- ema (per symbol, adjust=False) ------------------------------------- #
+_register(
+    "ema",
+    Query(
+        spark=_ind_query(lambda i: i.ema(["close"], 20), ["close_ema_20"]),
+        sql=_sql(
+            f"""{_BASE_SYM},
+rec AS (
+  SELECT symbol, seq, rn, close AS x, close AS e FROM base WHERE rn = 1
+  UNION ALL
+  SELECT b.symbol, b.seq, b.rn, b.close,
+         (1 - {_a(20)})*r.e + {_a(20)}*b.close
+  FROM base b JOIN rec r ON b.symbol = r.symbol AND b.rn = r.rn + 1
+)
+SELECT symbol, seq, {_r('e', 'close_ema_20')} FROM rec""",
+            recursive=True,
+        ),
+    ),
+)
+
+
+# ---- macd (per symbol; only the signal line survives) --------------------- #
+_ES, _EL, _SG = _a(12), _a(26), _a(9)
+_ES_STEP = f"(1 - {_ES})*r.es + {_ES}*b.close"
+_EL_STEP = f"(1 - {_EL})*r.el + {_EL}*b.close"
+_register(
+    "macd",
+    Query(
+        spark=_ind_query(lambda i: i.macd(["close"]), ["close_signal_line"]),
+        sql=_sql(
+            f"""{_BASE_SYM},
+rec AS (
+  SELECT symbol, seq, rn, close, close AS es, close AS el,
+         CAST(0.0 AS DOUBLE) AS sig
+  FROM base WHERE rn = 1
+  UNION ALL
+  SELECT b.symbol, b.seq, b.rn, b.close,
+         {_ES_STEP},
+         {_EL_STEP},
+         (1 - {_SG})*r.sig + {_SG}*(({_ES_STEP}) - ({_EL_STEP}))
+  FROM base b JOIN rec r ON b.symbol = r.symbol AND b.rn = r.rn + 1
+)
+SELECT symbol, seq, {_r('sig', 'close_signal_line')} FROM rec""",
+            recursive=True,
+        ),
+    ),
+)
+
+
+# ---- ppo / pvo (per symbol; line + signal + histogram) --------------------- #
+def _ppo_sql(col: str, name: str) -> str:
+    es, el, sg = _a(12), _a(26), _a(9)
+    es_step = f"(1 - {es})*r.es + {es}*b.{col}"
+    el_step = f"(1 - {el})*r.el + {el}*b.{col}"
+    line_step = f"(({es_step}) - ({el_step})) / NULLIF(({el_step}), 0) * 100"
+    return _sql(
+        f"""{_BASE_SYM},
+rec AS (
+  SELECT symbol, seq, rn, {col} AS x, {col} AS es, {col} AS el,
+         CAST(0.0 AS DOUBLE) AS line, CAST(0.0 AS DOUBLE) AS sig
+  FROM base WHERE rn = 1
+  UNION ALL
+  SELECT b.symbol, b.seq, b.rn, b.{col},
+         {es_step},
+         {el_step},
+         {line_step},
+         (1 - {sg})*r.sig + {sg}*({line_step})
+  FROM base b JOIN rec r ON b.symbol = r.symbol AND b.rn = r.rn + 1
+)
+SELECT symbol, seq,
+  {_r('line', f'{name}_12_26')},
+  {_r('sig', f'{name}_signal_12_26')},
+  {_r('line - sig', f'{name}_histogram_12_26')}
+FROM rec""",
+        recursive=True,
+    )
+
+
+_register(
+    "ppo",
+    Query(
+        spark=_ind_query(
+            lambda i: i.ppo(),
+            ["ppo_12_26", "ppo_signal_12_26", "ppo_histogram_12_26"],
+        ),
+        sql=_ppo_sql("close", "ppo"),
+    ),
+)
+
+_register(
+    "pvo",
+    Query(
+        spark=_ind_query(
+            lambda i: i.pvo(),
+            ["pvo_12_26", "pvo_signal_12_26", "pvo_histogram_12_26"],
+        ),
+        sql=_ppo_sql("volume", "pvo"),
+    ),
+)
+
+
+# ---- trix (per-symbol triple EMA, global pct_change) ------------------------ #
+_AT = _a(15)
+_E1 = f"(1 - {_AT})*r.e1 + {_AT}*b.close"
+_E2 = f"(1 - {_AT})*r.e2 + {_AT}*({_E1})"
+_E3 = f"(1 - {_AT})*r.e3 + {_AT}*({_E2})"
+_register(
+    "trix",
+    Query(
+        spark=_ind_query(lambda i: i.trix(15), ["trix_15"]),
+        sql=_sql(
+            f"""{_BASE_SYM},
+rec AS (
+  SELECT symbol, seq, "timestamp", rn, close,
+         close AS e1, close AS e2, close AS e3
+  FROM base WHERE rn = 1
+  UNION ALL
+  SELECT b.symbol, b.seq, b."timestamp", b.rn, b.close,
+         {_E1}, {_E2}, {_E3}
+  FROM base b JOIN rec r ON b.symbol = r.symbol AND b.rn = r.rn + 1
+),
+t AS (
+  SELECT symbol, seq,
+    (e3 - lag(e3) OVER {_word(False)}) / NULLIF(lag(e3) OVER {_word(False)}, 0) AS v
+  FROM rec
+)
+SELECT symbol, seq, {_r('v', 'trix_15')} FROM t""",
+            recursive=True,
+        ),
+    ),
+)
+
+
+# ---- mass_index (GLOBAL span-EWM ×2; seq<2500 subset) ------------------------ #
+_A9 = _a(9)
+_N1 = f"(b.high - b.low) + (1 - {_A9})*r.n1"
+_D1 = f"1 + (1 - {_A9})*r.d1"
+_N2 = f"(({_N1})/({_D1})) + (1 - {_A9})*r.n2"
+_D2 = f"1 + (1 - {_A9})*r.d2"
+_register(
+    "mass_index",
+    Query(
+        spark=_ind_query(
+            lambda i: i.mass_index(9, 26), ["mass_index_9_26"], pre=_glob_pre
+        ),
+        sql=_sql(
+            f"""{_BASE_GLOB},
+rec AS (
+  SELECT symbol, seq, "timestamp", rn, high, low,
+         high - low AS n1, CAST(1.0 AS DOUBLE) AS d1,
+         high - low AS n2, CAST(1.0 AS DOUBLE) AS d2
+  FROM base WHERE rn = 1
+  UNION ALL
+  SELECT b.symbol, b.seq, b."timestamp", b.rn, b.high, b.low,
+         {_N1}, {_D1}, {_N2}, {_D2}
+  FROM base b JOIN rec r ON b.rn = r.rn + 1
+),
+ratio AS (
+  SELECT symbol, seq, "timestamp",
+    (n1/d1) / NULLIF(n2/d2, 0) AS er
+  FROM rec
+)
+SELECT symbol, seq,
+  {_r(_gated('sum(er)', 'er', 26, _ws(26, False)), 'mass_index_9_26')}
+FROM ratio""",
+            recursive=True,
+        ),
+    ),
+)
+
+
+# ---- keltner channel (GLOBAL span-EWM middle band; seq<2500 subset) ----------- #
+_A20 = _a(20)
+_register(
+    "keltner_channel",
+    Query(
+        spark=_ind_query(
+            lambda i: i.keltner_channel(20, 14, 2),
+            ["KC_Upper_Band_20_14_2", "KC_Lower_Band_20_14_2"],
+            pre=_glob_pre,
+        ),
+        sql=_sql(
+            f"""{_BASE_GLOB},
+rec AS (
+  SELECT symbol, seq, "timestamp", rn, close,
+         close AS n, CAST(1.0 AS DOUBLE) AS d
+  FROM base WHERE rn = 1
+  UNION ALL
+  SELECT b.symbol, b.seq, b."timestamp", b.rn, b.close,
+         b.close + (1 - {_A20})*r.n,
+         1 + (1 - {_A20})*r.d
+  FROM base b JOIN rec r ON b.rn = r.rn + 1
+),
+tr AS (
+  SELECT s.symbol, s.seq, s."timestamp", rec.n/rec.d AS mid,
+    greatest(s.high, lag(s.close) OVER (ORDER BY s."timestamp", s.seq))
+      - least(s.low, lag(s.close) OVER (ORDER BY s."timestamp", s.seq)) AS tr
+  FROM sub s JOIN rec ON s.seq = rec.seq
+),
+atr AS (
+  SELECT symbol, seq, mid,
+    {_gated('avg(tr)', 'tr', 14, _ws(14, False))} AS atr
+  FROM tr
+)
+SELECT symbol, seq,
+  {_r('mid + atr * 2', 'KC_Upper_Band_20_14_2')},
+  {_r('mid - atr * 2', 'KC_Lower_Band_20_14_2')}
+FROM atr""",
+            recursive=True,
+        ),
+    ),
+)
+
+
+# ---- true_strength_index (GLOBAL double span-EWM of delta & |delta|) ----------- #
+_AS13, _AL25 = _a(13), _a(25)
+_TN1 = f"b.delta + (1 - {_AS13})*r.n1"
+_TD1 = f"1 + (1 - {_AS13})*r.d1"
+_TN2 = f"(({_TN1})/({_TD1})) + (1 - {_AL25})*r.n2"
+_TD2 = f"1 + (1 - {_AL25})*r.d2"
+_TA1 = f"abs(b.delta) + (1 - {_AS13})*r.a1"
+_TB1 = f"1 + (1 - {_AS13})*r.b1"
+_TA2 = f"(({_TA1})/({_TB1})) + (1 - {_AL25})*r.a2"
+_TB2 = f"1 + (1 - {_AL25})*r.b2"
+_register(
+    "true_strength_index",
+    Query(
+        spark=_ind_query(
+            lambda i: i.true_strength_index(["close"], 13, 25),
+            ["close_tsi_13_25"],
+            pre=_glob_pre,
+        ),
+        sql=_sql(
+            f"""{_BASE_GLOB},
+d AS (
+  SELECT symbol, seq, "timestamp", rn,
+    close - lag(close) OVER (ORDER BY rn) AS delta
+  FROM base
+),
+rec AS (
+  -- recursion starts at rn=2: the leading NULL delta is skipped, matching
+  -- pandas ewm over a leading-NaN series
+  SELECT symbol, seq, rn, delta,
+         delta AS n1, CAST(1.0 AS DOUBLE) AS d1,
+         delta AS n2, CAST(1.0 AS DOUBLE) AS d2,
+         abs(delta) AS a1, CAST(1.0 AS DOUBLE) AS b1,
+         abs(delta) AS a2, CAST(1.0 AS DOUBLE) AS b2
+  FROM d WHERE rn = 2
+  UNION ALL
+  SELECT b.symbol, b.seq, b.rn, b.delta,
+         {_TN1}, {_TD1}, {_TN2}, {_TD2},
+         {_TA1}, {_TB1}, {_TA2}, {_TB2}
+  FROM d b JOIN rec r ON b.rn = r.rn + 1
+),
+out AS (
+  SELECT symbol, seq, 100 * (n2/d2) / NULLIF(a2/b2, 0) AS v FROM rec
+  UNION ALL
+  SELECT symbol, seq, CAST(NULL AS DOUBLE) FROM d WHERE rn = 1
+)
+SELECT symbol, seq, {_r('v', 'close_tsi_13_25')} FROM out""",
+            recursive=True,
+        ),
+    ),
+)
+
+
+# ---- stc (GLOBAL; dead-code spec; intermediates stay in frame) ------------------ #
+_AF, _ASL, _ASG = _a(12), _a(26), _a(9)
+_SNF = f"b.close + (1 - {_AF})*r.nf"
+_SDF = f"1 + (1 - {_AF})*r.df"
+_SNS = f"b.close + (1 - {_ASL})*r.ns"
+_SDS = f"1 + (1 - {_ASL})*r.ds"
+_SM = f"(({_SNF})/({_SDF})) - (({_SNS})/({_SDS}))"
+_SNG = f"({_SM}) + (1 - {_ASG})*r.ng"
+_SDG = f"1 + (1 - {_ASG})*r.dg"
+_register(
+    "stc",
+    Query(
+        spark=_ind_query(
+            lambda i: i.stc(["close"], 12, 26, 9, 10),
+            ["_close_macd_line", "_close_signal_line", "close_stc_12_26_10"],
+            pre=_glob_pre,
+        ),
+        sql=_sql(
+            f"""{_BASE_GLOB},
+rec AS (
+  SELECT symbol, seq, "timestamp", rn, close,
+         close AS nf, CAST(1.0 AS DOUBLE) AS df,
+         close AS ns, CAST(1.0 AS DOUBLE) AS ds,
+         CAST(0.0 AS DOUBLE) AS ng, CAST(1.0 AS DOUBLE) AS dg
+  FROM base WHERE rn = 1
+  UNION ALL
+  SELECT b.symbol, b.seq, b."timestamp", b.rn, b.close,
+         {_SNF}, {_SDF}, {_SNS}, {_SDS}, {_SNG}, {_SDG}
+  FROM base b JOIN rec r ON b.rn = r.rn + 1
+),
+m AS (
+  SELECT symbol, seq, "timestamp",
+    (nf/df) - (ns/ds) AS macd, ng/dg AS sig
+  FROM rec
+),
+t AS (
+  SELECT symbol, seq, macd, sig,
+    macd - {_gated('min(macd)', 'macd', 10, _ws(10, False))} AS num,
+    {_gated('max(macd)', 'macd', 10, _ws(10, False))}
+      - {_gated('min(macd)', 'macd', 10, _ws(10, False))} AS den
+  FROM m
+)
+SELECT symbol, seq,
+  {_r('macd', '_close_macd_line')},
+  {_r('sig', '_close_signal_line')},
+  {_r('num / NULLIF(den, 0) * 100', 'close_stc_12_26_10')}
+FROM t""",
+            recursive=True,
+        ),
+    ),
+)
+
+
+# ---- cumulative_returns (per symbol, first 40 rows; log-domain compare) ---------- #
+# The as-written percent-units quirk (∏(1+100·r), SURVEY §2c) overflows a
+# double beyond ~150 factors on this data, so the check runs on the first 100
+# rows per symbol; DuckDB emulates cum_prod via exp/ln + sign/zero handling.
+
+
+def _cumret_pre(df):
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("symbol").orderBy("timestamp", "seq")
+    return (
+        df.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") <= 100)
+        .drop("_rn")
+    )
+
+
+_register(
+    "cumulative_returns",
+    Query(
+        spark=_ind_query(
+            lambda i: i.cumulative_returns(["close"]),
+            ["close_cumulative_return"],
+            log_outs=("close_cumulative_return",),
+            pre=_cumret_pre,
+        ),
+        sql=_sql(
+            f"""sub AS (
+  SELECT * FROM (
+    SELECT *, row_number() OVER (PARTITION BY symbol ORDER BY {ORDER}) AS _rn
+    FROM prices
+  ) WHERE _rn <= 100
+),
+f AS (
+  SELECT symbol, seq, "timestamp",
+    1 + (close - lag(close) OVER {_word()}) / NULLIF(lag(close) OVER {_word()}, 0) * 100 AS fac
+  FROM sub
+),
+parts AS (
+  SELECT symbol, seq, "timestamp", fac,
+    CASE WHEN fac IS NULL THEN NULL WHEN fac = 0 THEN NULL ELSE ln(abs(fac)) END AS lf,
+    CASE WHEN fac = 0 THEN 1 WHEN fac IS NOT NULL THEN 0 END AS isz,
+    CASE WHEN fac < 0 THEN 1 WHEN fac IS NOT NULL THEN 0 END AS isn
+  FROM f
+),
+agg AS (
+  SELECT symbol, seq,
+    count(fac) OVER {_wcum()} AS cnt,
+    sum(isz) OVER {_wcum()} AS nz,
+    sum(isn) OVER {_wcum()} AS nneg,
+    sum(lf)  OVER {_wcum()} AS s
+  FROM parts
+),
+v AS (
+  SELECT symbol, seq,
+    CASE WHEN cnt = 0 THEN NULL
+         WHEN nz > 0 THEN 0.0
+         ELSE exp(s) * (CASE WHEN nneg % 2 = 1 THEN -1.0 ELSE 1.0 END)
+    END AS v
+  FROM agg
+)
+SELECT symbol, seq, {_r('sign(v) * ln(1 + abs(v))', 'close_cumulative_return')} FROM v"""
+        ),
+    ),
+)

@@ -1,10 +1,10 @@
-"""Round-3 catalog additions: embedding/ML analytics (hard-negative
+"""ML-analytics family: embedding/ML analytics (hard-negative
 mining, nearest-centroid classification, covariance matrix), tokenizer
 statistics (BPE pair counts), corpus mixture weighting, marketing-style
 event attribution, key-skew diagnostics, and link-graph PageRank.
 
 Each query pairs a Spark-first implementation with an exact DuckDB
-oracle, following the conventions in ``queries.py`` (boundary-safe
+oracle, following the conventions in ``_base`` (boundary-safe
 quantizers on every float output, deterministic tie-breaks on every
 rank/limit, integer casts on every count).
 """
@@ -14,13 +14,24 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .functions import graph, sampling, similarity, text
-from .queries import Query, _r, _register, round4
-from .queries import _sql as _q_sql
-from .queries_pipeline import _km_sqd
-from .sources.prices import load_table
-
-EMB_DIM = 64
+from ..functions import graph, sampling, similarity, text
+from ..sources.prices import load_table
+from ._base import (
+    EMB_DIM,
+    ORDER,
+    Query,
+    _dot_sql,
+    _gated,
+    _norm_sql,
+    _r,
+    _register,
+    _sql,
+    _word,
+    _ws,
+    round4,
+)
+from .ext import _lang_sql, _minhash_ctes
+from .pipeline import _km_sqd
 
 
 def round6(c):
@@ -34,24 +45,6 @@ def _r6(expr: str, alias: str) -> str:
     return (
         f"CAST(floor(({expr}) * 1000000 + 0.500000001) AS DOUBLE)"
         f' / 1000000 AS "{alias}"'
-    )
-
-
-def _norm_sql(a: str) -> str:
-    return (
-        "sqrt("
-        + " + ".join(
-            f"CAST({a}[{i}] AS DOUBLE) * CAST({a}[{i}] AS DOUBLE)"
-            for i in range(1, EMB_DIM + 1)
-        )
-        + ")"
-    )
-
-
-def _dot_sql(a: str, b: str) -> str:
-    return " + ".join(
-        f"CAST({a}[{i}] AS DOUBLE) * CAST({b}[{i}] AS DOUBLE)"
-        for i in range(1, EMB_DIM + 1)
     )
 
 
@@ -526,7 +519,7 @@ def _profile_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     at-scale error band is driver-verified by `stats_hll_audit`.  Same
     output schema either way, and each column's metrics stay ONE
     map-side-combined aggregate."""
-    from .approx import profile_numeric_auto
+    from ..approx import profile_numeric_auto
 
     li = load_table(spark, sf_dir, "lineitem")
     out = profile_numeric_auto(li, _PROFILE_COLS)
@@ -686,7 +679,7 @@ def _kmv_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     `stats_hll_rollup`, but EXACTLY oracle-checkable: the bottom-k sample
     is a deterministic function of the data (md5 order), so both engines
     pick the identical sample and interpolate identical estimates."""
-    from .functions.sketches import kmv_bottom_k, kmv_merge
+    from ..functions.sketches import kmv_bottom_k, kmv_merge
 
     ev = load_table(spark, sf_dir, "events").withColumn(
         "day", F.floor(F.unix_timestamp("ts") / 86400).cast("long")
@@ -757,8 +750,7 @@ FROM est, ex""",
 
 
 def _minhash_est_sql() -> str:
-    from .functions.dedup import MINHASH_COEFFS
-    from .queries_ext import _minhash_ctes
+    from ..functions.dedup import MINHASH_COEFFS
 
     k = len(MINHASH_COEFFS)
     match_sum = " + ".join(
@@ -789,7 +781,7 @@ LEFT JOIN it ON cb.ia = it.ia AND cb.ib = it.ib"""
 
 
 def _minhash_est_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .functions import dedup
+    from ..functions import dedup
 
     out = dedup.minhash_estimate_vs_true(load_table(spark, sf_dir, "documents"))
     return out.select(
@@ -941,7 +933,7 @@ def _pysource_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     input; the oracle replays its integer-exact row formula over
     ``range()``, so even a from-thin-air connector gets a value-hash
     row."""
-    from .sources.pysource import register_ticks_source
+    from ..sources.pysource import register_ticks_source
 
     register_ticks_source(spark)
     df = (
@@ -988,8 +980,8 @@ def _rolling_median_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     percentile at 21 rows (what the oracle replays), t-digest window
     aggregate for extreme frames.  One symbol-hash exchange shared with
     any co-partitioned chain either way."""
-    from .approx import rolling_median_auto
-    from .sources.prices import prices_from_events
+    from ..approx import rolling_median_auto
+    from ..sources.prices import prices_from_events
 
     p = prices_from_events(spark, sf_dir)
     out = rolling_median_auto(
@@ -1005,7 +997,7 @@ _register(
     "rolling_median",
     Query(
         spark=_rolling_median_spark,
-        sql=_q_sql(
+        sql=_sql(
             f"""m AS (
   SELECT symbol, seq,
     quantile_cont(close, 0.5) OVER (
@@ -1395,7 +1387,7 @@ def _risk_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the portfolio-report companion the indicator chains feed.  One
     symbol-keyed window pass (returns + running peak share the exchange)
     then one groupBy; everything else is arithmetic on the aggregates."""
-    from .sources.prices import prices_from_events
+    from ..sources.prices import prices_from_events
 
     p = prices_from_events(spark, sf_dir)
     word = Window.partitionBy("symbol").orderBy("timestamp", "seq")
@@ -1422,7 +1414,7 @@ def _risk_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _risk_sql() -> str:
-    from .sources.prices import PRICES_SQL_EVENTS
+    from ..sources.prices import PRICES_SQL_EVENTS
 
     return f"""WITH {PRICES_SQL_EVENTS.strip()},
 t AS (
@@ -1465,8 +1457,8 @@ def _heikin_ashi_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the oracle replays it with the same recursive-CTE shape every
     EWM query uses.  high/low wrap-arounds are row-local greatest/least
     over (high|low, ha_open, ha_close)."""
-    from .ewm import EwmStep, apply_ewm_program
-    from .sources.prices import prices_from_events
+    from ..ewm import EwmStep, apply_ewm_program
+    from ..sources.prices import prices_from_events
 
     p = prices_from_events(spark, sf_dir)
     word = Window.partitionBy("symbol").orderBy("timestamp", "seq")
@@ -1501,8 +1493,7 @@ def _heikin_ashi_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _heikin_ashi_sql() -> str:
-    from .queries import ORDER
-    from .sources.prices import PRICES_SQL_EVENTS
+    from ..sources.prices import PRICES_SQL_EVENTS
 
     return f"""WITH RECURSIVE {PRICES_SQL_EVENTS.strip()},
 base AS MATERIALIZED (
@@ -1543,7 +1534,7 @@ def _range_window_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     when bars are irregularly spaced.  Same single symbol exchange as
     every per-symbol window; the range frame is evaluated with a sliding
     pointer over the sorted partition (linear, not per-row rescan)."""
-    from .sources.prices import prices_from_events
+    from ..sources.prices import prices_from_events
 
     p = prices_from_events(spark, sf_dir).withColumn(
         "epoch", F.unix_timestamp("timestamp").cast("long")
@@ -1562,7 +1553,7 @@ def _range_window_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _range_window_sql() -> str:
-    from .sources.prices import PRICES_SQL_EVENTS
+    from ..sources.prices import PRICES_SQL_EVENTS
 
     return f"""WITH {PRICES_SQL_EVENTS.strip()},
 e AS (
@@ -1724,7 +1715,7 @@ def _acf_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     `analytic_ols_trend`; built-in `corr` is engine-specific in update
     order).  The lag columns ride one symbol-keyed window exchange; the
     explode emits |lags| skinny rows per bar, each reduced map-side."""
-    from .sources.prices import prices_from_events
+    from ..sources.prices import prices_from_events
 
     p = prices_from_events(spark, sf_dir)
     w = Window.partitionBy("symbol").orderBy("timestamp", "seq")
@@ -1769,7 +1760,7 @@ def _acf_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _acf_sql() -> str:
-    from .sources.prices import PRICES_SQL_EVENTS
+    from ..sources.prices import PRICES_SQL_EVENTS
 
     lag_sel = ", ".join(
         f'lag(close, {k}) OVER (PARTITION BY symbol ORDER BY "timestamp", seq)'
@@ -1821,7 +1812,7 @@ def _pca_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     size.  Start v₀=e₁, 3 un-normalized iterations (power iteration is
     scale-free until the final normalize), sign fixed to the largest-|·|
     component.  The SQL oracle replays the identical supersteps."""
-    from .functions.similarity import covariance_matrix
+    from ..functions.similarity import covariance_matrix
 
     cov = covariance_matrix(load_table(spark, sf_dir, "embeddings"), dim=EMB_DIM)
     full = cov.unionByName(
@@ -1919,7 +1910,7 @@ def _langid_eval_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     by.  The classify pass is the zero-shuffle lang-ID expression; the
     matrix is one (true, pred) groupBy (≤ |langs|² cells) and recall is
     a broadcast join of per-class totals."""
-    from .functions import text as textmod
+    from ..functions import text as textmod
 
     docs = load_table(spark, sf_dir, "documents")
     pred = textmod.with_lang_id(docs).select(
@@ -1941,8 +1932,6 @@ def _langid_eval_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _langid_eval_sql() -> str:
-    from .queries_ext import _lang_sql
-
     inner = _lang_sql().strip()
     return f"""
 WITH pred AS (
@@ -2149,8 +2138,8 @@ def _lsh_recall_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     before a corpus-wide run.  Ground truth is computed exactly here
     (audit-scale corpora / samples); in production you audit on a hash
     sample and keep the banding for the full corpus."""
-    from .functions import dedup
-    from .functions.text import word_hash31
+    from ..functions import dedup
+    from ..functions.text import word_hash31
 
     docs = load_table(spark, sf_dir, "documents")
     cand = (
@@ -2202,8 +2191,6 @@ def _lsh_recall_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _lsh_recall_sql() -> str:
-    from .queries_ext import _minhash_ctes
-
     return f"""
 WITH {_minhash_ctes()},
 cd AS (SELECT DISTINCT ia, ib FROM cand),
@@ -2250,7 +2237,7 @@ def _phash_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     the hash carries a full value-hash oracle; the oracle replays the
     byte blocks relationally (ASCII corpus ⇒ byte == unicode(char), the
     same documented assumption `multimodal_resize` makes)."""
-    from .functions import multimodal
+    from ..functions import multimodal
 
     docs = load_table(spark, sf_dir, "documents")
     hashed = multimodal.phash64(multimodal.attach_payload(docs))
@@ -2314,7 +2301,7 @@ def _training_table_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     leakage audit checks, expressed as window frames (features:
     rows ≤ current; label: lead).  One symbol exchange carries features
     AND label; rows without a full feature window or a next bar drop."""
-    from .sources.prices import prices_from_events
+    from ..sources.prices import prices_from_events
 
     p = prices_from_events(spark, sf_dir)
     word = Window.partitionBy("symbol").orderBy("timestamp", "seq")
@@ -2342,8 +2329,6 @@ def _training_table_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _training_table_sql() -> str:
-    from .queries import _gated, _sql, _word, _ws
-
     w = _ws(20)
     return _sql(
         f"""t AS (
@@ -2387,7 +2372,7 @@ def _hypertable_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     history — the `incremental_agg_maintenance` pattern specialized to
     time-series bars.  The oracle recomputes the whole rollup from
     scratch and must match exactly."""
-    from .sources.prices import prices_from_events
+    from ..sources.prices import prices_from_events
 
     p = prices_from_events(spark, sf_dir).withColumn(
         "bucket", (F.floor(F.unix_timestamp("timestamp") / 3600) * 3600).cast("long")
@@ -2430,7 +2415,7 @@ def _hypertable_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _hypertable_sql() -> str:
-    return _q_sql(
+    return _sql(
         f"""b AS (
   SELECT symbol,
     CAST(floor(epoch("timestamp") / 3600) * 3600 AS BIGINT) AS bucket,

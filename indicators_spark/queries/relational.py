@@ -1,10 +1,12 @@
-"""Relational coverage, part 3: the remaining TPC-H query *shapes* —
-with these the catalog demonstrates every optimizer pattern of the full
-22-query suite (the synthetic schema has no ``partsupp`` table and no
-commit/receipt dates, so q2/q11/q12/q20/q21 are adapted to the columns
-that exist, exactly like queries_rel.py's q16/q19/q22 adaptations).
+"""Relational family: the TPC-H query *shapes* and the join/layout
+operators built on them.
 
-Shapes added here and the Spark plan each is written to produce:
+Semi-join (EXISTS), anti-join (NOT EXISTS), left-outer distribution,
+conditional aggregation, disjunctive predicate pushdown and scalar
+subqueries; then the remaining shapes of the 22-query suite (the
+synthetic schema has no ``partsupp`` table and no commit/receipt dates,
+so q2/q11/q12/q16/q19/q20/q21/q22 are adapted to the columns that
+exist):
 
 * q2  — correlated scalar MIN subquery → decorrelated group-min + equality
   join back (all dimension-side, broadcast everywhere).
@@ -21,8 +23,13 @@ Shapes added here and the Spark plan each is written to produce:
 * q21 — EXISTS + NOT EXISTS against the same fact table with non-equi
   correlation (the hardest decorrelation in the suite).
 
-The reference (`/root/reference/indicators.py`) has no joins at all
-(SURVEY.md §2b); these are north-star extensions.
+Also here: the Bloom-prefiltered join, the z-order layout key and the
+frequent basket pairs.  Each is written Spark-first (broadcast the
+dimension side, let Catalyst turn EXISTS/NOT EXISTS into
+LeftSemi/LeftAnti) and carries a DuckDB oracle.  The reference
+(`/root/reference/indicators.py`) has no joins at all (SURVEY.md §2b);
+these are north-star extensions.  The synthetic tables are TPC-H-ish
+with narrower schemas (TESTDATA.md).
 """
 
 from __future__ import annotations
@@ -30,9 +37,354 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .queries import Query, _r, _register, round4
-from .queries_rel import _cut, _TS_1996_01
-from .sources.prices import load_table
+from ..functions import joins
+from ..sources.prices import load_table
+from ._base import Query, _r, _register, round4
+
+
+def _cut(epoch_s: int):
+    # TZ-independent timestamp literal (see ext._utc_cutoff).
+    return F.timestamp_seconds(F.lit(epoch_s))
+
+
+_TS_1996_01 = 820454400  # 1996-01-01
+_TS_1996_07 = 836179200  # 1996-07-01
+_TS_1996_03 = 825638400  # 1996-03-01
+_TS_1996_04 = 828316800  # 1996-04-01
+
+
+# --------------------------------------------------------------------- #
+# q4 shape: EXISTS → left-semi join
+# --------------------------------------------------------------------- #
+
+
+def _q4(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Orders in H1-1996 having at least one returned line item, counted by
+    priority.  The EXISTS becomes an explicit ``left_semi`` join — one
+    shuffle on the join key, duplicate-safe without a distinct."""
+    orders = load_table(spark, sf_dir, "orders").filter(
+        (F.col("o_orderdate") >= _cut(_TS_1996_01))
+        & (F.col("o_orderdate") < _cut(_TS_1996_07))
+    )
+    returned = (
+        load_table(spark, sf_dir, "lineitem")
+        .filter(F.col("l_returnflag") == "R")
+        .select("l_orderkey")
+    )
+    return (
+        orders.join(returned, orders.o_orderkey == returned.l_orderkey, "left_semi")
+        .groupBy("o_orderpriority")
+        .agg(F.count(F.lit(1)).alias("order_count"))
+    )
+
+
+_register(
+    "tpch_q4_semi",
+    Query(
+        spark=_q4,
+        sql="""
+SELECT o_orderpriority, count(*) AS order_count
+FROM orders
+WHERE o_orderdate >= TIMESTAMP '1996-01-01'
+  AND o_orderdate < TIMESTAMP '1996-07-01'
+  AND EXISTS (
+    SELECT 1 FROM lineitem
+    WHERE l_orderkey = o_orderkey AND l_returnflag = 'R')
+GROUP BY 1""",
+    ),
+)
+
+
+# --------------------------------------------------------------------- #
+# q13 shape: left outer join + two-level aggregation
+# --------------------------------------------------------------------- #
+
+
+def _q13(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distribution of order counts per customer, customers with zero orders
+    included via the left outer join (their count comes from counting the
+    right side's key, which is NULL for unmatched rows)."""
+    cust = load_table(spark, sf_dir, "customer").select("c_custkey")
+    orders = load_table(spark, sf_dir, "orders").filter(
+        F.col("o_orderstatus") != "P"
+    )
+    per_cust = (
+        cust.join(orders, cust.c_custkey == orders.o_custkey, "left_outer")
+        .groupBy("c_custkey")
+        .agg(F.count("o_orderkey").alias("c_count"))
+    )
+    return (
+        per_cust.groupBy("c_count")
+        .agg(F.count(F.lit(1)).alias("custdist"))
+    )
+
+
+_register(
+    "tpch_q13_outer",
+    Query(
+        spark=_q13,
+        sql="""
+WITH per_cust AS (
+  SELECT c_custkey, count(o_orderkey) AS c_count
+  FROM customer
+  LEFT OUTER JOIN orders
+    ON c_custkey = o_custkey AND o_orderstatus <> 'P'
+  GROUP BY 1
+)
+SELECT c_count, count(*) AS custdist FROM per_cust GROUP BY 1""",
+    ),
+)
+
+
+# --------------------------------------------------------------------- #
+# q14 shape: conditional aggregation over a broadcast join
+# --------------------------------------------------------------------- #
+
+
+def _q14(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Promo revenue share for March 1996.  ``part`` (2k rows) is broadcast;
+    the month filter prunes the lineitem scan before the join."""
+    li = load_table(spark, sf_dir, "lineitem").filter(
+        (F.col("l_shipdate") >= _cut(_TS_1996_03))
+        & (F.col("l_shipdate") < _cut(_TS_1996_04))
+    )
+    part = load_table(spark, sf_dir, "part").select("p_partkey", "p_type")
+    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    out = (
+        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
+        .agg(
+            (
+                100.0
+                * F.sum(F.when(F.col("p_type") == "PROMO", rev).otherwise(0.0))
+                / F.sum(rev)
+            ).alias("promo_revenue")
+        )
+    )
+    return out.select(round4(F.col("promo_revenue")).alias("promo_revenue"))
+
+
+_register(
+    "tpch_q14_promo",
+    Query(
+        spark=_q14,
+        sql=f"""
+SELECT {_r(
+    "100.0 * sum(CASE WHEN p_type = 'PROMO' "
+    "THEN l_extendedprice * (1 - l_discount) ELSE 0.0 END) "
+    "/ sum(l_extendedprice * (1 - l_discount))",
+    "promo_revenue",
+)}
+FROM lineitem JOIN part ON l_partkey = p_partkey
+WHERE l_shipdate >= TIMESTAMP '1996-03-01'
+  AND l_shipdate < TIMESTAMP '1996-04-01'""",
+    ),
+)
+
+
+# --------------------------------------------------------------------- #
+# q16 shape: NOT EXISTS → left-anti join
+# --------------------------------------------------------------------- #
+
+
+def _q16(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Parts never shipped as a returned line item, counted per (brand,
+    type).  NOT EXISTS = ``left_anti``; the part side stays small so the
+    anti join broadcasts the *filtered key set* is wrong — the big side is
+    lineitem, so we anti-join part (small) against the distinct-free
+    returned keys: Catalyst broadcasts part and streams lineitem."""
+    part = load_table(spark, sf_dir, "part")
+    returned = (
+        load_table(spark, sf_dir, "lineitem")
+        .filter((F.col("l_returnflag") == "R") & (F.col("l_quantity") >= 40))
+        .select("l_partkey")
+    )
+    return (
+        part.join(returned, part.p_partkey == returned.l_partkey, "left_anti")
+        .groupBy("p_brand", "p_type")
+        .agg(F.count(F.lit(1)).alias("part_count"))
+    )
+
+
+_register(
+    "tpch_q16_anti",
+    Query(
+        spark=_q16,
+        sql="""
+SELECT p_brand, p_type, count(*) AS part_count
+FROM part
+WHERE NOT EXISTS (
+  SELECT 1 FROM lineitem
+  WHERE l_partkey = p_partkey AND l_returnflag = 'R' AND l_quantity >= 40)
+GROUP BY 1, 2""",
+    ),
+)
+
+
+# --------------------------------------------------------------------- #
+# q19 shape: disjunction of conjunctions (OR-of-ANDs pushdown)
+# --------------------------------------------------------------------- #
+
+
+def _q19(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Revenue from three brand/size/quantity bands OR-ed together.  The
+    disjunction references both sides of the join, so it can't be pushed
+    below the join — but the common conjuncts (quantity ceiling, size floor)
+    can, and the part side is broadcast."""
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part").select(
+        "p_partkey", "p_brand", "p_size"
+    )
+    j = li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
+    band = (
+        (
+            (F.col("p_brand") == "Brand#12")
+            & F.col("p_size").between(1, 15)
+            & F.col("l_quantity").between(1, 11)
+        )
+        | (
+            (F.col("p_brand") == "Brand#23")
+            & F.col("p_size").between(1, 25)
+            & F.col("l_quantity").between(10, 20)
+        )
+        | (
+            (F.col("p_brand") == "Brand#34")
+            & F.col("p_size").between(1, 35)
+            & F.col("l_quantity").between(20, 30)
+        )
+    )
+    out = j.filter(band).agg(
+        F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("rev")
+    )
+    return out.select(round4(F.col("rev")).alias("revenue"))
+
+
+_register(
+    "tpch_q19_disjunct",
+    Query(
+        spark=_q19,
+        sql=f"""
+SELECT {_r("sum(l_extendedprice * (1 - l_discount))", "revenue")}
+FROM lineitem JOIN part ON l_partkey = p_partkey
+WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 15
+       AND l_quantity BETWEEN 1 AND 11)
+   OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 25
+       AND l_quantity BETWEEN 10 AND 20)
+   OR (p_brand = 'Brand#34' AND p_size BETWEEN 1 AND 35
+       AND l_quantity BETWEEN 20 AND 30)""",
+    ),
+)
+
+
+# --------------------------------------------------------------------- #
+# q22 shape: scalar subquery + NOT EXISTS anti join
+# --------------------------------------------------------------------- #
+
+
+def _q22(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Well-funded customers (balance above the positive-balance average)
+    with no urgent orders, summarized per nation.  The scalar average is a
+    one-row broadcast (cross join); the NOT EXISTS is a left-anti join on
+    o_custkey."""
+    cust = load_table(spark, sf_dir, "customer")
+    orders = (
+        load_table(spark, sf_dir, "orders")
+        .filter(F.col("o_orderpriority") == "1-URGENT")
+        .select("o_custkey")
+    )
+    avg_bal = cust.filter(F.col("c_acctbal") > 0.0).agg(
+        F.avg("c_acctbal").alias("avg_bal")
+    )
+    rich = (
+        cust.crossJoin(F.broadcast(avg_bal))
+        .filter(F.col("c_acctbal") > F.col("avg_bal"))
+        .select("c_custkey", "c_nationkey", "c_acctbal")
+    )
+    no_orders = rich.join(
+        orders, rich.c_custkey == orders.o_custkey, "left_anti"
+    )
+    return (
+        no_orders.groupBy("c_nationkey")
+        .agg(
+            F.count(F.lit(1)).alias("numcust"),
+            F.sum("c_acctbal").alias("totacctbal"),
+        )
+        .select(
+            "c_nationkey",
+            "numcust",
+            round4(F.col("totacctbal")).alias("totacctbal"),
+        )
+    )
+
+
+_register(
+    "tpch_q22_scalar_anti",
+    Query(
+        spark=_q22,
+        sql=f"""
+SELECT c_nationkey, count(*) AS numcust,
+  {_r("sum(c_acctbal)", "totacctbal")}
+FROM customer
+WHERE c_acctbal > (
+    SELECT avg(c_acctbal) FROM customer WHERE c_acctbal > 0.0)
+  AND NOT EXISTS (
+    SELECT 1 FROM orders
+    WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT')
+GROUP BY 1""",
+    ),
+)
+
+
+# --------------------------------------------------------------------- #
+# q15 shape: aggregate → scalar-subquery max filter
+# --------------------------------------------------------------------- #
+
+
+def _q15(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top supplier(s) by H1-1996 revenue.  The per-supplier aggregate is
+    computed once and reused for both the max (one-row broadcast) and the
+    filter — Spark evaluates the cheap agg twice rather than caching, which
+    is the right trade at scale (re-scan beats a materialization barrier)."""
+    li = load_table(spark, sf_dir, "lineitem").filter(
+        (F.col("l_shipdate") >= _cut(_TS_1996_01))
+        & (F.col("l_shipdate") < _cut(_TS_1996_07))
+    )
+    rev = li.groupBy("l_suppkey").agg(
+        F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
+            "total_revenue"
+        )
+    )
+    max_rev = rev.agg(F.max("total_revenue").alias("max_revenue"))
+    sup = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
+    return (
+        rev.crossJoin(F.broadcast(max_rev))
+        .filter(F.col("total_revenue") == F.col("max_revenue"))
+        .join(F.broadcast(sup), rev.l_suppkey == sup.s_suppkey)
+        .select(
+            "s_suppkey",
+            "s_name",
+            round4(F.col("total_revenue")).alias("total_revenue"),
+        )
+    )
+
+
+_register(
+    "tpch_q15_top_supplier",
+    Query(
+        spark=_q15,
+        sql=f"""
+WITH rev AS (
+  SELECT l_suppkey, sum(l_extendedprice * (1 - l_discount)) AS total_revenue
+  FROM lineitem
+  WHERE l_shipdate >= TIMESTAMP '1996-01-01'
+    AND l_shipdate < TIMESTAMP '1996-07-01'
+  GROUP BY 1
+)
+SELECT s_suppkey, s_name, {_r("total_revenue", "total_revenue")}
+FROM rev JOIN supplier ON l_suppkey = s_suppkey
+WHERE total_revenue = (SELECT max(total_revenue) FROM rev)""",
+    ),
+)
+
 
 _TS_1997_01 = 852076800  # 1997-01-01
 _TS_1998_01 = 883612800  # 1998-01-01
@@ -624,7 +976,7 @@ def bucketed_fact_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
 
     Staleness guard: rewrite when the cataloged row count no longer
     matches the parquet source (regenerated testdata)."""
-    from .sources.io import write_bucketed_table
+    from ..sources.io import write_bucketed_table
 
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_").replace("-", "_")
     li_t, ord_t = f"li_bkt_{tag}", f"ord_bkt_{tag}"
@@ -664,4 +1016,204 @@ def _q21_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 _register(
     "tpch_q21_bucketed",
     Query(spark=_q21_bucketed, sql=_Q21_SQL),
+)
+
+
+# --------------------------------------------------------------------- #
+# Bloom-prefiltered semi join
+# --------------------------------------------------------------------- #
+
+BLOOM_M, BLOOM_K = 1 << 16, 4
+
+
+def _bloom_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
+    li = load_table(spark, sf_dir, "lineitem")
+    urgent = (
+        load_table(spark, sf_dir, "orders")
+        .filter(F.col("o_orderpriority") == "1-URGENT")
+        .select(F.col("o_orderkey").alias("l_orderkey"))
+    )
+    j = joins.bloom_semi_join(
+        li, urgent, "l_orderkey", m_bits=BLOOM_M, n_hashes=BLOOM_K
+    )
+    return j.groupBy("l_returnflag").agg(
+        F.count(F.lit(1)).alias("n_rows"),
+        round4(F.sum("l_quantity")).alias("sum_qty"),
+    )
+
+
+_register(
+    "join_bloom_prefilter",
+    Query(
+        spark=_bloom_spark,
+        sql=f"""
+SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n_rows,
+  {_r('sum(l_quantity)', 'sum_qty')}
+FROM lineitem
+WHERE l_orderkey IN (
+  SELECT o_orderkey FROM orders WHERE o_orderpriority = '1-URGENT'
+)
+GROUP BY l_returnflag""",
+    ),
+)
+
+
+# --------------------------------------------------------------------- #
+# Z-order (Morton) layout clustering
+# --------------------------------------------------------------------- #
+
+Z_BITS, Z_CELL_SHIFT = 8, 10  # 16-bit z-key → 64 cells
+
+
+def _zorder_sql_key(x: str, y: str) -> str:
+    terms = []
+    for j in range(Z_BITS):
+        terms.append(f"((({x} >> {j}) & 1) << {2 * j})")
+        terms.append(f"((({y} >> {j}) & 1) << {2 * j + 1})")
+    return " + ".join(terms)
+
+
+def _zorder_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..scale import zorder_key
+
+    o = load_table(spark, sf_dir, "orders")
+    xb = F.pmod(F.col("o_custkey"), F.lit(256)).cast("long")
+    yb = F.pmod(
+        F.year("o_orderdate") * 12 + F.month("o_orderdate") - 1, F.lit(256)
+    ).cast("long")
+    zk = zorder_key([xb, yb], bits=Z_BITS)
+    cells = o.select(
+        xb.alias("xb"), yb.alias("yb"), F.shiftright(zk, Z_CELL_SHIFT).alias("zcell")
+    )
+    return cells.groupBy("zcell").agg(
+        F.count(F.lit(1)).alias("n_rows"),
+        F.min("xb").alias("x_min"),
+        F.max("xb").alias("x_max"),
+        F.min("yb").alias("y_min"),
+        F.max("yb").alias("y_max"),
+    )
+
+
+_register(
+    "layout_zorder_orders",
+    Query(
+        spark=_zorder_spark,
+        sql=f"""
+WITH b AS (
+  SELECT CAST(o_custkey % 256 AS BIGINT) AS xb,
+    CAST((year(o_orderdate) * 12 + month(o_orderdate) - 1) % 256 AS BIGINT)
+      AS yb
+  FROM orders
+),
+z AS (
+  SELECT xb, yb,
+    CAST(({_zorder_sql_key('xb', 'yb')}) AS BIGINT) >> {Z_CELL_SHIFT} AS zcell
+  FROM b
+)
+SELECT zcell, CAST(count(*) AS BIGINT) AS n_rows,
+  min(xb) AS x_min, max(xb) AS x_max,
+  min(yb) AS y_min, max(yb) AS y_max
+FROM z GROUP BY zcell""",
+    ),
+)
+
+
+# --------------------------------------------------------------------- #
+# Market-basket part pairs (a-priori 2-itemset pass over orders):
+# support + lift for parts bought together — the classic co-occurrence
+# mining shape on the relational side.
+# --------------------------------------------------------------------- #
+
+BK_MIN_SUPP, BK_TOPK = 3, 30
+
+
+def _basket_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Scale shape: one distinct (order, part) projection; the pair
+    self-join is keyed on the ORDER (baskets are small — ≤7 lineitems in
+    TPC-H — so per-basket pair fan-out is bounded, the opposite regime
+    from the token posting lists); item supports broadcast onto the
+    min-support-pruned pair table; top-k by TakeOrdered."""
+    from pyspark.sql import Window
+
+    # four consumers (n_orders, both self-join sides, item supports)
+    # read this distinct projection — materialize it once
+    # (materialize.shared: checkpoint blocks free with the result, no
+    # session-lifetime cache entry — ADVICE r7)
+    from ..functions.materialize import shared
+
+    li = shared(
+        load_table(spark, sf_dir, "lineitem").select(
+            F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk")
+        ).distinct()
+    )
+    n_orders = li.select(F.count_distinct("ok").alias("n"))
+    pairs = (
+        li.alias("a")
+        .join(li.alias("b"), "ok")
+        .filter(F.col("a.pk") < F.col("b.pk"))
+        .groupBy(F.col("a.pk").alias("pa"), F.col("b.pk").alias("pb"))
+        .agg(F.count(F.lit(1)).alias("supp"))
+        .filter(F.col("supp") >= BK_MIN_SUPP)
+    )
+    item = li.groupBy("pk").agg(F.count(F.lit(1)).alias("isupp"))
+    lift = (
+        F.col("supp").cast("double")
+        * F.col("n").cast("double")
+        / (F.col("sa").cast("double") * F.col("sb").cast("double"))
+    )
+    scored = (
+        pairs.join(
+            F.broadcast(item.select(F.col("pk").alias("pa"), F.col("isupp").alias("sa"))),
+            "pa",
+        )
+        .join(
+            F.broadcast(item.select(F.col("pk").alias("pb"), F.col("isupp").alias("sb"))),
+            "pb",
+        )
+        .crossJoin(F.broadcast(n_orders))
+        .select(
+            "pa",
+            "pb",
+            F.col("supp").cast("long").alias("supp"),
+            round4(lift).alias("lift"),
+        )
+    )
+    top = scored.orderBy(
+        F.col("supp").desc(), F.col("pa"), F.col("pb")
+    ).limit(BK_TOPK)
+    win = Window.orderBy(F.col("supp").desc(), F.col("pa"), F.col("pb"))
+    return top.withColumn(
+        "rank", F.row_number().over(win).cast("long")
+    ).select("rank", "pa", "pb", "supp", "lift")
+
+
+_BASKET_SQL = f"""
+WITH li AS (
+  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
+),
+nn AS (SELECT count(DISTINCT ok) AS n FROM li),
+pairs AS (
+  SELECT a.pk AS pa, b.pk AS pb, count(*) AS supp
+  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
+  GROUP BY 1, 2 HAVING count(*) >= {BK_MIN_SUPP}
+),
+item AS (SELECT pk, count(*) AS isupp FROM li GROUP BY pk),
+scored AS (
+  SELECT p.pa, p.pb, CAST(p.supp AS BIGINT) AS supp,
+    floor(CAST(p.supp AS DOUBLE) * CAST(nn.n AS DOUBLE)
+          / (CAST(ia.isupp AS DOUBLE) * CAST(ib.isupp AS DOUBLE))
+          * 1e4 + 0.500000001) / 1e4 AS lift
+  FROM pairs p
+  JOIN item ia ON ia.pk = p.pa
+  JOIN item ib ON ib.pk = p.pb, nn
+)
+SELECT CAST(row_number() OVER (ORDER BY supp DESC, pa, pb) AS BIGINT)
+    AS rank,
+  pa, pb, supp, lift
+FROM scored ORDER BY supp DESC, pa, pb LIMIT {BK_TOPK}"""
+
+
+_register(
+    "basket_part_pairs",
+    Query(spark=_basket_spark, sql=_BASKET_SQL),
 )

@@ -1050,11 +1050,20 @@ def zorder_key(cols: list, bits: int = 8):
     picks the bucketing: modulo, ntile, epoch-month…).  Bit j of
     dimension d lands at interleaved position ``j·D + d`` — identical
     integer arithmetic is expressible in any SQL dialect, so the key is
-    engine-portable and oracle-checkable.
+    engine-portable and oracle-checkable.  ``bits × len(cols)`` must fit
+    in 63 bits: Spark's shiftleft takes the shift count mod 64, so wider
+    keys would silently collide.
     """
     from pyspark.sql import functions as F
 
     ndim = len(cols)
+    if bits * ndim > 63:
+        raise ValueError(
+            f"zorder_key: bits({bits}) x dims({ndim}) = {bits * ndim} "
+            "exceeds 63 — Spark's shiftleft wraps shift counts mod 64, "
+            "which would silently interleave colliding bits; lower bits "
+            "(<= 63 // dims)"
+        )
     key = None
     for d, c in enumerate(cols):
         for j in range(bits):

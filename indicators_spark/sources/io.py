@@ -25,6 +25,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from ..scale import zorder_key as morton_interleave
+
 _FORMATS = ("parquet", "orc", "csv", "json")
 
 
@@ -178,31 +180,22 @@ def zorder_key(
 ) -> Column:
     """Z-order (Morton) key over ``cols``: each column is scaled to a
     ``bits``-wide integer bucket by its global min/max, and the buckets'
-    bits are interleaved — nearby keys are nearby in EVERY dimension, so
-    range-partitioning + sorting by this one key gives multi-dimensional
-    data-skipping (each file's parquet min/max stats are narrow on ALL
-    z-ordered columns, not just the leading sort column).
+    bits are interleaved by :func:`indicators_spark.scale.zorder_key` —
+    nearby keys are nearby in EVERY dimension, so range-partitioning +
+    sorting by this one key gives multi-dimensional data-skipping (each
+    file's parquet min/max stats are narrow on ALL z-ordered columns, not
+    just the leading sort column).
 
     The min/max pass is one tiny agg (2·|cols| scalars to the driver —
     index metadata, like IVF centroids).  The key itself is pure codegen
     bit arithmetic: no UDF, no shuffle."""
-    from functools import reduce
-
-    if bits * len(cols) > 63:
-        raise ValueError(
-            f"zorder_key: bits({bits}) x dims({len(cols)}) = "
-            f"{bits * len(cols)} exceeds 63 — Spark's shiftleft wraps "
-            "shift counts mod 64, which would silently interleave "
-            "colliding bits; lower bits (<= 63 // dims)"
-        )
     stats = df.agg(
         *[F.min(F.col(c).cast("double")).alias(f"mn_{c}") for c in cols],
         *[F.max(F.col(c).cast("double")).alias(f"mx_{c}") for c in cols],
     ).first()
-    n_dims = len(cols)
     max_bucket = (1 << bits) - 1
-    parts = []
-    for d, c in enumerate(cols):
+    buckets = []
+    for c in cols:
         if stats[f"mn_{c}"] is None or stats[f"mx_{c}"] is None:
             raise ValueError(
                 f"zorder_key: no non-null values in column {c!r} "
@@ -220,14 +213,9 @@ def zorder_key(
                     * F.lit(max_bucket + 1)
                 ),
             ),
-        ).cast("long")
-        parts.extend(
-            F.shiftleft(
-                F.shiftright(bucket, i).bitwiseAND(F.lit(1)), i * n_dims + d
-            )
-            for i in range(bits)
         )
-    return reduce(lambda a, b: a.bitwiseOR(b), parts)
+        buckets.append(bucket)
+    return morton_interleave(buckets, bits=bits)
 
 
 def write_zordered(

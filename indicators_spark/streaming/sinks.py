@@ -602,7 +602,7 @@ class SubstringDedupIngestSink(_EpochLedger):
 class MixturePlanSink(_EpochLedger):
     """``foreachBatch`` target EXECUTING a water-fill mixture plan on an
     arriving corpus — the streaming twin of the ``mixture_plan_execute``
-    batch query (queries_r7.py): per-source sample rates become hash
+    batch query (queries/pipeline.py): per-source sample rates become hash
     thresholds on the 1/HASH_DEN grid, each micro-batch is filtered by
     the row-local deterministic ``hash_bucket(id) < thresh`` rule,
     sampled documents land exactly-once per epoch, and a per-epoch

@@ -1,6 +1,6 @@
 """Structured Streaming operators over the ``events`` schema.
 
-The batch query catalog (queries_ext.py) proves the window semantics
+The batch query catalog (queries/ext.py) proves the window semantics
 against the DuckDB oracle; these functions run the SAME logical operators
 as streams — ``readStream`` → watermark → windowed agg / stateful map —
 so a user can lift a batch pipeline to a continuous one unchanged.  Tests

@@ -109,5 +109,5 @@ def check_query(spark, con, name: str, sf_dir: str) -> CompareResult:
             name=name, ok=len(sdf) >= 0, spark_rows=len(sdf),
             issues=["rows-only (no oracle)"],
         )
-    odf = con.sql(q.sql_text).df()
+    odf = con.sql(q.sql).df()
     return compare_frames(name, sdf, odf)

@@ -10,6 +10,10 @@ identical.
 from __future__ import annotations
 
 import importlib.util
+import json
+import os
+import pkgutil
+import subprocess
 import sys
 from pathlib import Path
 
@@ -120,3 +124,48 @@ def test_real_ordering_prioritizes_backlog_then_touched():
     tail = names[k + len(stale):]
     rounds = [green[n] for n in tail]
     assert rounds == sorted(rounds)
+
+
+def _catalog_modules() -> list[str]:
+    import indicators_spark
+    import indicators_spark.queries as catalog
+
+    flat = [
+        f"indicators_spark.{m.name}"
+        for m in pkgutil.iter_modules(indicators_spark.__path__)
+        if m.name.startswith("queries")
+    ]
+    nested = [
+        f"indicators_spark.queries.{m.name}"
+        for m in pkgutil.iter_modules(getattr(catalog, "__path__", []))
+    ]
+    return flat + nested
+
+
+def test_registry_order_independent_of_entry_point():
+    """Importing any catalog module first yields the same registry, in
+    the same order, as ``import indicators_spark.queries``: the driver
+    breaks ordering ties by registration index.  Each import runs in a
+    fresh interpreter (no SparkSession)."""
+    script = (
+        "import importlib, json, sys; importlib.import_module(sys.argv[1]); "
+        "from indicators_spark.queries import QUERIES; print(json.dumps(list(QUERIES)))"
+    )
+    env = {**os.environ, "PYTHONPATH": str(REPO)}
+    mods = ["indicators_spark.queries"] + _catalog_modules()
+    procs = {
+        m: subprocess.Popen(
+            [sys.executable, "-c", script, m],
+            cwd=REPO, env=env, stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True,
+        )
+        for m in mods
+    }
+    orders = {}
+    for m, p in procs.items():
+        out, err = p.communicate(timeout=120)
+        assert p.returncode == 0, f"importing {m} first failed:\n{err}"
+        orders[m] = json.loads(out)
+    want = orders.pop("indicators_spark.queries")
+    assert len(want) == len(set(want)) > 0
+    for m, got in orders.items():
+        assert got == want, f"importing {m} first reorders the registry"

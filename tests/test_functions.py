@@ -253,7 +253,7 @@ def test_connected_components_fixture(spark):
 def test_lm_perplexity_uniform_doc(spark):
     """A two-doc corpus where doc 0 repeats one bigram: its cross-entropy
     must be strictly lower than the unique-bigram doc's."""
-    from indicators_spark.queries_corpus import lm_perplexity
+    from indicators_spark.queries.corpus import lm_perplexity
 
     docs = spark.createDataFrame(
         [(0, "a b a b a b a b"), (1, "c d e f g h")],

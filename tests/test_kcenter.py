@@ -9,7 +9,8 @@ import pytest
 from pyspark.sql import Row
 
 from indicators_spark.functions.similarity import kcenter_select
-from indicators_spark.queries_r8 import KC_K, _kcenter_spark, _kcenter_sql
+from indicators_spark.queries import QUERIES
+from indicators_spark.queries.similarity import KC_K
 
 SF = "/root/testdata/sf0.001"
 
@@ -17,12 +18,12 @@ SF = "/root/testdata/sf0.001"
 def test_matches_duckdb_oracle(spark):
     import duckdb
 
-    got = sorted(tuple(r) for r in _kcenter_spark(spark, SF).collect())
+    got = sorted(tuple(r) for r in QUERIES["similarity_kcenter_select"].spark(spark, SF).collect())
     con = duckdb.connect()
     con.execute(
         f"CREATE VIEW embeddings AS SELECT * FROM '{SF}/embeddings.parquet'"
     )
-    want = sorted(tuple(r) for r in con.execute(_kcenter_sql()).fetchall())
+    want = sorted(tuple(r) for r in con.execute(QUERIES["similarity_kcenter_select"].sql).fetchall())
     con.close()
     assert got == want and len(got) == KC_K
 
@@ -68,7 +69,7 @@ def test_matches_bruteforce_gonzalez(spark):
 
 
 def test_invariant_under_partitioning(spark):
-    from indicators_spark.queries_ext import _emb
+    from indicators_spark.queries._base import _emb
 
     emb = _emb(spark, SF)
     base = sorted(tuple(r) for r in kcenter_select(emb, k=4).collect())

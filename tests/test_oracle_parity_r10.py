@@ -1,4 +1,4 @@
-"""r11/r12-PREPARED queries (queries_r10.py): full driver-style compare
+"""r11/r12-PREPARED queries (queries package): full driver-style compare
 pinned locally one-or-two rounds before registration — the standing
 recipe (kcenter/pack in r8→r9, compression/KS/match in r9→r10) that has
 made every prepared registration green first-try."""
@@ -10,15 +10,8 @@ import math
 import pandas as pd
 import pytest
 
-from indicators_spark.queries_r10 import (
-    KC_CARRY_K,
-    _bpe_encode_spark,
-    _bpe_encode_sql,
-    _kcenter_carry_spark,
-    _kcenter_carry_sql,
-    _psi_drift_spark,
-    _psi_drift_sql,
-)
+from indicators_spark.queries import QUERIES
+from indicators_spark.queries.similarity import KC_CARRY_K
 from indicators_spark.testing import compare_frames, duck_connect
 
 from conftest import SF_SMOKE
@@ -28,9 +21,9 @@ def test_kcenter_carry_matches_oracle(spark):
     """The carry-form trajectory at k=10 hash-matches the unrolled-CTE
     oracle — the same compare the driver will run, on the dispatch arm
     the registered k=6 query never exercises."""
-    got = _kcenter_carry_spark(spark, SF_SMOKE)
+    got = QUERIES["similarity_kcenter_carry"].spark(spark, SF_SMOKE)
     con = duck_connect(SF_SMOKE)
-    want: pd.DataFrame = con.execute(_kcenter_carry_sql()).fetchdf()
+    want: pd.DataFrame = con.execute(QUERIES["similarity_kcenter_carry"].sql).fetchdf()
     res = compare_frames("similarity_kcenter_carry", got.toPandas(), want)
     con.close()
     assert res.ok, str(res)
@@ -42,7 +35,7 @@ def test_kcenter_carry_runs_the_carry_arm(spark):
     what the auto-dispatch would pick at that k (KCENTER_CARRY_K = 8) —
     the registered row is evidence for the defaulting caller's arm."""
     from indicators_spark.functions.similarity import KCENTER_CARRY_K
-    from indicators_spark.queries_ext import _emb
+    from indicators_spark.queries._base import _emb
     from indicators_spark.functions.similarity import kcenter_select
 
     assert KC_CARRY_K > KCENTER_CARRY_K
@@ -51,15 +44,15 @@ def test_kcenter_carry_runs_the_carry_arm(spark):
         for r in kcenter_select(_emb(spark, SF_SMOKE), k=KC_CARRY_K).collect()
     )
     forced = sorted(
-        tuple(r) for r in _kcenter_carry_spark(spark, SF_SMOKE).collect()
+        tuple(r) for r in QUERIES["similarity_kcenter_carry"].spark(spark, SF_SMOKE).collect()
     )
     assert auto == forced
 
 
 def test_psi_drift_matches_oracle(spark):
-    got = _psi_drift_spark(spark, SF_SMOKE)
+    got = QUERIES["stats_psi_drift"].spark(spark, SF_SMOKE)
     con = duck_connect(SF_SMOKE)
-    want: pd.DataFrame = con.execute(_psi_drift_sql()).fetchdf()
+    want: pd.DataFrame = con.execute(QUERIES["stats_psi_drift"].sql).fetchdf()
     res = compare_frames("stats_psi_drift", got.toPandas(), want)
     con.close()
     assert res.ok, str(res)
@@ -145,9 +138,9 @@ def test_bpe_encode_matches_oracle(spark):
     """Train-then-encode hash-matches the single-statement oracle that
     replays BOTH halves (trainer m1..m4 CTEs + per-word merge replay) —
     end-to-end train→encode parity, not just the encoder."""
-    got = _bpe_encode_spark(spark, SF_SMOKE)
+    got = QUERIES["text_bpe_encode"].spark(spark, SF_SMOKE)
     con = duck_connect(SF_SMOKE)
-    want: pd.DataFrame = con.execute(_bpe_encode_sql()).fetchdf()
+    want: pd.DataFrame = con.execute(QUERIES["text_bpe_encode"].sql).fetchdf()
     res = compare_frames("text_bpe_encode", got.toPandas(), want)
     con.close()
     assert res.ok, str(res)
@@ -167,7 +160,7 @@ def test_prepped_invariant_under_partitioning(spark):
     """The hash-compared outputs must not depend on partial-agg merge
     order or AQE (the r8 audit-invariance pattern), including the
     trainer's collected merge table inside text_bpe_encode."""
-    for fn in (_psi_drift_spark, _bpe_encode_spark, _kcenter_carry_spark):
+    for fn in (QUERIES["stats_psi_drift"].spark, QUERIES["text_bpe_encode"].spark, QUERIES["similarity_kcenter_carry"].spark):
 
         def snap():
             return sorted(tuple(r) for r in fn(spark, SF_SMOKE).collect())
@@ -226,19 +219,14 @@ def test_edge_quantizer_magnitude_guard(spark):
 
 # --------------------------------------------------------------------- #
 # r10-built preps: prefix-filtered Jaccard + per-group quantile
-# normalization (queries_r10.py tail) — same one-round-early recipe.
+# normalization (queries/corpus.py) — same one-round-early recipe.
 # --------------------------------------------------------------------- #
 
 
 def test_jaccard_prefix_matches_oracle(spark):
-    from indicators_spark.queries_r10 import (
-        _jaccard_prefix_spark,
-        _jaccard_prefix_sql,
-    )
-
-    got = _jaccard_prefix_spark(spark, SF_SMOKE)
+    got = QUERIES["dedup_jaccard_prefix"].spark(spark, SF_SMOKE)
     con = duck_connect(SF_SMOKE)
-    want: pd.DataFrame = con.execute(_jaccard_prefix_sql()).fetchdf()
+    want: pd.DataFrame = con.execute(QUERIES["dedup_jaccard_prefix"].sql).fetchdf()
     res = compare_frames("dedup_jaccard_prefix", got.toPandas(), want)
     con.close()
     assert res.ok, str(res)
@@ -317,11 +305,9 @@ def test_jaccard_prefix_adversarial_small_frame(spark):
 
 
 def test_qnorm_matches_oracle(spark):
-    from indicators_spark.queries_r10 import _qnorm_spark, _qnorm_sql
-
-    got = _qnorm_spark(spark, SF_SMOKE)
+    got = QUERIES["quality_quantile_normalize"].spark(spark, SF_SMOKE)
     con = duck_connect(SF_SMOKE)
-    want: pd.DataFrame = con.execute(_qnorm_sql()).fetchdf()
+    want: pd.DataFrame = con.execute(QUERIES["quality_quantile_normalize"].sql).fetchdf()
     res = compare_frames("quality_quantile_normalize", got.toPandas(), want)
     con.close()
     assert res.ok, str(res)
@@ -401,14 +387,9 @@ def test_qnorm_partition_invariant(spark):
 
 
 def test_decon_neardup_matches_oracle(spark):
-    from indicators_spark.queries_r10 import (
-        _decon_neardup_spark,
-        _decon_neardup_sql,
-    )
-
-    got = _decon_neardup_spark(spark, SF_SMOKE)
+    got = QUERIES["decontaminate_neardup"].spark(spark, SF_SMOKE)
     con = duck_connect(SF_SMOKE)
-    want: pd.DataFrame = con.execute(_decon_neardup_sql()).fetchdf()
+    want: pd.DataFrame = con.execute(QUERIES["decontaminate_neardup"].sql).fetchdf()
     res = compare_frames("decontaminate_neardup", got.toPandas(), want)
     con.close()
     assert res.ok, str(res)
@@ -460,14 +441,9 @@ def test_jaccard_join_prefix_matches_bruteforce(spark):
 
 
 def test_median_selection_matches_oracle(spark):
-    from indicators_spark.queries_r10 import (
-        _median_selection_spark,
-        _median_selection_sql,
-    )
-
-    got = _median_selection_spark(spark, SF_SMOKE)
+    got = QUERIES["analytic_median_selection"].spark(spark, SF_SMOKE)
     con = duck_connect(SF_SMOKE)
-    want: pd.DataFrame = con.execute(_median_selection_sql()).fetchdf()
+    want: pd.DataFrame = con.execute(QUERIES["analytic_median_selection"].sql).fetchdf()
     res = compare_frames("analytic_median_selection", got.toPandas(), want)
     con.close()
     assert res.ok, str(res)
@@ -475,14 +451,9 @@ def test_median_selection_matches_oracle(spark):
 
 
 def test_group_median_selection_matches_oracle(spark):
-    from indicators_spark.queries_r10 import (
-        _group_median_spark,
-        _group_median_sql,
-    )
-
-    got = _group_median_spark(spark, SF_SMOKE)
+    got = QUERIES["analytic_group_median_selection"].spark(spark, SF_SMOKE)
     con = duck_connect(SF_SMOKE)
-    want: pd.DataFrame = con.execute(_group_median_sql()).fetchdf()
+    want: pd.DataFrame = con.execute(QUERIES["analytic_group_median_selection"].sql).fetchdf()
     res = compare_frames(
         "analytic_group_median_selection", got.toPandas(), want
     )
@@ -492,14 +463,9 @@ def test_group_median_selection_matches_oracle(spark):
 
 
 def test_robust_scale_matches_oracle(spark):
-    from indicators_spark.queries_r10 import (
-        _robust_scale_spark,
-        _robust_scale_sql,
-    )
-
-    got = _robust_scale_spark(spark, SF_SMOKE)
+    got = QUERIES["analytic_robust_scale"].spark(spark, SF_SMOKE)
     con = duck_connect(SF_SMOKE)
-    want: pd.DataFrame = con.execute(_robust_scale_sql()).fetchdf()
+    want: pd.DataFrame = con.execute(QUERIES["analytic_robust_scale"].sql).fetchdf()
     res = compare_frames("analytic_robust_scale", got.toPandas(), want)
     con.close()
     assert res.ok, str(res)

@@ -10,20 +10,17 @@ from __future__ import annotations
 
 import pandas as pd
 
-from indicators_spark.queries_r11 import (
-    HLL_ROLLUP_TOL,
-    _HLL_ROLLUP_AUDIT_SQL,
-    _hll_rollup_audit_spark,
-)
+from indicators_spark.queries import QUERIES
+from indicators_spark.queries.analytic import HLL_ROLLUP_TOL
 from indicators_spark.testing import compare_frames, duck_connect
 
 from conftest import SF_SMOKE
 
 
 def test_hll_rollup_audit_matches_oracle(spark):
-    got = _hll_rollup_audit_spark(spark, SF_SMOKE)
+    got = QUERIES["stats_hll_rollup_audit"].spark(spark, SF_SMOKE)
     con = duck_connect(SF_SMOKE)
-    want: pd.DataFrame = con.execute(_HLL_ROLLUP_AUDIT_SQL).fetchdf()
+    want: pd.DataFrame = con.execute(QUERIES["stats_hll_rollup_audit"].sql).fetchdf()
     res = compare_frames("stats_hll_rollup_audit", got.toPandas(), want)
     con.close()
     assert res.ok, str(res)
@@ -35,7 +32,7 @@ def test_hll_rollup_audit_verdicts_all_green(spark):
     """Every verdict true on both engines, with margin: the worst daily
     relative error sits well inside the band (≤ half of it), so the
     registered row can't flip on sketch-library noise."""
-    rows = _hll_rollup_audit_spark(spark, SF_SMOKE).collect()
+    rows = QUERIES["stats_hll_rollup_audit"].spark(spark, SF_SMOKE).collect()
     assert all(r["hll_ok"] for r in rows)
     days = [r for r in rows if r["day"] != "ALL"]
     alls = [r for r in rows if r["day"] == "ALL"]

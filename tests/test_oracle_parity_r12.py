@@ -1,24 +1,21 @@
 """Round-12 registrations: the eight queue entries keep their pins in
 tests/test_oracle_parity_r10.py (registration changed no code — the
-queries_r11.py precedent); the one NEW query this round,
+r11 precedent); the one NEW query this round,
 ``lineitem_rsi_halo_hinted``, gets the driver-style compare here (its
 plan shape and plain-form equality are pinned in test_plans_r12.py)."""
 
 from __future__ import annotations
 
-from indicators_spark.queries_r12 import (
-    _li_rsi_halo_hinted_spark,
-    _li_rsi_halo_hinted_sql,
-)
+from indicators_spark.queries import QUERIES
 from indicators_spark.testing import compare_frames, duck_connect
 
 from conftest import SF_SMOKE
 
 
 def test_li_rsi_halo_hinted_matches_oracle(spark):
-    got = _li_rsi_halo_hinted_spark(spark, SF_SMOKE).toPandas()
+    got = QUERIES["lineitem_rsi_halo_hinted"].spark(spark, SF_SMOKE).toPandas()
     con = duck_connect(SF_SMOKE)
-    want = con.execute(_li_rsi_halo_hinted_sql()).fetchdf()
+    want = con.execute(QUERIES["lineitem_rsi_halo_hinted"].sql).fetchdf()
     con.close()
     res = compare_frames("lineitem_rsi_halo_hinted", got, want)
     assert res.ok, str(res)
@@ -29,15 +26,11 @@ def test_weighted_median_selection_matches_oracle_dual_sf(spark):
     """r13-prep parity: the kernel's weighted median/p90 against the
     pure cumulative-weight order-statistic replay, at both SFs (the
     driver-style dual-SF pin every prep carries before registration)."""
-    from indicators_spark.queries_r12 import (
-        _weighted_median_selection_spark,
-        _weighted_median_selection_sql,
-    )
 
     for sf_dir in (SF_SMOKE, SF_SMOKE.replace("0.001", "0.01")):
-        got = _weighted_median_selection_spark(spark, sf_dir).toPandas()
+        got = QUERIES["analytic_weighted_median_selection"].spark(spark, sf_dir).toPandas()
         con = duck_connect(sf_dir)
-        want = con.execute(_weighted_median_selection_sql()).fetchdf()
+        want = con.execute(QUERIES["analytic_weighted_median_selection"].sql).fetchdf()
         con.close()
         res = compare_frames("analytic_weighted_median_selection", got, want)
         assert res.ok, f"{sf_dir}: {res}"
@@ -45,15 +38,11 @@ def test_weighted_median_selection_matches_oracle_dual_sf(spark):
 
 def test_group_weighted_median_matches_oracle_dual_sf(spark):
     """r13-prep parity for the grouped weighted selection."""
-    from indicators_spark.queries_r12 import (
-        _group_weighted_median_spark,
-        _group_weighted_median_sql,
-    )
 
     for sf_dir in (SF_SMOKE, SF_SMOKE.replace("0.001", "0.01")):
-        got = _group_weighted_median_spark(spark, sf_dir).toPandas()
+        got = QUERIES["analytic_group_weighted_median"].spark(spark, sf_dir).toPandas()
         con = duck_connect(sf_dir)
-        want = con.execute(_group_weighted_median_sql()).fetchdf()
+        want = con.execute(QUERIES["analytic_group_weighted_median"].sql).fetchdf()
         con.close()
         res = compare_frames("analytic_group_weighted_median", got, want)
         assert res.ok, f"{sf_dir}: {res}"

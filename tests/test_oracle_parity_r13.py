@@ -40,7 +40,7 @@ def test_kmeans_centers_match_lloyd_training(spark):
     trains (shared `_kmeans_train`): assigning the corpus with the
     returned list reproduces the lloyd assignment bit-for-bit."""
     from indicators_spark.functions import similarity
-    from indicators_spark.queries_ext import _emb
+    from indicators_spark.queries._base import _emb
 
     emb = _emb(spark, SF_SMOKE)
     cents = similarity.kmeans_centers(emb, k=8, iters=2)
@@ -62,7 +62,7 @@ def test_epoch_lifecycle_search_equals_single_snapshot(spark):
     content."""
     from indicators_spark.functions import similarity
     from indicators_spark.queries import QUERIES
-    from indicators_spark.queries_ext import _emb
+    from indicators_spark.queries._base import _emb
 
     emb = _emb(spark, SF_SMOKE)
     fresh = similarity.knn_ivf(

@@ -7,14 +7,7 @@ from __future__ import annotations
 
 import pandas as pd
 
-from indicators_spark.queries_r9 import (
-    _COMPRESS_AUDIT_SQL,
-    _KS_DRIFT_SQL,
-    _compress_audit_spark,
-    _ks_drift_spark,
-    _match_dist_spark,
-    _match_dist_sql,
-)
+from indicators_spark.queries import QUERIES
 from indicators_spark.testing import compare_frames, duck_connect
 
 from conftest import SF_SMOKE
@@ -24,22 +17,22 @@ def test_compress_audit_matches_oracle(spark):
     """The compression audit's one-row verdict hash-matches the DuckDB
     expectation at sf0.001 AND the verdicts are all True (the bands sit
     ≥5× from the measured ratios, so a flip means the UDF broke)."""
-    got = _compress_audit_spark(spark, SF_SMOKE)
+    got = QUERIES["audit_compression_ratio"].spark(spark, SF_SMOKE)
     row = got.collect()[0]
     assert row["repeat_ok"] and row["hex_ok"] and row["doubled_lt_hex"]
     assert row["n_docs"] > 0
 
     con = duck_connect(SF_SMOKE)
-    want: pd.DataFrame = con.execute(_COMPRESS_AUDIT_SQL).fetchdf()
+    want: pd.DataFrame = con.execute(QUERIES["audit_compression_ratio"].sql).fetchdf()
     res = compare_frames("audit_compression_ratio", got.toPandas(), want)
     con.close()
     assert res.ok, str(res)
 
 
 def test_ks_drift_matches_oracle(spark):
-    got = _ks_drift_spark(spark, SF_SMOKE)
+    got = QUERIES["stats_ks_drift"].spark(spark, SF_SMOKE)
     con = duck_connect(SF_SMOKE)
-    want: pd.DataFrame = con.execute(_KS_DRIFT_SQL).fetchdf()
+    want: pd.DataFrame = con.execute(QUERIES["stats_ks_drift"].sql).fetchdf()
     res = compare_frames("stats_ks_drift", got.toPandas(), want)
     con.close()
     assert res.ok, str(res)
@@ -78,9 +71,9 @@ def test_match_distribution_matches_oracle(spark):
     """Row-level replay: the KEPT rows (not just their histogram) hash-
     match the SQL rendering of quantile edges → bucket counts → water-
     level rates → md5 hash filter."""
-    got = _match_dist_spark(spark, SF_SMOKE)
+    got = QUERIES["sample_match_distribution"].spark(spark, SF_SMOKE)
     con = duck_connect(SF_SMOKE)
-    want: pd.DataFrame = con.execute(_match_dist_sql()).fetchdf()
+    want: pd.DataFrame = con.execute(QUERIES["sample_match_distribution"].sql).fetchdf()
     res = compare_frames("sample_match_distribution", got.toPandas(), want)
     con.close()
     assert res.ok, str(res)
@@ -88,14 +81,9 @@ def test_match_distribution_matches_oracle(spark):
 
 
 def test_line_selfdedup_matches_oracle(spark):
-    from indicators_spark.queries_r9 import (
-        _line_selfdedup_spark,
-        _line_selfdedup_sql,
-    )
-
-    got = _line_selfdedup_spark(spark, SF_SMOKE)
+    got = QUERIES["dedup_lines_within_doc"].spark(spark, SF_SMOKE)
     con = duck_connect(SF_SMOKE)
-    want: pd.DataFrame = con.execute(_line_selfdedup_sql()).fetchdf()
+    want: pd.DataFrame = con.execute(QUERIES["dedup_lines_within_doc"].sql).fetchdf()
     res = compare_frames("dedup_lines_within_doc", got.toPandas(), want)
     con.close()
     assert res.ok, str(res)
@@ -136,14 +124,9 @@ def test_line_selfdedup_keep_first_bruteforce(spark):
 
 
 def test_bpe_merges_match_oracle(spark):
-    from indicators_spark.queries_r9 import (
-        _bpe_merges_spark,
-        _bpe_merges_sql,
-    )
-
-    got = _bpe_merges_spark(spark, SF_SMOKE)
+    got = QUERIES["text_bpe_merges"].spark(spark, SF_SMOKE)
     con = duck_connect(SF_SMOKE)
-    want: pd.DataFrame = con.execute(_bpe_merges_sql()).fetchdf()
+    want: pd.DataFrame = con.execute(QUERIES["text_bpe_merges"].sql).fetchdf()
     res = compare_frames("text_bpe_merges", got.toPandas(), want)
     con.close()
     assert res.ok, str(res)

@@ -101,12 +101,12 @@ def test_single_sequence_when_budget_exceeds_corpus(spark, docs):
 
 def test_layout_matches_duckdb_oracle(spark):
     """The full layout replays exactly in ANSI SQL — pinned against the
-    REGISTERED oracle itself (queries_r9._pack_sql), not a copy: the
+    REGISTERED oracle itself (queries.pipeline._pack_sql), not a copy: the
     r8/r9 rounds each needed a synchronized dual edit (BIGINT casts,
     NULL-id COALESCE) before this import replaced the duplicate."""
     import duckdb
 
-    from indicators_spark.queries_r9 import _pack_sql
+    from indicators_spark.queries.pipeline import _pack_sql
     from indicators_spark.sources.prices import load_table
 
     sf = "/root/testdata/sf0.001"
@@ -146,7 +146,7 @@ def test_null_doc_id_matches_oracle(spark):
         (tuple(r) for r in pack_token_stream(docs, 4).collect()), key=key
     )
 
-    from indicators_spark.queries_r9 import _pack_sql
+    from indicators_spark.queries.pipeline import _pack_sql
 
     con = duckdb.connect()
     con.register("documents", pdf)

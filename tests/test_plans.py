@@ -271,7 +271,7 @@ def test_ivfpq_corpus_side_is_map_only(spark):
     """The IVFPQ stored index — (cell, PQ codes) per corpus row — must be
     zero-exchange: coarse assignment and all n_sub code argmins happen in
     a single Arrow-batched map stage feeding the broadcast join."""
-    from indicators_spark.queries_ext import _PQ_CODES, _PQ_SUB  # noqa: F401
+    from indicators_spark.queries.ext import _PQ_CODES, _PQ_SUB  # noqa: F401
     from indicators_spark.sources.prices import load_table
 
     df = QUERIES["similarity_knn_ivfpq"].spark(spark, SF_SMOKE)

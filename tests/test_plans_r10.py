@@ -1,4 +1,4 @@
-"""Plan checks for the r11/r12-prepared queries (queries_r10.py),
+"""Plan checks for the r11/r12-prepared queries (queries package),
 pinned one-round-early like their oracles (tests/test_oracle_parity_r10).
 
 similarity_kcenter_carry is deliberately absent: like the registered
@@ -13,13 +13,13 @@ from __future__ import annotations
 import pytest
 
 from indicators_spark.plans import plan_string
-from indicators_spark.queries_r10 import _bpe_encode_spark, _psi_drift_spark
+from indicators_spark.queries import QUERIES
 
 from conftest import SF_SMOKE
 
 PREPPED = {
-    "stats_psi_drift": _psi_drift_spark,
-    "text_bpe_encode": _bpe_encode_spark,
+    "stats_psi_drift": QUERIES["stats_psi_drift"].spark,
+    "text_bpe_encode": QUERIES["text_bpe_encode"].spark,
 }
 
 
@@ -43,7 +43,7 @@ def test_psi_scans_only_needed_columns_and_shuffles_cells(spark):
     and the only wide-data hash exchange is the (group, bin) cell
     aggregate (its child is the partial HashAggregate, never raw rows);
     the edge/pool/scalar tables reach the data side as broadcasts."""
-    plan = plan_string(_psi_drift_spark(spark, SF_SMOKE))
+    plan = plan_string(QUERIES["stats_psi_drift"].spark(spark, SF_SMOKE))
     assert "text" not in plan, plan
     assert "SortMergeJoin" not in plan, plan
     for ex, child in _exchange_children(plan):
@@ -60,7 +60,7 @@ def test_bpe_encode_output_plan_is_map_only(spark):
     per-merge scans run eagerly at build time, driver-looped like
     kcenter/kmeans; this pins the plan every downstream consumer
     actually pays for per row.)"""
-    plan = plan_string(_bpe_encode_spark(spark, SF_SMOKE))
+    plan = plan_string(QUERIES["text_bpe_encode"].spark(spark, SF_SMOKE))
     assert "Exchange" not in plan, plan
     assert "BatchEvalPython" not in plan, plan
     assert "ArrowEvalPython" in plan, plan
@@ -91,9 +91,8 @@ def test_jaccard_prefix_plan_no_cartesian_no_text_shuffle(spark):
     id keys — no CartesianProduct anywhere, and the ubiquitous-token +
     prefix tables reach the big side as broadcasts or hash joins, never
     a nested loop over data."""
-    from indicators_spark.queries_r10 import _jaccard_prefix_spark
 
-    plan = plan_string(_jaccard_prefix_spark(spark, SF_SMOKE))
+    plan = plan_string(QUERIES["dedup_jaccard_prefix"].spark(spark, SF_SMOKE))
     assert "CartesianProduct" not in plan, plan
 
 
@@ -103,9 +102,8 @@ def test_qnorm_plan_shape(spark):
     SinglePartition exchange feeds a bounded table (the ≤groups·buckets
     offset prefix-sums), never the document rows — the rank kernels'
     contract."""
-    from indicators_spark.queries_r10 import _qnorm_spark
 
-    plan = plan_string(_qnorm_spark(spark, SF_SMOKE))
+    plan = plan_string(QUERIES["quality_quantile_normalize"].spark(spark, SF_SMOKE))
     assert "CartesianProduct" not in plan, plan
     assert "text" not in plan, plan
     # bounded-table SinglePartition windows only: their input subtree
@@ -118,9 +116,7 @@ def test_qnorm_plan_shape(spark):
 
 
 def test_decon_neardup_plan_no_cartesian(spark):
-    from indicators_spark.queries_r10 import _decon_neardup_spark
-
-    plan = plan_string(_decon_neardup_spark(spark, SF_SMOKE))
+    plan = plan_string(QUERIES["decontaminate_neardup"].spark(spark, SF_SMOKE))
     assert "CartesianProduct" not in plan, plan
 
 
@@ -128,13 +124,9 @@ def test_robust_scale_and_selection_preps_no_cartesian(spark):
     """The two selection-built preps return broadcast-joined row-level
     plans (robust scale) or driver-literal tables (group median); no
     CartesianProduct, and robust scale's scan must prune `text`."""
-    from indicators_spark.queries_r10 import (
-        _group_median_spark,
-        _robust_scale_spark,
-    )
 
-    plan = plan_string(_robust_scale_spark(spark, SF_SMOKE))
+    plan = plan_string(QUERIES["analytic_robust_scale"].spark(spark, SF_SMOKE))
     assert "CartesianProduct" not in plan, plan
     assert "text" not in plan, plan
-    plan2 = plan_string(_group_median_spark(spark, SF_SMOKE))
+    plan2 = plan_string(QUERIES["analytic_group_median_selection"].spark(spark, SF_SMOKE))
     assert "CartesianProduct" not in plan2, plan2

@@ -9,7 +9,7 @@ import datetime
 from pyspark.sql import functions as F
 
 from indicators_spark.plans import plan_string
-from indicators_spark.queries_r12 import _li_rsi_halo_hinted_spark
+from indicators_spark.queries import QUERIES
 
 from conftest import SF_SMOKE
 
@@ -58,7 +58,7 @@ def test_hinted_halo_engages_with_zero_pre_jobs(spark):
     assert "Exchange SinglePartition" not in plan, plan
     assert "_bucket" in plan, plan
     # the registered query builds the same shape
-    plan2 = plan_string(_li_rsi_halo_hinted_spark(spark, SF_SMOKE))
+    plan2 = plan_string(QUERIES["lineitem_rsi_halo_hinted"].spark(spark, SF_SMOKE))
     assert "Exchange SinglePartition" not in plan2, plan2
     assert "_bucket" in plan2, plan2
 
@@ -108,7 +108,7 @@ def test_hinted_halo_matches_plain_form(spark):
         F.col("l_extendedprice").alias("close"),
         F.col("l_quantity").cast("double").alias("volume"),
     )
-    from indicators_spark.queries import round4
+    from indicators_spark.queries._base import round4
 
     plain = (
         Indicators(
@@ -123,6 +123,6 @@ def test_hinted_halo_matches_plain_form(spark):
     want = Counter((r["seq"], r["close_rsi_14"]) for r in plain.collect())
     got = Counter(
         (r["seq"], r["close_rsi_14"])
-        for r in _li_rsi_halo_hinted_spark(spark, SF_SMOKE).collect()
+        for r in QUERIES["lineitem_rsi_halo_hinted"].spark(spark, SF_SMOKE).collect()
     )
     assert got == want

@@ -14,12 +14,6 @@ import pytest
 
 from indicators_spark.plans import plan_string
 from indicators_spark.queries import QUERIES
-from indicators_spark.queries_r9 import (
-    _compress_audit_spark,
-    _ks_drift_spark,
-    _line_selfdedup_spark,
-    _match_dist_spark,
-)
 
 from conftest import SF_SMOKE
 
@@ -34,12 +28,12 @@ R9 = ("pack_token_stream_128",)
 #: `_register` lines by one round and keep running against the now-
 #: registered callables
 R10 = {
-    "audit_compression_ratio": _compress_audit_spark,
-    "stats_ks_drift": _ks_drift_spark,
-    "sample_match_distribution": _match_dist_spark,
+    "audit_compression_ratio": QUERIES["audit_compression_ratio"].spark,
+    "stats_ks_drift": QUERIES["stats_ks_drift"].spark,
+    "sample_match_distribution": QUERIES["sample_match_distribution"].spark,
 }
 R11_PREP = {
-    "dedup_lines_within_doc": _line_selfdedup_spark,  # first in line for r11
+    "dedup_lines_within_doc": QUERIES["dedup_lines_within_doc"].spark,  # first in line for r11
 }
 PINNED = {**R10, **R11_PREP}
 

@@ -216,6 +216,9 @@ def test_zorder_key_matches_python_and_is_bijective(spark):
     for (x, y), z in got.items():
         assert z == _py_morton(x, y)
     assert len(set(got.values())) == len(pts)  # injective on the grid
+    # 9 dims x 8 bits = 72 > 63: shiftleft would wrap mod 64 and collide
+    with pytest.raises(ValueError, match="exceeds 63"):
+        zorder_key([F.col("x")] * 9, bits=8)
 
 
 # --------------------------------------------------------------------- #

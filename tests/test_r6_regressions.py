@@ -105,7 +105,7 @@ def test_binary_code_words_short_and_empty_vectors(spark):
 
 
 def test_substring_clean_null_text_spark_and_oracle(spark):
-    from indicators_spark.queries_r5 import _CLEAN_SQL, SUBSTR_N
+    from indicators_spark.queries.corpus import _CLEAN_SQL, SUBSTR_N
 
     span = " ".join(f"tok{i}" for i in range(SUBSTR_N + 2))
     docs = [

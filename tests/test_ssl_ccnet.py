@@ -137,7 +137,7 @@ def test_mmr_rank1_equals_bruteforce_top1(spark):
     from pyspark.sql import functions as F
 
     from indicators_spark.functions import similarity
-    from indicators_spark.queries_ext import _emb
+    from indicators_spark.queries._base import _emb
 
     emb = _emb(spark, SF_SMOKE)
     q = emb.filter(F.col("vec_id") < 10)
@@ -158,7 +158,7 @@ def test_mmr_lambda_one_equals_plain_topk(spark):
     from pyspark.sql import functions as F
 
     from indicators_spark.functions import similarity
-    from indicators_spark.queries_ext import _emb
+    from indicators_spark.queries._base import _emb
 
     emb = _emb(spark, SF_SMOKE)
     q = emb.filter(F.col("vec_id") < 5)
@@ -179,7 +179,7 @@ def test_mmr_grouped_bit_equals_relational(spark):
     from pyspark.sql import functions as F
 
     from indicators_spark.functions import similarity
-    from indicators_spark.queries_ext import _emb
+    from indicators_spark.queries._base import _emb
 
     emb = _emb(spark, SF_SMOKE)
     q = emb.filter(F.col("vec_id") < 10)
