@@ -189,6 +189,12 @@ _TOUCHED: dict[str, int] = {
     "analytic_weighted_median_selection": 15,
     "analytic_group_weighted_median": 15,
     "analytic_group_weighted_tail": 15,
+    # r15: fluent halo session touched again (the opt-in dual session
+    # and its binding sniff removed from _halo_part / _halo_bind_ready /
+    # _halo_decide):
+    "lineitem_rsi_halo": 15,
+    "lineitem_donchian_halo": 15,
+    "lineitem_rsi_halo_hinted": 15,
 }
 
 

@@ -618,50 +618,11 @@ def main() -> None:
         )
         return ind.collect()
 
-    def flagship_dual(s, d):
-        # VERDICT r13 #6 (granted): the opt-in dual-shape halo session
-        # for the faithful flagship chain — identical values (forced-
-        # dual equality pinned in tests/test_core_halo.py), but the
-        # global window family runs bucketed instead of single-task
-        ind = (
-            Indicators(
-                prices_from_events(s, d),
-                order_by=("timestamp", "seq"),
-                halo="dual",
-            )
-            .sma(["close"], 20)
-            .bollinger_bands(["close"], 20, 2)
-            .rsi(["close"], 14)
-            .daily_return(["close"])
-        )
-        return ind.collect()
-
-    def flagship_many_symbols_dual(s, d):
-        # the many-symbol frame in FAITHFUL mode under the dual session:
-        # global family bucketed, per-symbol family plain-parallel
-        from pyspark.sql import functions as F
-
-        p = prices_from_events(s, d).withColumn(
-            "symbol",
-            F.concat_ws("_", "symbol", (F.col("seq") % 16).cast("string")),
-        )
-        ind = (
-            Indicators(p, order_by=("timestamp", "seq"), halo="dual")
-            .sma(["close"], 20)
-            .bollinger_bands(["close"], 20, 2)
-            .rsi(["close"], 14)
-            .atr(14)
-            .daily_return(["close"])
-        )
-        return ind.collect()
-
     headline: dict[str, object] = {
         "pipeline": flagship,
         "pipeline_per_symbol": flagship_per_symbol,
         "pipeline_many_symbols": flagship_many_symbols,
         "pipeline_ewm_chain": flagship_ewm_chain,
-        "pipeline_dual": flagship_dual,
-        "pipeline_many_symbols_dual": flagship_many_symbols_dual,
     }
     for name in (
         "sma",

@@ -117,13 +117,11 @@ class Indicators(
         ``scale.HALO_MIN_ROWS`` rows per window partition, on symbol-less
         input (any mode) or per_symbol mode with real symbols; ``False``
         pins the plain windows, ``True`` forces the halo session at any
-        size (tests; callers who know better); ``"dual"`` (faithful
-        mode, multi-symbol frames — explicit opt-in only) buckets the
-        GLOBAL window family while the per-symbol family keeps plain
-        symbol-partitioned windows, with a demote/re-halo cycle at each
-        family alternation (see :meth:`_halo_bind_ready`).  ``halo_buckets`` defaults to the session's default
-        parallelism, capped so every bucket comfortably holds
-        ``halo_depth`` rows; ``halo_depth`` must cover the deepest
+        size (tests; callers who know better).  Faithful mode on a
+        multi-symbol frame always keeps the plain windows.
+        ``halo_buckets`` defaults to the session's default parallelism,
+        capped so every bucket comfortably holds ``halo_depth`` rows;
+        ``halo_depth`` must cover the deepest
         CHAINED lookback/lookahead an operator sequence composes before
         the session re-halos (a window of n charges n−1) — single calls
         needing more than ``halo_depth`` fall back to the plain window.
@@ -134,14 +132,8 @@ class Indicators(
         as ``scale.rolling_multi_auto``'s ``bounds``/``n_rows``."""
         if partition_mode not in ("faithful", "per_symbol"):
             raise ValueError(f"unknown partition_mode: {partition_mode!r}")
-        if halo not in (None, True, False, "dual"):
+        if halo not in (None, True, False):
             raise ValueError(f"unknown halo mode: {halo!r}")
-        if halo == "dual" and partition_mode != "faithful":
-            raise ValueError(
-                "halo='dual' serves FAITHFUL mode on multi-symbol frames "
-                "(mixed global/per-symbol window families); per_symbol "
-                "mode's single family is covered by halo=True/auto"
-            )
         self._symbol_flag = False
         # case-insensitive probe: Spark resolves withColumn("symbol", ...)
         # against an existing "Symbol" column under the default
@@ -150,10 +142,6 @@ class Indicators(
         if not any(c.lower() == "symbol" for c in df.columns):
             self._symbol_flag = True
             df = df.withColumn("symbol", F.lit("x"))
-        if halo == "dual" and self._symbol_flag:
-            # symbol-less input: every window is effectively global —
-            # the standard forced session IS the dual session
-            halo = True
         # Pending (unflushed) EWM program: consecutive EWM-based operators
         # fuse into ONE applyInPandas pass / one exchange (see _ewm).
         self._pending: list[Step] = []
@@ -336,14 +324,6 @@ class Indicators(
             self._halo_decide()
         if not self._halo_on:
             return part
-        if self._halo_cfg == "dual" and not global_op:
-            # dual session, per-symbol family: plain symbol-partitioned
-            # window — no bucket key, no halo budget charge (these
-            # windows never read halo rows; :meth:`_halo_bind_ready`
-            # demotes the frame before such a window binds).  Leaves
-            # ``_halo_fresh_op`` untouched so a global spec created
-            # later at the same operator entry can still re-engage.
-            return part
         if self._halo_demoted and self._halo_fresh_op:
             # first spec of a NEW operator after a demotion: re-engage
             # lazily — the actual rebucket happens at binding time in
@@ -389,7 +369,7 @@ class Indicators(
         self._live_fwd = 0
         self._halo_fresh_op = True
 
-    def _halo_bind_ready(self, cols: dict | None = None) -> None:
+    def _halo_bind_ready(self) -> None:
         """Called by :meth:`_with` before expressions bind: settle the
         live budget charges against the session.
 
@@ -403,15 +383,6 @@ class Indicators(
           the operator's remaining bindings run with global window
           semantics (exactness over plan shape — raise ``halo_depth``
           to keep such a chain parallel).
-
-        DUAL sessions additionally inspect the binding itself: a
-        per-symbol window frame counts physical ROWS, so binding one
-        over a frame holding halo duplicates would silently shift its
-        lookback — the binding's expressions are sniffed (their
-        unresolved SQL rendering names the partition keys) and any
-        per-symbol window demotes the frame first (exact; global specs
-        in the same operator then run single-task via the pinned
-        ``_bucket``, and the next operator's global spec re-engages).
         """
         if not self._halo_on:
             return
@@ -419,22 +390,6 @@ class Indicators(
         self._pending_specs = 0
         if self._halo_demoted:
             return  # binding runs globally on the demoted frame — exact
-        if self._halo_cfg == "dual" and cols is not None:
-            has_p = False
-            for c in cols.values():
-                try:
-                    s = c._jc.toString()
-                except Exception:
-                    has_p = True  # can't sniff → safest exact shape
-                    break
-                # key followed by a delimiter — "symbolic" must not match
-                if "PARTITION BY symbol " in s or "PARTITION BY symbol," in s:
-                    has_p = True
-                    break
-            if has_p:
-                if self._halo_active:
-                    self._halo_demote()
-                return
         lb, lf = self._live_back, self._live_fwd
         if not ps and not lb and not lf:
             # no live window specs at all (cumulative/fill/EWM operators
@@ -462,34 +417,19 @@ class Indicators(
         from .scale import HALO_MIN_ROWS
 
         self._halo_on = False
-        # the session serves three shapes exactly: a symbol-less frame
-        # (every window effectively global — halos flow globally),
+        # the session serves two shapes exactly: a symbol-less frame
+        # (every window effectively global — halos flow globally) and
         # per_symbol mode with real symbols (EVERY window partitions by
         # symbol — halos flow within each symbol, parallelism becomes
-        # #symbols × #buckets instead of #symbols), and — opt-in via
-        # ``halo="dual"`` — faithful mode on a multi-symbol frame, where
-        # the GLOBAL window family runs bucketed (halos flow globally)
-        # while the per-symbol family keeps plain hash-partitioned
-        # windows (already parallel by #symbols; a per-symbol window
-        # over a halo'd frame would count duplicate rows, so a binding
-        # containing one demotes the frame first — see
-        # :meth:`_halo_bind_ready`).  AUTO dispatch on faithful
-        # multi-symbol stays plain: engaging dual costs a demote/
-        # re-halo cycle per family alternation, a trade only the caller
-        # can judge.
+        # #symbols × #buckets instead of #symbols).  Faithful mode on a
+        # multi-symbol frame mixes global and per-symbol windows, and a
+        # per-symbol window over a halo'd frame would count the global
+        # halo rows, so that shape stays plain.
         if self._halo_cfg is False:
             return
-        if (
-            not self._symbol_flag
-            and self._mode != "per_symbol"
-            and self._halo_cfg != "dual"
-        ):
+        if not self._symbol_flag and self._mode != "per_symbol":
             return
-        self._halo_pcols = (
-            ()
-            if (self._symbol_flag or self._halo_cfg == "dual")
-            else ("symbol",)
-        )
+        self._halo_pcols = () if self._symbol_flag else ("symbol",)
         if (
             self._halo_cfg is None
             and self._halo_hint_rows is not None
@@ -669,7 +609,7 @@ class Indicators(
         self._pending_specs = 0
 
     def _with(self, cols: dict) -> None:
-        self._halo_bind_ready(cols)
+        self._halo_bind_ready()
         self._df = self._df.withColumns(cols)
 
     def _drop(self, *names: str) -> None:

@@ -1567,12 +1567,12 @@ _register(
 
 def _group_weighted_tail_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source quantity-weighted p90 AND p99 of l_extendedprice via
-    the ``ks``-map form: the per-group ranks are computed from one
-    skinny per-group weight aggregate (broadcast-sized — one row per
-    source), then both tail ranks refine ALL groups in shared
-    histogram passes.  This is the gate shape curation pipelines run
-    per source ("drop a source's docs above its token-weighted p99
-    length")."""
+    the ``frac`` form: each group's weight rank is the exact integer
+    ``ceil(frac·W_g)`` (= the oracle's ``(9·W+9)//10`` and
+    ``(99·W+99)//100``), taken from the engine's own per-group stats
+    pass, and each tail refines ALL groups in shared histogram passes.
+    This is the gate shape curation pipelines run per source ("drop a
+    source's docs above its token-weighted p99 length")."""
     from pyspark.sql import functions as F
 
     from ..scale import kth_element_by_group_weighted
@@ -1583,17 +1583,9 @@ def _group_weighted_tail_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         & F.col("l_quantity").isNotNull()
         & F.col("l_returnflag").isNotNull()
     )
-    totals = {
-        r["g"]: int(r["tw"])
-        for r in li.groupBy(F.col("l_returnflag").alias("g"))
-        .agg(F.sum(F.col("l_quantity").cast("long")).alias("tw"))
-        .collect()
-    }
-    wks90 = {g: (9 * tw + 9) // 10 for g, tw in totals.items()}
-    wks99 = {g: (99 * tw + 99) // 100 for g, tw in totals.items()}
     p90 = kth_element_by_group_weighted(
         li, "l_extendedprice", "l_quantity", "l_returnflag",
-        wks=wks90, final_rows=4096,
+        frac=0.9, final_rows=4096,
     ).select(
         "l_returnflag",
         "total_w",
@@ -1602,7 +1594,7 @@ def _group_weighted_tail_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     p99 = kth_element_by_group_weighted(
         li, "l_extendedprice", "l_quantity", "l_returnflag",
-        wks=wks99, final_rows=4096,
+        frac=0.99, final_rows=4096,
     ).select(
         "l_returnflag",
         F.col("wk").alias("wk99"),

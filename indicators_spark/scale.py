@@ -553,10 +553,8 @@ def parquet_footer_stats(
 #: mis-gating just below costs a bounded single-task stage, while the
 #: old 8M gate left a 3–4× win on the table across 2–8M rows (and the
 #: single-task sort grows super-linearly from there).  Override per
-#: call via ``min_rows`` / ``halo=``, or fleet-wide via
-#: ``SPARK_GRAFT_HALO_MIN_ROWS`` for clusters whose exchange/compute
-#: balance differs from the measured host.
-HALO_MIN_ROWS = int(os.environ.get("SPARK_GRAFT_HALO_MIN_ROWS", 2_000_000))
+#: call via ``min_rows`` / ``halo=``.
+HALO_MIN_ROWS = 2_000_000
 
 #: Engage threshold for the fluent API's PER-SYMBOL halo sessions, in
 #: rows per symbol.  Higher than the global threshold because the plain
@@ -576,9 +574,7 @@ HALO_MIN_ROWS = int(os.environ.get("SPARK_GRAFT_HALO_MIN_ROWS", 2_000_000))
 #: inherits the unbounded spill regime.  `halo=True` / `False` force
 #: either form where the caller knows better (e.g. a real cluster with
 #: far more cores than symbols).
-PER_KEY_HALO_MIN_ROWS = int(
-    os.environ.get("SPARK_GRAFT_PER_KEY_HALO_MIN_ROWS", 16_000_000)
-)
+PER_KEY_HALO_MIN_ROWS = 16_000_000
 
 
 def rolling_multi_auto(

@@ -415,143 +415,10 @@ def test_boundary_with_pending_specs_fails_loudly(spark):
     ind2._halo_op_boundary()  # no raise
 
 
-def _multi_prices(spark, n=900, nsym=3, gap_sym=True):
-    """Deterministic multi-symbol OHLCV frame, interleaved timestamps.
-    With ``gap_sym`` the last symbol is ABSENT for the middle third of
-    the time range — the presence-skew case a shared bucketed frame
-    must survive."""
-    base = datetime.datetime(2024, 1, 1)
-    rows = []
-    for i in range(n):
-        s = i % nsym
-        if gap_sym and s == nsym - 1 and n // 3 <= i < 2 * n // 3:
-            s = 0  # symbol C goes dark mid-range
-        c = 100.0 + 10.0 * ((i * 37) % 101) / 101 - 5.0 * ((i * 17) % 53) / 53
-        h = c + 1.0 + ((i * 7) % 13) / 13
-        lo = c - 1.0 - ((i * 11) % 17) / 17
-        v = 1000.0 + (i * 97) % 503
-        rows.append((
-            base + datetime.timedelta(minutes=i), f"S{s}",
-            float((h + lo) / 2), float(h), float(lo), float(c), float(v),
-        ))
-    return spark.createDataFrame(
-        rows,
-        "timestamp timestamp, symbol string, open double, high double, "
-        "low double, close double, volume double",
-    )
-
-
-def _dual_chain(ind: Indicators) -> Indicators:
-    """Faithful-mode mix of BOTH window families: per-symbol (sma,
-    bollinger, awesome_oscillator), global (roc, dpo, stochastic,
-    williams, aroon, ichimoku, atr), and the mixed-family rsi (global
-    delta feeding per-symbol means) — the binding-level sniff's
-    hardest case."""
-    return (
-        ind.sma(["close"], 5)
-        .rsi(["close"], 7)
-        .bollinger_bands(["close"], 6, 2)
-        .roc(["close"], 9)
-        .dpo(["close"], 8)
-        .awesome_oscillator(4, 9)
-        .stochastic_oscillator(7)
-        .williams_ri(7)
-        .aroon(6)
-        .ichimoku(5, 6, 8)
-        .daily_return(["close"])
-        .atr(5)
-    )
-
-
-@pytest.mark.parametrize("gap_sym", [False, True])
-def test_dual_halo_chain_equals_plain_multi_symbol(spark, gap_sym):
-    """VERDICT r12 #5: forced halo='dual' on a faithful-mode
-    multi-symbol frame == plain windows, across both window families
-    and the mixed-family rsi, including a symbol with a mid-range
-    presence gap."""
-    src = _multi_prices(spark, n=900, gap_sym=gap_sym)
-    plain = _dual_chain(Indicators(src, halo=False)).collect()
-    ind = Indicators(src, halo="dual", halo_buckets=4, halo_depth=64)
-    dual = _dual_chain(ind).collect()
-    assert ind._halo_on is True  # the session actually engaged
-    # the family alternation exercised the demote → re-engage cycle
-    assert ind._halo_rebuckets >= 2, ind._halo_rebuckets
-    assert _rows(plain) == _rows(dual)
-
-
-def test_dual_halo_global_family_plans_bucketed(spark):
-    """The dual session's reason to exist: a pure-global-family chain
-    on a multi-symbol frame plans NO single-partition window, while
-    the plain form (negative control) does."""
-    src = _multi_prices(spark, n=900)
-    ind = Indicators(src, halo="dual", halo_buckets=4, halo_depth=64)
-    ind.roc(["close"], 9).atr(5)
-    df = ind.collect()
-    plan = plan_string(df)
-    assert "Exchange SinglePartition" not in plan, plan
-    plain = Indicators(src, halo=False).roc(["close"], 9).atr(5).collect()
-    assert "Exchange SinglePartition" in plan_string(plain)
-    assert _rows(plain) == _rows(df)
-
-
 def test_dual_halo_guards(spark):
-    src = _multi_prices(spark, n=120)
-    with pytest.raises(ValueError, match="FAITHFUL"):
-        Indicators(src, partition_mode="per_symbol", halo="dual")
-    with pytest.raises(ValueError, match="unknown halo mode"):
-        Indicators(src, halo="both")
-    # symbol-less input: dual degrades to the forced global session
-    nosym = src.drop("symbol")
-    ind = Indicators(nosym, halo="dual", halo_buckets=3, halo_depth=64)
-    ind.sma(["close"], 5)
-    assert ind._halo_cfg is True
-    want = Indicators(nosym, halo=False).sma(["close"], 5).collect()
-    assert _rows(want) == _rows(ind.collect())
-
-
-def test_dual_halo_with_ewm_and_cumulative(spark):
-    """EWM (per-symbol family via applyInPandas) and cumulative ops
-    (session-demoting) interleaved with global windows under dual."""
-    src = _multi_prices(spark, n=600)
-
-    def build(ind):
-        return (
-            ind.sma(["close"], 5)
-            .ema(["close"], 6)
-            .roc(["close"], 7)
-            .vwap()
-            .macd(["close"], 4, 8, 3)
-            .atr(5)
-        )
-
-    plain = build(Indicators(src, halo=False)).collect()
-    dual = build(
-        Indicators(src, halo="dual", halo_buckets=3, halo_depth=64)
-    ).collect()
-    assert _rows(plain) == _rows(dual)
-
-
-def test_dual_twin_matches_faithful_bench_chains(spark):
-    """The exact op chains bench.py's pipeline_dual /
-    pipeline_many_symbols_dual closures run (VERDICT r13 #6): forced
-    dual must equal the plain faithful chain row-for-row on a
-    multi-symbol frame, including atr + daily_return."""
-    src = _multi_prices(spark, n=700)
-
-    def chain(ind, with_atr):
-        ind = (
-            ind.sma(["close"], 20)
-            .bollinger_bands(["close"], 20, 2)
-            .rsi(["close"], 14)
-        )
-        if with_atr:
-            ind = ind.atr(14)
-        return ind.daily_return(["close"])
-
-    for with_atr in (False, True):
-        plain = chain(Indicators(src, halo=False), with_atr).collect()
-        dual = chain(
-            Indicators(src, halo="dual", halo_buckets=4, halo_depth=64),
-            with_atr,
-        ).collect()
-        assert _rows(plain) == _rows(dual), with_atr
+    """``halo`` accepts only None, True and False: the withdrawn
+    ``"dual"`` value is rejected like any other unknown mode."""
+    src = _prices(spark, n=20, symbol=True)
+    for mode in ("dual", "both"):
+        with pytest.raises(ValueError, match="unknown halo mode"):
+            Indicators(src, halo=mode)
