@@ -90,10 +90,10 @@ _TOUCHED: dict[str, int] = {
     # touched).  Deliberately fills the round's 50th slot: 2 new
     # registrations + this + the 47-query r2/r3 evidence tail = 50.
     "sample_epoch_shuffle": 9,
-    # r11: _halo_tail's routing moved to the shared _halo_route helper
-    # (row-multiset equality pinned in tests/test_scale.py, and all
-    # three re-verified green against their oracles locally post-
-    # refactor) — the halo/lag kernels these queries dispatch to were
+    # r11: the backward halo's routing moved to the shared
+    # _halo_route helper (row-multiset equality pinned in
+    # tests/test_scale.py, and all three re-verified green against
+    # their oracles locally post-refactor) — the halo/lag kernels these queries dispatch to were
     # touched, so their green rows predate the code:
     "obv_chunked": 11,
     # r12: the fluent halo session's budget accounting was rewritten
@@ -195,6 +195,19 @@ _TOUCHED: dict[str, int] = {
     "lineitem_rsi_halo": 15,
     "lineitem_donchian_halo": 15,
     "lineitem_rsi_halo_hinted": 15,
+    # r16: one halo constructor (scale.halo_frame) and one bucket-offset
+    # scan (grouped_row_number with no group replaces global_row_number;
+    # global_cum_sum shares the scan); the BPE encoder lost its chain arm:
+    "analytic_global_rownum": 16,
+    "quality_quantile_normalize": 16,
+    "lineitem_rsi_halo": 16,
+    "lineitem_donchian_halo": 16,
+    "lineitem_rsi_halo_hinted": 16,
+    "vwap_chunked": 16,
+    "obv_chunked": 16,
+    "sample_epoch_shuffle": 16,
+    "pack_token_stream_128": 16,
+    "text_bpe_encode": 16,
 }
 
 

@@ -26,7 +26,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from indicators_spark import Indicators, get_spark
-    from indicators_spark.scale import ewm_chunked, halo_rolling
+    from indicators_spark.scale import ewm_chunked, halo_rolling_multi
 
     spark = get_spark("bench_scale")
     spark.sparkContext.setLogLevel("ERROR")
@@ -100,8 +100,9 @@ def main() -> None:
         ),
         (
             "halo_global_rolling_mean",
-            lambda: halo_rolling(
-                df, "mean", "close", 20, ("timestamp", "seq"), buckets=64, out="m", bucket_by="seq"
+            lambda: halo_rolling_multi(
+                df, [("mean", "close", "m")], 20, ("timestamp", "seq"),
+                buckets=64, bucket_by="seq",
             ),
         ),
         (
@@ -896,11 +897,10 @@ def main() -> None:
 
     # ---- BPE encoding with a learned table (round 10) ---------------------
     # The production split: train once (vocab-bounded, measured above),
-    # encode the whole corpus.  k=4 rides the zero-Python expression
-    # chain; k=96 forces the Arrow rank-dict UDF (a real tokenizer's
-    # merge-file regime, exercised on a 96-pair synthetic rank-monotone
-    # table built from the learned seed).  Encoding is row-local either
-    # way — docs_per_sec flat with corpus growth = the 100 TB claim.
+    # encode the whole corpus with the Arrow rank-dict UDF — at k=96 on a
+    # synthetic rank-monotone table built from the learned seed (a real
+    # tokenizer's merge-file regime).  Encoding is row-local —
+    # docs_per_sec flat with corpus growth = the 100 TB claim.
     from indicators_spark.functions.text import bpe_apply_merges
 
     learned = [
@@ -917,16 +917,14 @@ def main() -> None:
         big_table.append(f"{merged_syms[i % len(merged_syms)]} {alphabet[i % 26]}")
         merged_syms.append(big_table[-1].replace(" ", ""))
         i += 1
-    for label, table, method in (
-        ("bpe_encode_4merges_chain", learned, "chain"),
-        ("bpe_encode_96merges_udf", big_table, "udf"),
-    ):
-        t0 = time.time()
-        bpe_apply_merges(docs, table, method=method).agg(
-            F.sum("bpe_tokens").alias("s")
-        ).write.mode("overwrite").format("noop").save()
-        dt = time.time() - t0
-        results[label] = {"sec": round(dt, 2), "docs_per_sec": int(n_docs / dt)}
+    t0 = time.time()
+    bpe_apply_merges(docs, big_table).agg(
+        F.sum("bpe_tokens").alias("s")
+    ).write.mode("overwrite").format("noop").save()
+    dt = time.time() - t0
+    results["bpe_encode_96merges_udf"] = {
+        "sec": round(dt, 2), "docs_per_sec": int(n_docs / dt)
+    }
 
     # ---- prefix-filtered Jaccard vs plain posting-list join (round 10) ----
     # Near-dup-structured corpus in the regime the prefix filter exists
@@ -1157,17 +1155,14 @@ def main() -> None:
         dt = time.time() - t0
         results[label] = {"sec": round(dt, 2), "rows_per_sec": int(n / dt)}
 
-    # ---- BPE encode at production merge-table size (udf dispatch) ---------
+    # ---- BPE encode at production merge-table size ------------------------
     # A tokenizer-encode pass is the single most common 100 TB-pipeline
-    # operation.  This measures both arms of bpe_apply_merges — the
-    # Arrow-batched rank-dict UDF (the r11 DEFAULT at every size: these
-    # numbers are what flipped the dispatch) at 64 and at the
-    # production-shaped 10k merges, and the opt-in expression-chain arm
-    # at its 64-entry ceiling.  The table is a synthetic rank-monotone
-    # 10k-entry hierarchy over the corpus alphabet (level 1: all
-    # single-char pairs; level 2: pairs of level-1 symbols — later merges
-    # can only create adjacencies of their own new symbol, so the
-    # trainer-format precondition holds by construction).
+    # operation.  This measures bpe_apply_merges' Arrow-batched rank-dict
+    # UDF at 64 and at the production-shaped 10k merges.  The table is a
+    # synthetic rank-monotone 10k-entry hierarchy over the corpus alphabet
+    # (level 1: all single-char pairs; level 2: pairs of level-1 symbols —
+    # later merges can only create adjacencies of their own new symbol, so
+    # the trainer-format precondition holds by construction).
     from indicators_spark.functions.text import bpe_apply_merges
 
     _syms = ["w"] + [str(d) for d in range(10)]
@@ -1175,13 +1170,12 @@ def main() -> None:
     _two = [a + b for a in _syms for b in _syms]
     _lvl2 = [f"{a} {b}" for a in _two for b in _two]
     merges_10k = (_lvl1 + _lvl2)[:10_000]
-    for label, table, method in (
-        ("bpe_encode_chain_64", merges_10k[:64], "chain"),
-        ("bpe_encode_udf_64", merges_10k[:64], "udf"),
-        ("bpe_encode_udf_10k", merges_10k, "udf"),
+    for label, table in (
+        ("bpe_encode_udf_64", merges_10k[:64]),
+        ("bpe_encode_udf_10k", merges_10k),
     ):
         t0 = time.time()
-        bpe_apply_merges(docs, table, method=method).select(
+        bpe_apply_merges(docs, table).select(
             "doc_id", "bpe_tokens"
         ).write.mode("overwrite").format("noop").save()
         dt = time.time() - t0

@@ -519,7 +519,7 @@ class Indicators(
         )
         if self._halo_cfg and buckets < 2:
             buckets = 2  # forced mode (tests): let the precondition checks
-            # in scale._halo_tail/_halo_head_rows arbitrate exactness
+            # in scale._halo_route arbitrate exactness
         if buckets < 2:
             return
         self._halo_meta = (float(lo), float(hi), buckets)

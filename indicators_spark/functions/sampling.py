@@ -53,7 +53,7 @@ def _order_key(seed_tag: str, key: Column) -> tuple[Column, Column]:
     lexicographic order == numeric order) plus its first-8-hex 32-bit
     prefix cast to bigint — a monotone numeric proxy with KNOWN bounds
     ``[0, 2³²)`` that lets :mod:`~indicators_spark.scale`'s
-    ``global_row_number`` / ``global_cum_sum`` range-bucket
+    ``grouped_row_number`` / ``global_cum_sum`` range-bucket
     arithmetically without a min/max scan or a global sort.  Shared by
     :func:`epoch_shuffle` and :func:`pack_token_stream` so the two
     layouts can't drift apart (both replay in SQL as
@@ -592,7 +592,7 @@ def epoch_shuffle(
 
     NO global sort materializes: the md5 prefix (first 8 hex = uniform
     32-bit int) is a monotone numeric proxy for the hash order, so
-    :func:`~indicators_spark.scale.global_row_number` range-buckets on it
+    :func:`~indicators_spark.scale.grouped_row_number` range-buckets on it
     arithmetically (bounds are KNOWN — ``[0, 2³²)`` — so not even a
     min/max scan runs), ranks per bucket in parallel, and composes bucket
     offsets from a ≤ ``buckets``-row prefix sum.  Hash uniformity makes
@@ -600,11 +600,12 @@ def epoch_shuffle(
 
     ``key`` should be unique and non-null (the usual doc-id contract);
     rows sharing a key value get adjacent positions in engine order."""
-    from ..scale import global_row_number
+    from ..scale import grouped_row_number
 
     h, pre = _order_key(f"{seed}{epoch}", F.col(key))
-    ranked = global_row_number(
+    ranked = grouped_row_number(
         df.withColumn("_eh", h).withColumn("_ehb", pre),
+        (),
         order_cols=("_eh", key),
         buckets=buckets,
         bucket_by="_ehb",
@@ -859,7 +860,7 @@ def quantile_normalize_by_group(
     rank 0.
 
     Scale shape: both enumerations use the range-bucket kernels
-    (:func:`~..scale.grouped_row_number` / ``global_row_number``) — NO
+    (:func:`~..scale.grouped_row_number`, grouped and global) — NO
     one-task-per-group or global-sort window; one shared min/max scan
     provides both kernels' bounds.  The pooled order-statistics table is
     corpus-sized but two skinny columns ``(gidx, value)``, and the two
@@ -871,7 +872,7 @@ def quantile_normalize_by_group(
     three integer expressions to decimal(38,0) — both engines are exact
     there too.
     """
-    from ..scale import global_row_number, grouped_row_number
+    from ..scale import grouped_row_number
 
     v = F.col(value_col).cast("double")
     base = df.filter(
@@ -923,8 +924,9 @@ def quantile_normalize_by_group(
             ]
         ),
     )
-    pooled = global_row_number(
+    pooled = grouped_row_number(
         base.select("_v", key_col),
+        (),
         order_cols=["_v", key_col],
         buckets=buckets,
         bucket_by="_v",

@@ -33,7 +33,6 @@ from __future__ import annotations
 
 import hashlib
 import math
-import os
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
@@ -949,6 +948,11 @@ def quantize_embeddings_int8(
 TFIDF_DENSE_MAX_VOCAB = 4096
 TFIDF_DENSE_MAX_CELLS = 8_000_000
 
+#: Row cap of the dense dispatch's probe collect (kept below
+#: TFIDF_DENSE_MAX_CELLS so a large corpus never collects 8M rows just
+#: to be rejected; see :func:`tfidf_cosine_pairs`).
+TFIDF_PROBE_CELLS = 2_000_000
+
 #: Per-task score-matrix bound for the dense scorer (cells of float64):
 #: 8M cells = 64 MB per materialized chunk, whatever |docs| is.
 _DENSE_CHUNK_CELLS = 8_000_000
@@ -1066,10 +1070,7 @@ def tfidf_cosine_pairs(
         # a saturated probe falls back to the two-long agg dispatch and
         # only re-folds when the agg accepts (then provably ≤ probe of
         # dense_max_cells rows).
-        probe_cap = min(
-            dense_max_cells,
-            int(os.environ.get("SPARK_GRAFT_TFIDF_PROBE_CELLS", 2_000_000)),
-        )
+        probe_cap = min(dense_max_cells, TFIDF_PROBE_CELLS)
         pdf = wn.limit(probe_cap + 1).toPandas()
         if len(pdf) > probe_cap and probe_cap < dense_max_cells:
             st = wn.agg(

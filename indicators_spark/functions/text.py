@@ -980,22 +980,12 @@ def _bpe_merge_step(s: Column, a: str, b: str) -> Column:
     )
 
 
-#: Practical ceiling for the OPT-IN ``method="chain"`` arm of
-#: bpe_apply_merges: beyond this many merges the nested-replace
-#: expression chain breaks down (deep Catalyst trees / codegen method
-#: limits).  No longer an auto-dispatch point — the r11 bench showed the
-#: Arrow rank-dict UDF faster at EVERY size (bench_scale.py), so it is
-#: now the default unconditionally.
-BPE_CHAIN_MAX_MERGES = 64
-
-
 def bpe_apply_merges(
     df: DataFrame,
     merges: list[str],
     text_col: str = "text",
     max_word_len: int = 32,
     out: str = "bpe_tokens",
-    method: str | None = None,
 ) -> DataFrame:
     """Encode with a LEARNED merge table (the production half of
     :func:`bpe_learn_merges`: train once on a sample, encode the whole
@@ -1003,24 +993,14 @@ def bpe_apply_merges(
     real token budget a context window pays, vs the regex ESTIMATE of
     :func:`with_bpe_token_count`).  NULL text → NULL.
 
-    Two equivalent implementations (both map-only, zero shuffle),
-    forced via ``method`` or defaulting to ``"udf"``:
-
-    * ``"udf"`` (default): an Arrow-batched pandas UDF carrying the
-      merge table as a rank dict and running the classic
-      lowest-rank-first encode loop.  MEASURED fastest at every table
-      size on the bench corpus — 2-4 s vs the chain's 15-21 s per 500k
-      docs at 4/16/64/10k merges (bench_scale.py, r11): the chain's
-      per-character higher-order string expressions cost more than the
-      Arrow transfer + python dict loop, and a 10k+-deep expression
-      tree would break codegen anyway.  A sizeless default also removes
-      the r9-ADVICE hazard class outright: no dispatch boundary at
-      which a non-trainer-format table could silently change counts.
-    * ``"chain"``: every word restarts from characters and replays the
-      merges in rank order with the trainer's own
-      :func:`_bpe_merge_step` — ONE codegen'd row-local expression,
-      zero Python workers; the opt-in for Python-worker-hostile
-      environments, practical to ~:data:`BPE_CHAIN_MAX_MERGES` entries.
+    Map-only, zero shuffle: an Arrow-batched pandas UDF carrying the
+    merge table as a rank dict and running the classic lowest-rank-first
+    encode loop.  Replaying the merges as a chain of string expressions
+    instead (zero Python workers) measured 15-21 s against the UDF's
+    2-4 s per 500k docs at every table size from 4 to 10k merges
+    (bench_scale.py): its per-character higher-order string expressions
+    cost more than the Arrow transfer + python dict loop, and a 10k+-deep
+    expression tree breaks codegen.
 
     ``merges`` must be a RANK-MONOTONE table in the trainer's format:
     entry ``r``'s pair is built only from symbols that exist after
@@ -1028,14 +1008,12 @@ def bpe_apply_merges(
     emits is, by construction).  This is a semantic precondition, not
     just an equivalence-proof assumption: for a hand-crafted table
     where a LATER merge creates an occurrence of an EARLIER pair, the
-    two methods legitimately differ (chain never revisits earlier
-    ranks; the udf loop does), so the size-based auto-dispatch would
-    silently change counts at the 64-entry boundary (ADVICE r9).  On
-    trainer-format tables they are IDENTICAL: applying merges once
-    each in rank order equals iterating "merge the lowest-ranked pair
-    present" because a merge can only create adjacencies involving its
-    OWN new symbol, and any pair containing that symbol was
-    necessarily learned later (higher rank) — pinned in tests."""
+    lowest-rank-first loop revisits earlier ranks, so counts differ from
+    applying each merge once in rank order (the trainer's replay,
+    :func:`_bpe_merge_step`).  On trainer-format tables the two are
+    IDENTICAL: a merge can only create adjacencies involving its OWN new
+    symbol, and any pair containing that symbol was necessarily learned
+    later (higher rank) — pinned in tests."""
     parsed = []
     for pr in merges:
         try:
@@ -1047,36 +1025,9 @@ def bpe_apply_merges(
                 f"{pr!r}"
             ) from None
         parsed.append((a, b))
-    if method is None:
-        method = "udf"
-    if method == "chain":
-        ws = F.transform(
-            F.filter(
-                words(F.lower(F.col(text_col))), lambda x: x != F.lit("")
-            ),
-            lambda x: F.substring(x, 1, max_word_len),
-        )
-
-        def word_tokens(w: Column) -> Column:
-            s = _bpe_char_syms(w)
-            for a, b in parsed:
-                s = _bpe_merge_step(s, a, b)
-            return F.size(F.split(s, "  ")).cast("long")
-
-        total = F.aggregate(
-            ws, F.lit(0).cast("long"), lambda acc, w: acc + word_tokens(w)
-        )
-        return df.withColumn(
-            out, F.when(F.col(text_col).isNotNull(), total)
-        )
-    if method != "udf":
-        raise ValueError(
-            f"bpe_apply_merges: method must be 'chain' or 'udf', got {method!r}"
-        )
     from pyspark.sql.functions import pandas_udf
 
     ranks = {p: r for r, p in enumerate(parsed)}
-    pairs = list(parsed)
     cap = int(max_word_len)
 
     @pandas_udf("long")
@@ -1091,7 +1042,7 @@ def bpe_apply_merges(
                         best = r
                 if best is None:
                     break
-                a, b = pairs[best]
+                a, b = parsed[best]
                 merged, i = [], 0
                 while i < len(syms):
                     if (

@@ -421,15 +421,16 @@ FROM grid LEFT JOIN hourly
 def _global_rownum_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Contiguous row_number over (ts, event_id) with NO single-task
     window: arithmetic time-bucketing + per-bucket ranks + broadcast
-    prefix-sum offsets (scale.global_row_number).  event_id is unique, so
-    the total order — and therefore the numbering — is deterministic."""
-    from ..scale import global_row_number
+    prefix-sum offsets (scale.grouped_row_number with no group).
+    event_id is unique, so the total order — and therefore the
+    numbering — is deterministic."""
+    from ..scale import grouped_row_number
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", F.unix_timestamp("ts").alias("_bkey")
     )
-    out = global_row_number(
-        ev, order_cols=("ts", "event_id"), buckets=32, bucket_by="_bkey"
+    out = grouped_row_number(
+        ev, (), order_cols=("ts", "event_id"), buckets=32, bucket_by="_bkey"
     )
     return out.select("event_id", "rn")
 

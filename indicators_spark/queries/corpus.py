@@ -2668,7 +2668,7 @@ _register(
 # pooled interpolated quantile at that rank, with the interpolation
 # INDEX in exact integer arithmetic so the kept values replay
 # bit-for-bit in the oracle.  The Spark side runs the range-bucket rank
-# kernels (grouped_row_number / global_row_number) — no per-source
+# kernel (scale.grouped_row_number, grouped and global) — no per-source
 # single-task window — while the oracle states the same semantics with
 # plain window functions.
 # --------------------------------------------------------------------- #

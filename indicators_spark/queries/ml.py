@@ -279,7 +279,7 @@ def _skew_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     The expensive pass is the one map-side-combined groupBy; every window
     below runs over the AGGREGATED key table (|keys| rows, not events).
     At extreme key cardinality swap the rank window for
-    ``scale.global_row_number`` and the exact percentiles for
+    ``scale.grouped_row_number`` and the exact percentiles for
     ``approx_percentile`` — same output schema."""
     ev = load_table(spark, sf_dir, "events")
     counts = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("cnt"))
@@ -2498,7 +2498,7 @@ def _rfm_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie-break), concatenated into the familiar 3-digit segment code.
     One fact aggregation; the quintile windows run over the AGGREGATED
     customer table (global ntile over |customers| rows — swap for the
-    bucketed rank of `scale.global_row_number` beyond ~10⁸ customers)."""
+    bucketed rank of `scale.grouped_row_number` beyond ~10⁸ customers)."""
     orders = load_table(spark, sf_dir, "orders")
     per_cust = orders.groupBy(F.col("o_custkey").alias("custkey")).agg(
         F.max("o_orderkey").alias("last_order"),

@@ -5,8 +5,8 @@ key — SURVEY.md §2c.3), and Spark's window operator puts an un-partitioned
 window in a single task.  Fine at sf0.1; a bottleneck at 100 TB.  Two
 distributed-equivalent forms fix that:
 
-1. **Halo rolling windows** (`halo_rolling`): bounded trailing-window aggs
-   need only the previous ``n-1`` rows.  Range-bucket the series by its
+1. **Halo rolling windows** (`halo_rolling_multi`): bounded trailing-window
+   aggs need only the previous ``n-1`` rows.  Range-bucket the series by its
    order key, ship each bucket's last ``n-1`` rows to the next bucket as a
    halo, compute the windowed agg inside each bucket independently, drop
    halo rows.  One range shuffle + one per-bucket window; no single-task
@@ -34,7 +34,6 @@ tests/test_scale.py.
 
 from __future__ import annotations
 
-import os
 from collections import defaultdict
 from collections.abc import Sequence
 from dataclasses import dataclass
@@ -43,7 +42,7 @@ from fractions import Fraction
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -54,14 +53,12 @@ def _halo_route(
     rows: int,
     direction: str,
 ) -> DataFrame:
-    """Routing map for halo duplication, shared by the tail (backward)
-    and head (forward) builders: for every populated (partition, bucket)
-    of the skinny ``present`` table (columns ``partition_cols``,
-    ``_bucket``, ``_cnt``), the destination bucket its halo rows move to
-    — the NEXT populated bucket of the same partition for
-    ``direction="next"``, the PREVIOUS for ``"prev"``.  Routing by
-    presence (not blindly bucket±1) keeps the kernels exact under skewed
-    keys that leave arithmetic buckets empty.
+    """Routing map for one direction of :func:`halo_frame`'s halo
+    duplication: for every populated (partition, bucket) of the skinny
+    ``present`` table (columns ``partition_cols``, ``_bucket``,
+    ``_cnt``), the destination bucket its halo rows move to — the NEXT
+    populated bucket of the same partition for ``direction="next"``, the
+    PREVIOUS for ``"prev"``.
 
     The under-sized-sender precondition is enforced here from the same
     counts: a sender holding < ``rows`` rows that is NOT its partition's
@@ -129,92 +126,6 @@ def _halo_route(
     ).drop("_acnt", "_gd")
 
 
-def _halo_tail(
-    bucketed: DataFrame,
-    order_cols: Sequence[str],
-    partition_cols: Sequence[str],
-    rows: int,
-) -> DataFrame:
-    """Duplicate the last ``rows`` rows of every (partition, bucket) into
-    the next POPULATED bucket of the same partition, flagged ``_halo``.
-
-    Routing by presence (not blindly ``bucket+1``) keeps the kernel exact
-    under skewed keys that leave arithmetic buckets empty — a halo landing
-    in an empty bucket would be filtered away and the next populated
-    bucket's warm-up would silently lose its history.  The presence table
-    is one skinny (partition, bucket) aggregate (≤ |parts|·buckets rows;
-    map-side combined) and the next-populated map is a broadcast min-join
-    over it — no SinglePartition stage, preserving the halo plan contract.
-
-    The halo depth is one bucket, so a SENDING bucket must hold ≥ ``rows``
-    rows — and that precondition is now ENFORCED at runtime from the same
-    presence counts: an under-sized sender that is not its partition's
-    first populated bucket (a small first bucket is exact — the receiver's
-    warm-up gate is then legitimately below the window size in the plain
-    form too) raises through ``F.raise_error`` instead of silently
-    emitting spurious warm-up NULLs downstream."""
-    present = bucketed.groupBy(*partition_cols, "_bucket").agg(
-        F.count(F.lit(1)).alias("_cnt")
-    )
-    nxt = _halo_route(present, partition_cols, rows, "next")
-    join_cond = F.col("_ba") == F.col("_bucket")
-    for c in partition_cols:
-        join_cond = join_cond & (F.col(f"_pa_{c}") == F.col(c))
-    wb = Window.partitionBy(*partition_cols, "_bucket").orderBy(
-        *[F.col(c).desc() for c in order_cols]
-    )
-    tail = (
-        bucketed.withColumn("_rev", F.row_number().over(wb))
-        .filter(F.col("_rev") <= rows)
-        .join(F.broadcast(nxt), join_cond)
-        .withColumn("_bucket", F.col("_dest"))
-        .drop(
-            "_rev", "_ba", "_dest",
-            *[f"_pa_{c}" for c in partition_cols],
-        )
-        .withColumn("_halo", F.lit(True))
-    )
-    return bucketed.withColumn("_halo", F.lit(False)).unionByName(tail)
-
-
-def _halo_head_rows(
-    bucketed: DataFrame,
-    order_cols: Sequence[str],
-    partition_cols: Sequence[str],
-    rows: int,
-) -> DataFrame:
-    """FORWARD halo: the first ``rows`` rows of every (partition, bucket)
-    duplicated into the PREVIOUS populated bucket, flagged ``_halo`` —
-    the mirror of :func:`_halo_tail` for look-AHEAD functions
-    (``lead`` / negative shift).  Returns only the halo rows (callers
-    union them onto a frame that already carries ``_halo``).
-
-    Same presence-routing and precondition contract as the tail: an
-    under-sized sender that is not its partition's LAST populated bucket
-    raises instead of silently truncating a receiver's look-ahead."""
-    present = bucketed.groupBy(*partition_cols, "_bucket").agg(
-        F.count(F.lit(1)).alias("_cnt")
-    )
-    prv = _halo_route(present, partition_cols, rows, "prev")
-    join_cond = F.col("_ba") == F.col("_bucket")
-    for c in partition_cols:
-        join_cond = join_cond & (F.col(f"_pa_{c}") == F.col(c))
-    wb = Window.partitionBy(*partition_cols, "_bucket").orderBy(
-        *[F.col(c) for c in order_cols]
-    )
-    return (
-        bucketed.withColumn("_fwd", F.row_number().over(wb))
-        .filter(F.col("_fwd") <= rows)
-        .join(F.broadcast(prv), join_cond)
-        .withColumn("_bucket", F.col("_dest"))
-        .drop(
-            "_fwd", "_ba", "_dest",
-            *[f"_pa_{c}" for c in partition_cols],
-        )
-        .withColumn("_halo", F.lit(True))
-    )
-
-
 def halo_frame(
     bucketed: DataFrame,
     order_cols: Sequence[str],
@@ -222,9 +133,21 @@ def halo_frame(
     back: int = 0,
     fwd: int = 0,
 ) -> DataFrame:
-    """A bucketed frame extended with backward and/or forward halos —
-    the generic halo SESSION primitive behind the fluent API's size
-    dispatch (core.py).
+    """A bucketed frame extended with backward and/or forward halos: the
+    last ``back`` rows of every (partition, bucket) duplicated into the
+    NEXT populated bucket of the same partition, the first ``fwd`` rows
+    into the PREVIOUS one, flagged ``_halo`` — the one constructor of
+    halo rows behind the halo kernels and the fluent API's size dispatch
+    (core.py).
+
+    Routing by presence (not blindly bucket±1) keeps the kernels exact
+    under skewed keys that leave arithmetic buckets empty — a halo
+    landing in an empty bucket would be filtered away and the next
+    populated bucket's warm-up would silently lose its history.  The
+    presence table is one skinny (partition, bucket) aggregate
+    (≤ |parts|·buckets rows, map-side combined) and each route is a
+    broadcast join over it — no SinglePartition stage.  An under-sized
+    sender raises instead of truncating a receiver (:func:`_halo_route`).
 
     With both halos present, any per-bucket window function is exact on
     every non-halo row whose frame reaches ≤ ``back`` rows behind and
@@ -239,84 +162,69 @@ def halo_frame(
     cumulative chain depth per direction and re-halo when a budget is
     exceeded (core.py ``_halo_part``).
 
-    When both directions are requested, ONE shared ranking pass serves
-    them (ascending ``row_number`` + the broadcast per-bucket counts
-    give the descending rank as ``count − rn + 1``) — one full-data
-    window stage instead of the two the tail/head helpers would each
-    pay; pinned equal to composing them in tests/test_scale.py.
+    ONE ranking pass serves every requested direction: a descending
+    ``row_number`` for a tail alone, an ascending one for a head alone,
+    and for both the ascending rank plus the broadcast per-bucket counts
+    (descending rank = ``count − rn + 1``) — one full-data window stage.
 
     Callers filter ``~_halo`` and drop ``_bucket``/``_halo`` when done.
     """
-    if back > 0 and fwd > 0:
-        present = bucketed.groupBy(*partition_cols, "_bucket").agg(
-            F.count(F.lit(1)).alias("_cnt")
-        )
-        nxt = _halo_route(present, partition_cols, back, "next")
-        prv = _halo_route(present, partition_cols, fwd, "prev")
-        keys = [*partition_cols, "_bucket"]
-        wb = Window.partitionBy(*keys).orderBy(
-            *[F.col(c) for c in order_cols]
-        )
-        ranked = (
-            bucketed.withColumn("_fwd", F.row_number().over(wb))
-            .join(F.broadcast(present), keys)
-            .withColumn("_rev", F.col("_cnt") - F.col("_fwd") + 1)
-            # ONE halo branch for both directions (two branches would
-            # re-plan — and re-execute — the ranking window once each):
-            # a row within `back` of its bucket end AND `fwd` of its
-            # start explodes into both copies
-            .filter((F.col("_rev") <= back) | (F.col("_fwd") <= fwd))
-        )
-        nxt2 = nxt.select(
-            *[F.col(f"_pa_{c}").alias(f"_pn_{c}") for c in partition_cols],
-            F.col("_ba").alias("_ban"),
-            F.col("_dest").alias("_dn"),
-        )
-        prv2 = prv.select(
-            *[F.col(f"_pa_{c}").alias(f"_pp_{c}") for c in partition_cols],
-            F.col("_ba").alias("_bap"),
-            F.col("_dest").alias("_dp"),
-        )
-        cond_n = F.col("_ban") == F.col("_bucket")
-        cond_p = F.col("_bap") == F.col("_bucket")
-        for c in partition_cols:
-            cond_n = cond_n & (F.col(f"_pn_{c}") == F.col(c))
-            cond_p = cond_p & (F.col(f"_pp_{c}") == F.col(c))
-        # left joins: the last (resp. first) populated bucket has no
-        # destination — its would-be copies compact away, exactly the
-        # inner-join semantics of the single-direction builders
-        halos = (
-            ranked.join(F.broadcast(nxt2), cond_n, "left")
-            .join(F.broadcast(prv2), cond_p, "left")
-            .withColumn(
-                "_copies",
-                F.array_compact(
-                    F.array(
-                        F.when(F.col("_rev") <= back, F.col("_dn")),
-                        F.when(F.col("_fwd") <= fwd, F.col("_dp")),
-                    )
-                ),
-            )
-            .filter(F.size("_copies") > 0)
-            .withColumn("_bucket", F.explode("_copies"))
-            .drop(
-                "_fwd", "_rev", "_cnt", "_copies",
-                "_ban", "_dn", "_bap", "_dp",
-                *[f"_pn_{c}" for c in partition_cols],
-                *[f"_pp_{c}" for c in partition_cols],
-            )
-            .withColumn("_halo", F.lit(True))
-        )
-        return bucketed.withColumn("_halo", F.lit(False)).unionByName(halos)
-    if back > 0:
-        out = _halo_tail(bucketed, order_cols, partition_cols, back)
-    else:
-        out = bucketed.withColumn("_halo", F.lit(False))
+    base = bucketed.withColumn("_halo", F.lit(False))
+    if back <= 0 and fwd <= 0:
+        return base
+    keys = [*partition_cols, "_bucket"]
+    present = bucketed.groupBy(*keys).agg(F.count(F.lit(1)).alias("_cnt"))
+    wb = Window.partitionBy(*keys)
     if fwd > 0:
-        out = out.unionByName(
-            _halo_head_rows(bucketed, order_cols, partition_cols, fwd)
+        ranked = bucketed.withColumn(
+            "_fwd",
+            F.row_number().over(wb.orderBy(*[F.col(c) for c in order_cols])),
         )
-    return out
+        if back > 0:
+            ranked = ranked.join(F.broadcast(present), keys).withColumn(
+                "_rev", F.col("_cnt") - F.col("_fwd") + 1
+            )
+    else:
+        ranked = bucketed.withColumn(
+            "_rev",
+            F.row_number().over(
+                wb.orderBy(*[F.col(c).desc() for c in order_cols])
+            ),
+        )
+    dirs = [
+        (depth, F.col(rank) <= depth, direction)
+        for depth, rank, direction in (
+            (back, "_rev", "next"),
+            (fwd, "_fwd", "prev"),
+        )
+        if depth > 0
+    ]
+    # ONE halo branch for every direction (a branch per direction would
+    # re-plan — and re-execute — the ranking window once each): a row
+    # within `back` of its bucket end AND `fwd` of its start explodes
+    # into both copies
+    near = dirs[0][1]
+    for _, hit, _ in dirs[1:]:
+        near = near | hit
+    halos = ranked.filter(near)
+    for depth, _, direction in dirs:
+        route = _halo_route(present, partition_cols, depth, direction)
+        cond = F.col("_ba") == F.col("_bucket")
+        for c in partition_cols:
+            cond = cond & (F.col(f"_pa_{c}") == F.col(c))
+        # left joins: the last (resp. first) populated bucket has no
+        # destination — its would-be copies compact away
+        halos = halos.join(F.broadcast(route), cond, "left").select(
+            *halos.columns, F.col("_dest").alias(f"_to_{direction}")
+        )
+    copies = [F.when(hit, F.col(f"_to_{d}")) for _, hit, d in dirs]
+    halos = (
+        halos.withColumn("_copies", F.array_compact(F.array(*copies)))
+        .filter(F.size("_copies") > 0)
+        .withColumn("_bucket", F.explode("_copies"))
+        .select(*bucketed.columns, F.lit(True).alias("_halo"))
+    )
+    return base.unionByName(halos)
 
 
 def _with_bucket(
@@ -377,42 +285,6 @@ def _with_bucket(
     return df.withColumn("_bucket", F.ntile(buckets).over(w))
 
 
-def halo_rolling(
-    df: DataFrame,
-    agg: str,
-    col: str,
-    n: int,
-    order_cols: Sequence[str] = ("timestamp", "seq"),
-    buckets: int = 8,
-    out: str = "_rolled",
-    bucket_by: str | None = None,
-    partition_cols: Sequence[str] = (),
-    bounds: tuple[float, float] | None = None,
-) -> DataFrame:
-    """Exact trailing-window aggregate without a single-task window.
-
-    ``agg`` ∈ {mean, sum, min, max, std}.  ``out`` carries the min-samples
-    gate (NULL until the frame holds n non-null rows).  Pass ``bucket_by``
-    (a monotone numeric key) to bucket arithmetically with no global sort.
-
-    ``partition_cols`` generalizes the kernel to per-key rolling (e.g.
-    per-symbol): the halo flows bucket→bucket *within* each key, turning a
-    few-keys window (parallelism = #keys) into #keys × #buckets tasks.
-    Precondition, as for the global form: every (key, bucket) must be
-    non-empty — time-uniform keys and buckets ≤ rows/(#keys·(n-1)) satisfy
-    it."""
-    return halo_rolling_multi(
-        df,
-        [(agg, col, out)],
-        n,
-        order_cols=order_cols,
-        buckets=buckets,
-        bucket_by=bucket_by,
-        partition_cols=partition_cols,
-        bounds=bounds,
-    )
-
-
 _AGG_FNS = {
     "mean": F.avg,
     "sum": F.sum,
@@ -444,11 +316,21 @@ def halo_rolling_multi(
     partition_cols: Sequence[str] = (),
     bounds: tuple[float, float] | None = None,
 ) -> DataFrame:
-    """Several gated trailing-window aggregates (``specs`` of
-    ``(agg, col, out)``, one shared window length ``n``) in ONE halo pass —
-    one shuffle, one sort, one window stage for the whole family."""
+    """Exact trailing-window aggregates without a single-task window:
+    ``specs`` of ``(agg, col, out)`` with ``agg`` ∈ {mean, sum, min, max,
+    std} and one shared window length ``n``, in ONE halo pass — one
+    shuffle, one sort, one window stage for the whole family.  Each
+    ``out`` carries the min-samples gate (NULL until the frame holds
+    ``n`` non-null rows).  Pass ``bucket_by`` (a monotone numeric key) to
+    bucket arithmetically with no global sort.
+
+    ``partition_cols`` generalizes the kernel to per-key rolling (e.g.
+    per-symbol): the halo flows bucket→bucket *within* each key, turning
+    a few-keys window (parallelism = #keys) into #keys × #buckets tasks.
+    Every populated sending (key, bucket) must hold ≥ n-1 rows —
+    time-uniform keys and buckets ≤ rows/(#keys·(n-1)) satisfy it."""
     bucketed = _with_bucket(df, order_cols, buckets, bucket_by, bounds)
-    full = _halo_tail(bucketed, order_cols, partition_cols, n - 1)
+    full = halo_frame(bucketed, order_cols, partition_cols, back=n - 1)
     w = (
         Window.partitionBy(*partition_cols, "_bucket")
         .orderBy(*[F.col(c) for c in order_cols])
@@ -670,11 +552,11 @@ def halo_lag(
     bounds: tuple[float, float] | None = None,
 ) -> DataFrame:
     """Exact ``lag(col, k)`` over a global (or per-key) total order without
-    a single-task window — same halo scheme as :func:`halo_rolling` with a
-    ``k``-row halo.  The first ``k`` rows of the frame get NULL (bucket 1
-    has no halo), exactly like the plain window form."""
+    a single-task window — same halo scheme as :func:`halo_rolling_multi`
+    with a ``k``-row halo.  The first ``k`` rows of the frame get NULL
+    (bucket 1 has no halo), exactly like the plain window form."""
     bucketed = _with_bucket(df, order_cols, buckets, bucket_by, bounds)
-    full = _halo_tail(bucketed, order_cols, partition_cols, k)
+    full = halo_frame(bucketed, order_cols, partition_cols, back=k)
     w = Window.partitionBy(*partition_cols, "_bucket").orderBy(
         *[F.col(c) for c in order_cols]
     )
@@ -824,41 +706,51 @@ def ewm_chunked(
     return df.join(r, cond).drop(*[f"_r_{c}" for c in order])
 
 
-def global_row_number(
-    df: DataFrame,
-    order_cols: Sequence[str] = ("timestamp", "seq"),
-    buckets: int = 32,
-    bucket_by: str | None = None,
-    bounds: tuple[float, float] | None = None,
-    out: str = "rn",
+def _with_bucket_offsets(
+    rows: DataFrame,
+    group_cols: Sequence[str],
+    aggs: dict[str, Column],
+    fill: int | None = None,
 ) -> DataFrame:
-    """Contiguous global ``row_number()`` over a total order WITHOUT the
-    single-task window Spark plans for ``Window.orderBy(...)`` — the
-    classic "enumerate 100 TB" primitive (`monotonically_increasing_id`
-    is non-contiguous and non-ordered; RDD ``zipWithIndex`` leaves the
-    DataFrame/Catalyst world).
+    """``rows`` (a range-bucketed frame) joined to the EXCLUSIVE prefix
+    offsets of per-(group, bucket) aggregates — the one bucket-offset
+    scan behind :func:`grouped_row_number` and :func:`global_cum_sum`.
 
-    Same arithmetic range-bucket scheme as the halo kernels: bucket on a
-    monotone key (no global sort), per-bucket ``row_number`` in parallel,
-    then add each bucket's start offset — a prefix sum over the per-bucket
-    counts (≤ ``buckets`` rows, broadcast back).  Two skinny shuffles
-    (bucket counts + broadcast), no stage proportional to the data in one
-    task.  Exact: equal-key rows land in the same bucket, so the in-bucket
-    order extends the bucket order to the global total order.
-    """
-    bucketed = _with_bucket(df, order_cols, buckets, bucket_by, bounds)
-    counts = bucketed.groupBy("_bucket").agg(F.count(F.lit(1)).alias("_cnt"))
-    # prefix-sum runs over ≤ `buckets` rows — a deliberately tiny window
-    woff = Window.orderBy("_bucket").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = counts.withColumn(
-        "_off", F.coalesce(F.sum("_cnt").over(woff), F.lit(0))
-    ).drop("_cnt")
-    win = Window.partitionBy("_bucket").orderBy(*[F.col(c) for c in order_cols])
-    return (
-        bucketed.withColumn("_lrn", F.row_number().over(win))
-        .join(F.broadcast(offsets), "_bucket")
-        .withColumn(out, (F.col("_lrn") + F.col("_off")).cast("long"))
-        .drop("_bucket", "_lrn", "_off")
+    ``aggs`` maps each offset column to its per-bucket aggregate; the
+    offset of a bucket is the running sum of that aggregate over the
+    group's earlier buckets (NULL for a group's first bucket unless
+    ``fill`` is given).  The prefix window runs over ≤ groups·buckets
+    rows ordered by ``_bucket`` only, so the tiny table stays tiny: two
+    skinny exchanges (the aggregate + the broadcast back), no data-sized
+    shuffle.  The join back is null-safe on the group keys, so NULL
+    groups keep their rows (a plain equi-join would silently drop
+    them)."""
+    gcols = list(group_cols)
+    per_bucket = rows.groupBy(*gcols, "_bucket").agg(
+        *[agg.alias(f"_pb{name}") for name, agg in aggs.items()]
+    )
+    woff = (
+        Window.partitionBy(*gcols)
+        .orderBy("_bucket")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    offs = {name: F.sum(f"_pb{name}").over(woff) for name in aggs}
+    if fill is not None:
+        offs = {name: F.coalesce(o, F.lit(fill)) for name, o in offs.items()}
+    # rename only after the window, so the aggregate keeps a single
+    # `_bucket` output column
+    offsets = per_bucket.select(*gcols, "_bucket", *[
+        o.alias(name) for name, o in offs.items()
+    ]).select(
+        *[F.col(c).alias(f"_go_{c}") for c in gcols],
+        F.col("_bucket").alias("_go_bucket"),
+        *aggs,
+    )
+    cond = F.col("_bucket") == F.col("_go_bucket")
+    for c in gcols:
+        cond = cond & F.col(c).eqNullSafe(F.col(f"_go_{c}"))
+    return rows.join(F.broadcast(offsets), cond).drop(
+        "_go_bucket", *[f"_go_{c}" for c in gcols]
     )
 
 
@@ -871,57 +763,40 @@ def grouped_row_number(
     bounds: tuple[float, float] | None = None,
     out: str = "rn",
 ) -> DataFrame:
-    """Contiguous PER-GROUP ``row_number()`` without one task per group —
-    the grouped counterpart of :func:`global_row_number`.
+    """Contiguous per-group ``row_number()`` without one task per group
+    — and, with ``group_cols=()``, the contiguous GLOBAL row number
+    without the single-task window Spark plans for
+    ``Window.orderBy(...)``: the classic "enumerate 100 TB" primitive
+    (``monotonically_increasing_id`` is non-contiguous and non-ordered;
+    RDD ``zipWithIndex`` leaves the DataFrame/Catalyst world).
 
     ``Window.partitionBy(group).orderBy(...)`` serializes each group into
     a single task, which at 100 TB with a handful of giant groups (e.g.
     5 corpus sources) is exactly the global-sort bottleneck the range-
     bucket kernels exist to avoid.  Scheme: range-bucket every row on a
-    numeric key MONOTONE in the within-group order (``bucket_by``, same
-    contract as :func:`global_row_number` — for a rank-by-value use the
-    value column itself), count rows per (group, bucket), prefix-sum the
-    counts over buckets WITHIN each group (a window over ≤ groups·buckets
-    rows — broadcastable), then per-(group, bucket) ``row_number`` in
-    parallel plus the bucket's in-group start offset.  Parallelism is
-    groups × buckets instead of groups; exactness is the same argument as
-    the global kernel (equal keys share a bucket, so in-bucket order
-    extends bucket order to the group's total order).
-
-    The counts prefix-sum window orders by ``_bucket`` only, so the tiny
-    table stays tiny — no data-sized shuffle anywhere; two skinny
-    exchanges (the counts aggregate + the broadcast back).  NULL group
-    keys are supported (the offset join is null-safe — a plain equi-join
-    would silently drop those rows).
+    numeric key MONOTONE in the within-group order (``bucket_by`` — for
+    a rank-by-value use the value column itself; bounds skip its min/max
+    scan), ``row_number`` per (group, bucket) in parallel, plus the
+    bucket's in-group start offset: a prefix sum over the per-(group,
+    bucket) counts (:func:`_with_bucket_offsets`).  Parallelism is
+    groups × buckets instead of groups.  Exact: equal keys share a
+    bucket, so the in-bucket order extends the bucket order to the
+    group's total order.  NULL group keys are supported.
     """
     gcols = list(group_cols)
     bucketed = _with_bucket(df, order_cols, buckets, bucket_by, bounds)
-    counts = bucketed.groupBy(*gcols, "_bucket").agg(
-        F.count(F.lit(1)).alias("_cnt")
-    )
-    woff = (
-        Window.partitionBy(*gcols)
-        .orderBy("_bucket")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = counts.withColumn(
-        "_off", F.coalesce(F.sum("_cnt").over(woff), F.lit(0))
-    ).drop("_cnt")
     win = Window.partitionBy(*gcols, "_bucket").orderBy(
         *[F.col(c) for c in order_cols]
     )
-    roff = offsets
-    for c in gcols:
-        roff = roff.withColumnRenamed(c, f"_go_{c}")
-    roff = roff.withColumnRenamed("_bucket", "_go_bucket")
-    cond = F.col("_bucket") == F.col("_go_bucket")
-    for c in gcols:
-        cond = cond & F.col(c).eqNullSafe(F.col(f"_go_{c}"))
     return (
-        bucketed.withColumn("_lrn", F.row_number().over(win))
-        .join(F.broadcast(roff), cond)
+        _with_bucket_offsets(
+            bucketed.withColumn("_lrn", F.row_number().over(win)),
+            gcols,
+            {"_off": F.count(F.lit(1))},
+            fill=0,
+        )
         .withColumn(out, (F.col("_lrn") + F.col("_off")).cast("long"))
-        .drop("_bucket", "_lrn", "_off", "_go_bucket", *[f"_go_{c}" for c in gcols])
+        .drop("_bucket", "_lrn", "_off")
     )
 
 
@@ -938,38 +813,32 @@ def global_cum_sum(
     operator family (vwap/obv/vpt/adi/cumulative_returns) WITHOUT the
     single-task window Spark plans for an unbounded-preceding global frame.
 
-    Same scheme as :func:`global_row_number`, with per-bucket SUMS in the
-    prefix-sum instead of counts — and all ``cols`` share one bucketing,
-    one skinny aggregate, one broadcast, one per-bucket window stage.
-    Null handling matches ``F.sum`` over a running frame: nulls contribute
-    nothing, and rows before the first non-null still get NULL only when
-    the running frame holds no values — here the bucket offset makes every
-    later bucket non-null once any earlier value exists, which is exactly
-    the unpartitioned-window semantics for sum (sum over empty+null frame
-    = NULL, else nulls skipped).
+    Same scheme as the global :func:`grouped_row_number`, with per-bucket
+    SUMS in the prefix-sum instead of counts — and all ``cols`` share one
+    bucketing, one skinny aggregate, one broadcast, one per-bucket window
+    stage.  Null handling matches ``F.sum`` over a running frame: nulls
+    contribute nothing, and rows before the first non-null still get NULL
+    only when the running frame holds no values — here the bucket offset
+    makes every later bucket non-null once any earlier value exists,
+    which is exactly the unpartitioned-window semantics for sum (sum over
+    empty+null frame = NULL, else nulls skipped).
     """
     bucketed = _with_bucket(df, order_cols, buckets, bucket_by, bounds)
-    sums = bucketed.groupBy("_bucket").agg(
-        *[F.sum(c).alias(f"_s_{c}") for c in cols]
-    )
-    woff = Window.orderBy("_bucket").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = sums.select(
-        "_bucket",
-        *[F.sum(f"_s_{c}").over(woff).alias(f"_off_{c}") for c in cols],
+    out = _with_bucket_offsets(
+        bucketed, (), {f"_off_{c}": F.sum(c) for c in cols}
     )
     win = (
         Window.partitionBy("_bucket")
         .orderBy(*[F.col(c) for c in order_cols])
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    out = bucketed.join(F.broadcast(offsets), "_bucket")
     # zero literal in the offset column's own sum dtype (long for integer
     # inputs, double for floats) so the output matches the global-window
     # F.sum result type instead of silently widening ints to double
-    off_types = {f.name: f.dataType for f in offsets.schema.fields}
+    schema = out.schema
     for c in cols:
         local = F.sum(c).over(win)
-        zero = F.lit(0).cast(off_types[f"_off_{c}"])
+        zero = F.lit(0).cast(schema[f"_off_{c}"].dataType)
         # NULL offset (no earlier values) + NULL local = NULL, matching the
         # global-window result; otherwise treat the missing side as 0.
         total = F.when(
@@ -1187,11 +1056,8 @@ def weighted_quantiles(
 #: table answers every rank with the driver walk — replacing every
 #: further histogram round and the in-Spark residue (whose agg →
 #: global-window chain runs three sequential AQE stages).  1M pairs
-#: ≈ 24 MB through Arrow.  Env-overridable for tight-driver hosts
-#: (0 disables).
-DRIVER_TABLE_MAX_ROWS = int(
-    os.environ.get("SPARK_GRAFT_DRIVER_TABLE_ROWS", str(1 << 20))
-)
+#: ≈ 24 MB through Arrow.  0 disables.
+DRIVER_TABLE_MAX_ROWS = 1 << 20
 
 #: Speculative pre-stats gate: optimizer size estimate below which the
 #: engine tries the value-table collect BEFORE its stats pass, saving
@@ -1201,9 +1067,7 @@ DRIVER_TABLE_MAX_ROWS = int(
 #: engine never speculates (the stats-then-refine flow is untouched
 #: there).  The gate changes cost only: every path feeds the same
 #: stats and the same driver walk.
-SPECULATIVE_TABLE_MAX_BYTES = int(
-    os.environ.get("SPARK_GRAFT_SPECULATIVE_BYTES", str(64 << 20))
-)
+SPECULATIVE_TABLE_MAX_BYTES = 64 << 20
 
 _NAN = float("nan")
 _NO_ROWS = (np.empty(0), np.empty(0, dtype="int64"), 0, None)

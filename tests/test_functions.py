@@ -1130,6 +1130,7 @@ def test_tfidf_saturated_probe_falls_back_to_agg_dispatch(
     (ADVICE r13: don't pull 8M rows to the driver just to dispatch),
     the two-long agg must take over and reach the SAME decision + the
     same results on both the dense-accept and sparse-reject branches."""
+    from indicators_spark.functions import similarity
     from indicators_spark.functions.similarity import tfidf_cosine_pairs
     from indicators_spark.sources.prices import load_table
 
@@ -1138,7 +1139,7 @@ def test_tfidf_saturated_probe_falls_back_to_agg_dispatch(
         (r["ia"], r["ib"]): r["cos"]
         for r in tfidf_cosine_pairs(docs, threshold=0.3).collect()
     }
-    monkeypatch.setenv("SPARK_GRAFT_TFIDF_PROBE_CELLS", "10")
+    monkeypatch.setattr(similarity, "TFIDF_PROBE_CELLS", 10)
     # probe saturates at 11 rows -> agg dispatch; corpus is dense-eligible
     # -> re-fold + GEMM, same pairs
     dense = {

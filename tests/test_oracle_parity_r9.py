@@ -215,9 +215,9 @@ def test_bpe_apply_merges_roundtrip(spark):
         for r in bpe_apply_merges(df, merges).collect()
     }
 
-    def encode(word: str) -> int:
+    def encode(word: str, table: list[str]) -> int:
         syms = list(word)
-        for pr in merges:
+        for pr in table:
             a, b = pr.split(" ")
             out, i = [], 0
             while i < len(syms):
@@ -230,8 +230,11 @@ def test_bpe_apply_merges_roundtrip(spark):
             syms = out
         return len(syms)
 
+    def encode_all(text: str, table: list[str]) -> int:
+        return sum(encode(w, table) for w in text.split(" "))
+
     for doc_id, text in [(1, "low low low lower lowest"), (2, "aaa baab")]:
-        want = sum(encode(w) for w in text.split(" "))
+        want = encode_all(text, merges)
         assert got[doc_id] == want, (doc_id, got[doc_id], want)
     assert got[3] is None
     # no merges → one token per character
@@ -240,27 +243,19 @@ def test_bpe_apply_merges_roundtrip(spark):
         for r in bpe_apply_merges(df, []).collect()
     }
     assert plain[2] == len("aaabaab")
-    # the Arrow rank-dict path (production merge-file sizes) is
-    # count-identical to the expression chain, incl. apostrophe symbols
+    # apostrophe symbols flow through the rank dict like any other
     apo = spark.createDataFrame(
         [(1, "don't don't do"), (2, None)], "doc_id long, text string"
     )
     am = [r["pair"] for r in bpe_learn_merges(apo, n_merges=4).collect()]
     assert any("'" in p for p in am)  # apostrophes really flow through
-    for frame, table in ((df, merges), (apo, am)):
-        chain = {
-            r["doc_id"]: r["bpe_tokens"]
-            for r in bpe_apply_merges(frame, table, method="chain").collect()
-        }
-        udf = {
-            r["doc_id"]: r["bpe_tokens"]
-            for r in bpe_apply_merges(frame, table, method="udf").collect()
-        }
-        assert chain == udf
+    got = {
+        r["doc_id"]: r["bpe_tokens"]
+        for r in bpe_apply_merges(apo, am).collect()
+    }
+    assert got == {1: encode_all("don't don't do", am), 2: None}
     with pytest.raises(ValueError):
         bpe_apply_merges(df, ["a b c"])
-    with pytest.raises(ValueError):
-        bpe_apply_merges(df, merges, method="nope")
 
 
 def test_ks_drift_null_routing(spark):

@@ -53,10 +53,8 @@ def test_psi_scans_only_needed_columns_and_shuffles_cells(spark):
 
 def test_bpe_encode_output_plan_is_map_only(spark):
     """The encoder's returned frame is a pure map stage: ZERO exchanges
-    however large the corpus.  The default arm (r11: the Arrow
-    rank-dict UDF, measured faster than the expression chain at every
-    table size) shows exactly one Arrow-batched python eval; the
-    row-at-a-time BatchEvalPython must never appear.  (The trainer's
+    however large the corpus.  The Arrow rank-dict UDF shows exactly
+    one Arrow-batched python eval; the row-at-a-time BatchEvalPython must never appear.  (The trainer's
     per-merge scans run eagerly at build time, driver-looped like
     kcenter/kmeans; this pins the plan every downstream consumer
     actually pays for per row.)"""
@@ -64,26 +62,6 @@ def test_bpe_encode_output_plan_is_map_only(spark):
     assert "Exchange" not in plan, plan
     assert "BatchEvalPython" not in plan, plan
     assert "ArrowEvalPython" in plan, plan
-
-
-def test_bpe_encode_chain_arm_plan_is_zero_python(spark):
-    """The opt-in chain arm keeps its zero-Python contract: scan +
-    filter + project with the merge replay inside codegen'd string
-    expressions — no exchange, no python eval of any kind."""
-    from indicators_spark.functions.text import bpe_apply_merges
-    from indicators_spark.sources.prices import load_table
-    from pyspark.sql import functions as F
-
-    docs = load_table(spark, SF_SMOKE, "documents").filter(
-        F.col("doc_id").isNotNull()
-    )
-    out = bpe_apply_merges(
-        docs, ["e s", "t h"], method="chain"
-    ).select("doc_id", "bpe_tokens")
-    plan = plan_string(out)
-    assert "Exchange" not in plan, plan
-    for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
-        assert marker not in plan, (marker, plan)
 
 
 def test_jaccard_prefix_plan_no_cartesian_no_text_shuffle(spark):

@@ -188,13 +188,14 @@ def test_global_row_number_any_buckets(spark, n, buckets):
     """Bucketed enumeration equals the window row_number for any series
     length and bucket count (including buckets > rows)."""
     from pyspark.sql import Window
-    from indicators_spark.scale import global_row_number
+    from indicators_spark.scale import grouped_row_number
 
     df = spark.range(n).select(
         F.col("id").alias("seq"), (F.col("id") * 7 % 13).alias("v")
     )
-    out = global_row_number(
-        df, order_cols=("seq",), buckets=buckets, bucket_by="seq", out="rn"
+    out = grouped_row_number(
+        df, (), order_cols=("seq",), buckets=buckets, bucket_by="seq",
+        out="rn",
     )
     ref = df.withColumn(
         "rn", F.row_number().over(Window.orderBy("seq")).cast("long")
@@ -350,16 +351,16 @@ def test_halo_rolling_matches_window_random(spark, values, buckets, n):
     the single-task global window bit-for-bit (including warm-up gates)."""
     from pyspark.sql import Window as W
 
-    from indicators_spark.scale import halo_rolling
+    from indicators_spark.scale import halo_rolling_multi
 
     rows = [(i, v) for i, v in enumerate(values)]
     df = (
         spark.createDataFrame(rows, "seq long, close double")
         .withColumn("timestamp", F.timestamp_seconds(F.col("seq")))
     )
-    out = halo_rolling(
-        df, "mean", "close", n, ("timestamp", "seq"), buckets=buckets,
-        bucket_by="seq", out="v",
+    out = halo_rolling_multi(
+        df, [("mean", "close", "v")], n, ("timestamp", "seq"),
+        buckets=buckets, bucket_by="seq",
     )
     w = W.orderBy("timestamp", "seq").rowsBetween(-(n - 1), 0)
     ref = df.withColumn(

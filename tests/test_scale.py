@@ -9,7 +9,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from indicators_spark import kernels as K
-from indicators_spark.scale import ewm_chunked, halo_rolling
+from indicators_spark.scale import ewm_chunked, halo_rolling_multi
 from indicators_spark.sources.prices import prices_from_events
 
 from conftest import SF_SMOKE
@@ -28,8 +28,8 @@ def prices(spark):
 @pytest.mark.parametrize("agg", ["mean", "sum", "min", "max", "std"])
 def test_halo_rolling_matches_global_window(spark, prices, agg):
     n = 14
-    scaled = halo_rolling(
-        prices, agg, "close", n, ("timestamp", "seq"), buckets=7, out="v"
+    scaled = halo_rolling_multi(
+        prices, [(agg, "close", "v")], n, ("timestamp", "seq"), buckets=7
     )
     w = K.w_rows(n, (), ("timestamp", "seq"))
     agg_fn = {"mean": F.avg, "sum": F.sum, "min": F.min, "max": F.max,
@@ -58,8 +58,8 @@ def test_ewm_chunked_matches_sequential(spark, prices):
 
 
 def test_halo_rolling_gate_warmup(spark, prices):
-    out = halo_rolling(
-        prices, "mean", "close", 20, ("timestamp", "seq"), buckets=5, out="v"
+    out = halo_rolling_multi(
+        prices, [("mean", "close", "v")], 20, ("timestamp", "seq"), buckets=5
     )
     head = out.orderBy("timestamp", "seq").select("v").limit(19).collect()
     assert all(r["v"] is None for r in head)
@@ -69,13 +69,13 @@ def test_halo_rolling_bucket_by_matches(spark, prices):
     """Arithmetic (sort-free) bucketing must equal the ntile path."""
     n = 14
     a = (
-        halo_rolling(prices, "mean", "close", n, ("timestamp", "seq"),
-                     buckets=7, out="v", bucket_by="seq")
+        halo_rolling_multi(prices, [("mean", "close", "v")], n,
+                           ("timestamp", "seq"), buckets=7, bucket_by="seq")
         .select("seq", "v").orderBy("seq").toPandas()
     )
     b = (
-        halo_rolling(prices, "mean", "close", n, ("timestamp", "seq"),
-                     buckets=7, out="v")
+        halo_rolling_multi(prices, [("mean", "close", "v")], n,
+                           ("timestamp", "seq"), buckets=7)
         .select("seq", "v").orderBy("seq").toPandas()
     )
     pd.testing.assert_frame_equal(a, b, rtol=1e-12, atol=1e-12)
@@ -158,11 +158,12 @@ def test_global_row_number_matches_window(spark, prices):
     """Bucketed enumeration must equal the single-task row_number window,
     and its plan must contain no SinglePartition exchange over the data
     (only the ≤buckets-row offset prefix-sum)."""
-    from indicators_spark.scale import global_row_number
+    from indicators_spark.scale import grouped_row_number
 
     p = prices.withColumn("_bkey", F.col("seq"))
-    out = global_row_number(
-        p, order_cols=("timestamp", "seq"), buckets=4, bucket_by="_bkey", out="rn"
+    out = grouped_row_number(
+        p, (), order_cols=("timestamp", "seq"), buckets=4, bucket_by="_bkey",
+        out="rn",
     )
     ref = prices.withColumn(
         "rn", F.row_number().over(Window.orderBy("timestamp", "seq")).cast("long")
@@ -281,9 +282,9 @@ def test_halo_rolling_exact_with_empty_buckets(spark):
         spark.createDataFrame(rows, "seq long, close double")
         .withColumn("timestamp", F.timestamp_seconds(F.col("seq")))
     )
-    out = halo_rolling(
-        df, "mean", "close", 5, ("timestamp", "seq"), buckets=8,
-        bucket_by="seq", out="v",
+    out = halo_rolling_multi(
+        df, [("mean", "close", "v")], 5, ("timestamp", "seq"), buckets=8,
+        bucket_by="seq",
     )
     ref = df.withColumn(
         "v",
@@ -336,13 +337,15 @@ def test_null_bucket_key_routes_first(spark):
     """A NULL bucket_by key must land in bucket 1 (the plain-window form
     sorts null order keys FIRST) — F.least alone would dump it in the LAST
     bucket and e.g. number it after every other row."""
-    from indicators_spark.scale import global_row_number
+    from indicators_spark.scale import grouped_row_number
 
     rows = [(None, None)] + [(i, float(i)) for i in range(1, 40)]
     df = spark.createDataFrame(rows, "seq long, close double").withColumn(
         "timestamp", F.timestamp_seconds(F.col("seq"))
     )
-    out = global_row_number(df, ("timestamp", "seq"), buckets=4, bucket_by="seq")
+    out = grouped_row_number(
+        df, (), ("timestamp", "seq"), buckets=4, bucket_by="seq"
+    )
     got = {r["seq"]: r["rn"] for r in out.collect()}
     assert got[None] == 1 and got[1] == 2 and got[39] == 40
 
@@ -361,9 +364,9 @@ def test_halo_precondition_violation_raises(spark):
     df = spark.createDataFrame(rows, "seq long, close double").withColumn(
         "timestamp", F.timestamp_seconds(F.col("seq"))
     )
-    out = halo_rolling(
-        df, "mean", "close", 10, ("timestamp", "seq"), buckets=3,
-        bucket_by="seq", out="v",
+    out = halo_rolling_multi(
+        df, [("mean", "close", "v")], 10, ("timestamp", "seq"), buckets=3,
+        bucket_by="seq",
     )
     with _pytest.raises(Exception, match="halo precondition"):
         out.collect()
@@ -376,9 +379,9 @@ def test_small_first_bucket_still_exact(spark):
     df = spark.createDataFrame(rows, "seq long, close double").withColumn(
         "timestamp", F.timestamp_seconds(F.col("seq"))
     )
-    out = halo_rolling(
-        df, "mean", "close", 5, ("timestamp", "seq"), buckets=3,
-        bucket_by="seq", out="v",
+    out = halo_rolling_multi(
+        df, [("mean", "close", "v")], 5, ("timestamp", "seq"), buckets=3,
+        bucket_by="seq",
     )
     ref = df.withColumn(
         "v",
@@ -418,12 +421,10 @@ def test_ewm_chunked_rejects_null_values(spark):
 def test_bounds_without_bucket_by_rejected(spark, prices):
     import pytest as _pytest
 
-    from indicators_spark.scale import halo_rolling
-
     with _pytest.raises(ValueError, match="bounds"):
-        halo_rolling(
-            prices, "mean", "close", 5, ("timestamp", "seq"), buckets=4,
-            out="v", bounds=(0.0, 1.0),
+        halo_rolling_multi(
+            prices, [("mean", "close", "v")], 5, ("timestamp", "seq"),
+            buckets=4, bounds=(0.0, 1.0),
         )
 
 
@@ -553,35 +554,59 @@ def test_grouped_row_number_null_group_rows_survive(spark):
 
 
 def test_halo_frame_combined_equals_composed(spark):
-    """halo_frame's shared-rank both-directions path (one full-data
-    window pass) must produce exactly the row multiset of composing
-    _halo_tail + _halo_head_rows — global and per-key."""
+    """halo_frame emits exactly the row multiset of a pure-Python model —
+    the last `back` rows of every (key, bucket) copied into the next
+    POPULATED bucket of the key, the first `fwd` rows into the previous
+    one — for tail+head, tail alone and head alone, global and per key.
+    Arithmetic bucket 3 of 4 is empty, so routing by presence (not
+    bucket±1) is exercised."""
+    from functools import reduce
+
     from pyspark.sql import functions as F
 
-    from indicators_spark.scale import (
-        _halo_head_rows,
-        _halo_tail,
-        _with_bucket,
-        halo_frame,
-    )
+    from indicators_spark.scale import _with_bucket, halo_frame
 
     rows = [
-        ("a" if i % 3 else "b", i, float(i * 7 % 23)) for i in range(240)
+        ("a" if i % 3 else "b", i, float(i * 7 % 23))
+        for i in [*range(120), *range(180, 240)]
     ]
     df = spark.createDataFrame(rows, "sym string, seq long, v double")
-    for parts in ((), ("sym",)):
-        bucketed = _with_bucket(df, ("seq",), 4, bucket_by="seq")
-        combined = halo_frame(bucketed, ("seq",), parts, back=9, fwd=5)
-        composed = _halo_tail(bucketed, ("seq",), parts, 9).unionByName(
-            _halo_head_rows(bucketed, ("seq",), parts, 5)
-        )
-        key = lambda d: sorted(
-            tuple(r)
-            for r in d.select(
-                "sym", "seq", "v", "_bucket", "_halo"
-            ).collect()
-        )
-        assert key(combined) == key(composed), parts
+    bucketed = _with_bucket(df, ("seq",), 4, bucket_by="seq")
+    cases = [
+        (parts, back, fwd)
+        for parts in ((), ("sym",))
+        for back, fwd in ((9, 5), (9, 0), (0, 5))
+    ]
+    got = reduce(
+        lambda x, y: x.unionByName(y),
+        [
+            halo_frame(bucketed, ("seq",), parts, back=back, fwd=fwd)
+            .select("sym", "seq", "v", "_bucket", "_halo")
+            .withColumn("_case", F.lit(i))
+            for i, (parts, back, fwd) in enumerate(cases)
+        ],
+    ).collect()
+
+    def model(parts, back, fwd):
+        # seq spans [0, 239]: bucket width 60, arithmetic bucket 3 empty
+        out = [(*r, r[1] // 60 + 1, False) for r in rows]
+        cells = {}
+        for r in sorted(out, key=lambda r: r[1]):
+            key = r[0] if parts else None
+            cells.setdefault(key, {}).setdefault(r[3], []).append(r)
+        for by_bucket in cells.values():
+            order = sorted(by_bucket)
+            for j, b in enumerate(order):
+                cell = by_bucket[b]
+                if back and j + 1 < len(order):
+                    out += [(*r[:3], order[j + 1], True) for r in cell[-back:]]
+                if fwd and j > 0:
+                    out += [(*r[:3], order[j - 1], True) for r in cell[:fwd]]
+        return sorted(out)
+
+    for i, case in enumerate(cases):
+        mine = sorted(tuple(r)[:5] for r in got if r["_case"] == i)
+        assert mine == model(*case), case
 
 
 def test_halo_frame_combined_single_rank_pass(spark):
